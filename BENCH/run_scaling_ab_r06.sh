@@ -1,10 +1,11 @@
 #!/bin/bash
-# Round-6 aligned-vs-legacy scaling A/B (BENCH/BASELINE.md §2): same boot,
-# same per-core-heap protocol (see lib_scaling_leg.sh), alternating the
-# single-shuffle aligned-commit path with the legacy per-commit-shuffle
-# path so host drift hits both arms equally. A pure-CPU (no-shuffle)
-# control pair leads every iteration — the boot's scaling ceiling,
-# measured beside the data. Appends to OUT (accumulating campaign file).
+# Round-6 scaling campaign (BENCH/BASELINE.md §2): same boot, same
+# per-core-heap protocol (see lib_scaling_leg.sh), alternating a pure-CPU
+# (no-shuffle) control pair with the single-shuffle engine pair so host
+# drift hits both equally — the control is the boot's scaling ceiling,
+# measured beside the data. The round-6 legacy per-commit-shuffle arm is
+# gone from the engine; its recorded results stay in BASELINE.md.
+# Appends to OUT (accumulating campaign file).
 #
 # Usage: run_scaling_ab_r06.sh [iterations] [out.jsonl]
 set -u
@@ -19,6 +20,5 @@ source "$(dirname "$0")/lib_scaling_leg.sh"
 for i in $(seq 1 "$ITERS"); do
   pair "$i" narrow  SPARK_GRAFT_MODE=narrow
   pair "$i" aligned
-  pair "$i" legacy  SPARK_GRAFT_ALIGNED=0
 done
 echo "AB CAMPAIGN DONE $(date +%s)" >> "$OUT"

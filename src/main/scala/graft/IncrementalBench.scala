@@ -6,12 +6,10 @@ import graft.cdc.{CdcEngine, ChangeLogGen, GenConfig}
   * merge-on-read design: bulk-load a large table, then apply small epochs
   * (a fixed number of sessions each) and report per-epoch seconds and WRITE
   * AMPLIFICATION (transfer rows physically written per epoch ÷ sessions
-  * touched). Runs the same workload in both transfer-commit modes:
+  * touched). Runs the same workload in two compaction modes:
   *
-  *  - mor: merge-on-read deltas (current default) — amplification ≈ 1;
-  *  - cow: legacy copy-on-write — every touched bucket is rewritten, so
-  *    amplification ≈ (table sessions ÷ touched sessions) ÷ buckets-fraction,
-  *    i.e. it grows with the table while the batch stays fixed.
+  *  - mor: merge-on-read deltas, compacted inline — amplification ≈ 1;
+  *  - async: the same deltas, compaction deferred to `maintain()` epochs.
   *
   * Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_CDC_CONV (table sessions),
   * SPARK_GRAFT_BATCH (sessions per incremental epoch), SPARK_GRAFT_BATCHES.
@@ -37,15 +35,15 @@ object IncrementalBench {
     def repoName(i: Long) = f"repo-$i%010d"
     val bulkLo = repoName(batches * batchSessions)
 
-    // modes: (label, merge-on-read?, compact inline?) — "async" runs the
-    // same MOR workload but defers compaction to maintain() between epochs,
-    // so ingest epochs never pay the rewrite (worst ≈ median); the rewrite
-    // cost moves to separately-timed maintenance commits.
-    val modes = Seq(("mor", true, true), ("cow", false, true), ("async", true, false))
-    val results = modes.map { case (mode, mor, inline) =>
+    // modes: (label, compact inline?) — "async" defers compaction to
+    // maintain() between epochs, so ingest epochs never pay the rewrite
+    // (worst ≈ median); the rewrite cost moves to separately-timed
+    // maintenance commits.
+    val modes = Seq(("mor", true), ("async", false))
+    val results = modes.map { case (mode, inline) =>
       val wh = java.nio.file.Files.createTempDirectory(s"inc-$mode").toString
       val eng = new CdcEngine(wh, numBuckets = 64, cutoffMicros = 14 * day,
-        morTransfers = mor, inlineCompaction = inline)
+        inlineCompaction = inline)
       val bulkSec = Bench.timed(
         eng.applyEpoch(spark, log.filter(_.repo >= bulkLo), 0L))
       val maintSecs = scala.collection.mutable.ArrayBuffer.empty[Double]

@@ -102,9 +102,7 @@ object ScalingBench {
             .createTempDirectory(java.nio.file.Paths.get(base), s"scale-$cpus")
           case None => java.nio.file.Files.createTempDirectory(s"scale-$cpus")
         }
-        // SPARK_GRAFT_ALIGNED=0: legacy per-commit-shuffle A/B leg
-        val eng = new CdcEngine(wh.toString, numBuckets = 32, cutoffMicros = 14 * day,
-          alignedCommits = !sys.env.get("SPARK_GRAFT_ALIGNED").contains("0"))
+        val eng = new CdcEngine(wh.toString, numBuckets = 32, cutoffMicros = 14 * day)
         // pipelined epochs by default; SPARK_GRAFT_PIPELINE=0 = sequential A/B
         val aMark = drained()
         val sec = Bench.timed(

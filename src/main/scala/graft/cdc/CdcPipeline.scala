@@ -69,39 +69,6 @@ object CdcPipeline {
       }
   }
 
-  /** Variant of `classify` for redelivery-heavy / mega-session streams: the
-    * dedup-by-(repo, commit) step runs as a HASH AGGREGATE with map-side
-    * partial combine BEFORE the sessionize shuffle, so (a) redelivered
-    * copies collapse on the map side and never cross the wire, and (b) a
-    * pathological mega-session's dedup work spreads over the whole
-    * (repo, commit) hash space instead of landing on one straggler task
-    * (dedup-by-commit is associative — first-seen = min (offset, epoch) —
-    * which is what makes the partial combine legal). The sessionize fold
-    * (the sequential state machine) still receives each session whole; that
-    * second shuffle now carries deduped rows only. Two shuffles instead of
-    * one: wins when the duplicate ratio or per-session fan-in is high,
-    * loses on clean streams — `classify` stays the default path.
-    * Output is identical to `classify` except `duplicatesDropped` (dupes
-    * collapse before the fold can count them; the counter is excluded from
-    * row_sha256 for exactly this kind of batching dependence).
-    */
-  def classifyPreDedup(events: Dataset[ChangeEvent],
-                       cutoffMicros: Long): Dataset[TransferRecord] = {
-    import events.sparkSession.implicits._
-    val deduped = events.toDF()
-      .groupBy(col("repo"), col("commit"))
-      .agg(min_by(
-        struct(col("content"), col("offset"), col("tsMicros"), col("epoch")),
-        struct(col("offset"), col("epoch"))).as("e"))
-      .select(col("repo"), col("commit"), col("e.content").as("content"),
-        col("e.offset").as("offset"), col("e.tsMicros").as("tsMicros"),
-        col("e.epoch").as("epoch"))
-      .as[SlimEvent]
-    deduped.groupByKey(_.repo).flatMapGroups { (repo, it) =>
-      classifyGroup(repo, it, cutoffMicros).iterator
-    }
-  }
-
   /** Lift raw change events into the apply fold's row type (no pre-parsed
     * message — the fold parses them once, on first apply).
     */
@@ -209,8 +176,9 @@ object CdcPipeline {
 
   /** One output row of the fused epoch fold: either a classified transfer or
     * a fresh (first-seen this epoch) state event — both emitted from the
-    * SAME groupByKey pass so an epoch apply has exactly one shuffle. Fresh
-    * events carry their parsed message for the state sink (see ApplyEvent).
+    * SAME bucket-keyed fold pass (`foldPartition`) so an epoch apply has
+    * exactly one shuffle. Fresh events carry their parsed message for the
+    * state sink (see ApplyEvent).
     */
   final case class ApplyOut(transfer: Option[TransferRecord], event: Option[ApplyEvent])
 
@@ -309,7 +277,7 @@ object CdcPipeline {
     df.withColumn("row_sha256", sha2(to_json(struct(dataCols: _*)), 256))
   }
 
-  /** Exact bucket→partition placement for the aligned fold shuffle.
+  /** Exact bucket→partition placement for the epoch fold shuffle.
     * `repartition(n, bucketCol)` murmur3-hashes the bucket VALUE into n
     * slots — balls-in-bins leaves ~1/e of the partitions empty and stacks
     * 2–4 buckets on others, a straggler tail the parallel leg pays
@@ -333,13 +301,12 @@ object CdcPipeline {
     scala.collection.immutable.ArraySeq.unsafeWrapArray(found.map(_.intValue))
   }
 
-  /** Partition-local fold for the aligned (single-shuffle) epoch path: the
-    * input iterator is sorted by repo (sortWithinPartitions), so each
-    * session is one consecutive run — buffer a run, hand it to the same
-    * `applyGroup` the groupByKey path uses. Memory bound = one session's
-    * events, exactly like MapGroupsExec's per-group iterator (applyGroup
-    * hash-buffers the group either way). Output rows stay in their input
-    * partition, which is what lets the commits skip their own shuffles.
+  /** Partition-local epoch fold: the input is shuffled by table bucket and
+    * sorted by repo (sortWithinPartitions), so each session is one
+    * consecutive run — buffer a run and hand it to `applyGroup`. Memory
+    * bound = one session's events (applyGroup hash-buffers the session
+    * anyway). Output rows stay in their input partition, which is what lets
+    * the commits skip their own shuffles.
     */
   def foldPartition(events: Iterator[ApplyEvent], cutoffMicros: Long,
                     currentEpoch: Long, keepParsed: Boolean): Iterator[ApplyOut] =
@@ -373,6 +340,12 @@ object CdcPipeline {
   * re-folds only the batch's own sessions (semi-join), and both commits
   * write O(batch) data, so per-epoch cost scales with the batch, not the
   * table — the property that keeps this viable at 10^10 events.
+  * Single-shuffle epochs: the sessionize fold shuffles by the TABLE BUCKET
+  * key (bucket = f(repo), so sessions still arrive whole), and every commit
+  * consumes the cached fold output's physical partitioning as-is — one wide
+  * exchange per epoch, ~one file per touched bucket per sink. Fold
+  * parallelism therefore equals the bucket count, so size `numBuckets` ≥
+  * the cluster's cores (`rebucket` grows it).
   * Exactly-once: both commits are keyed by the epoch number; a re-run
   * of an already-committed epoch is a no-op, and replay from any checkpoint
   * reproduces identical table state (verified via row_sha256 equality).
@@ -381,10 +354,6 @@ final class CdcEngine(
     val warehouse: String,
     val numBuckets: Int,
     val cutoffMicros: Long,
-    /** false = legacy copy-on-write transfers commits (kept for A/B
-      * benchmarking of the write-amplification fix; see IncrementalBench).
-      */
-    val morTransfers: Boolean = true,
     /** Reporting window of this run — when set, every commit manifest carries
       * `start-datetime`/`end-datetime` exactly like the reference stamps
       * every output file (`pipeline/spine_runner.py:39-47`, asserted in
@@ -464,20 +433,6 @@ final class CdcEngine(
       * of only the compacted winners. 0 = compact everything eligible.
       */
     val changeRetention: Int = 0,
-    /** Single-shuffle epochs (default ON): the sessionize fold shuffles by
-      * the TABLE BUCKET key (bucket = f(repo), so sessions still arrive
-      * whole) instead of by raw repo, and every commit then consumes the
-      * cached fold output's physical partitioning as-is — the state,
-      * transfers and enriched writes stop paying a repartition shuffle
-      * each. One wide exchange per epoch total, ~one file per touched
-      * bucket per sink. The legacy per-commit-shuffle path stays for A/B
-      * (classification output is bit-identical — the fold is
-      * order-insensitive, ScalaCheck-pinned by IdempotenceProps).
-      * Parallelism of the fold equals the bucket count under this mode, so
-      * size `numBuckets` ≥ the cluster's cores (the bucket count is already
-      * the scale lever for touched-fraction pruning; `rebucket` grows it).
-      */
-    val alignedCommits: Boolean = true,
 ) {
   /** The dim in force for subsequent epoch enrichment — the constructor
     * `dim` (seed) overlaid with every committed `applyDimUpdate` delta.
@@ -554,14 +509,14 @@ final class CdcEngine(
     compactThreshold = compactThreshold, changeRetention = changeRetention)
   // merge-on-read: per-epoch deltas + read-time last-writer-wins + bounded
   // compaction — a hot bucket touched every epoch costs O(its upserts), not
-  // O(the whole bucket rewritten) (the COW write-amplification fix)
+  // O(the whole bucket rewritten)
   val transfers = new LakeTable(s"$warehouse/transfers", numBuckets,
-    keyColumns = Seq("repo"), mergeOnRead = morTransfers,
+    keyColumns = Seq("repo"), mergeOnRead = true,
     compactThreshold = compactThreshold, changeRetention = changeRetention)
   /** The enriched-output table — only when a `dim` is supplied. */
   val enriched: Option[LakeTable] = dim.map(_ =>
     new LakeTable(s"$warehouse/enriched", numBuckets,
-      keyColumns = Seq("repo"), mergeOnRead = morTransfers,
+      keyColumns = Seq("repo"), mergeOnRead = true,
       compactThreshold = compactThreshold, changeRetention = changeRetention))
   /** The dim-update change log — its OWN manifest chain, so dim versions
     * never share the ingest epoch number space. Each `applyDimUpdate`
@@ -615,17 +570,6 @@ final class CdcEngine(
     dimInited = true
   }
 
-  /** Apply one epoch of change events. Returns the transfers-table manifest.
-    *
-    * Per-epoch cost is O(batch + batch sessions' history): prior state is
-    * bucket-pruned, then SEMI-JOINED to the batch's repos, so only sessions
-    * the batch actually touches flow through the single `groupByKey(repo)`
-    * fold, which emits both the classified transfers AND the fresh state
-    * events (CdcPipeline.applyGroup). Both sinks are O(batch) writes —
-    * appendNew for state, mergeDelta (merge-on-read) for transfers — so
-    * bucket-mate sessions untouched by the batch are neither re-read,
-    * re-classified, nor re-written.
-    */
   /** Exactly-once fast path + collision pre-flight, shared by `applyEpoch`
     * and `applyEpochs`.
     *
@@ -697,6 +641,17 @@ final class CdcEngine(
     None
   }
 
+  /** Apply one epoch of change events. Returns the transfers-table manifest.
+    *
+    * Per-epoch cost is O(batch + batch sessions' history): prior state is
+    * bucket-pruned, then SEMI-JOINED to the batch's repos when it dwarfs the
+    * batch, so at steady state only sessions the batch actually touches flow
+    * through the single bucket-keyed fold (CdcPipeline.foldPartition), which
+    * emits both the classified transfers AND the fresh state events. Both
+    * sinks are O(batch) writes — appendNew for state, mergeDelta
+    * (merge-on-read) for transfers — so bucket-mate sessions untouched by
+    * the batch are neither re-classified nor re-written.
+    */
   def applyEpoch(spark: SparkSession, rawEvents: Dataset[ChangeEvent], epoch: Long): Manifest = {
     preflight(epoch) match {
       case Some(t) => return t
@@ -881,17 +836,13 @@ final class CdcEngine(
       .getOrElse(0L) +
       pendingFresh.map(_.eventStats.collect {
         case (b, s) if touched(b) => s.rows }.sum).getOrElse(0L)
-    // Gate factor 4.0 — re-validated by an r7 A/B (ApplyProfile, 4 epochs ×
-    // ~112k events, sessions mostly epoch-disjoint): forcing the semi-join
-    // at prior ≈ batch (factor 1) DID cut fold-shuffle bytes ~2.5× (prior
-    // content stops crossing the exchange) but cost more wall at every
-    // epoch (4.3/2.9/2.9 s → 6.2/4.3/6.0 s) — the distinct-repos build +
-    // join passes outweigh shipping prior rows to the cheap pre-parse
-    // emit-on-change exit at this batch size. Env-tunable for cluster
-    // shapes where shuffle bytes, not passes, are the wall
-    // (`SPARK_GRAFT_SEMIJOIN_FACTOR`).
-    val semiJoinFactor = sys.env.get("SPARK_GRAFT_SEMIJOIN_FACTOR")
-      .flatMap(v => scala.util.Try(v.toDouble).toOption).getOrElse(4.0)
+    // Factor 4.0: forcing the semi-join at prior ≈ batch cuts fold-shuffle
+    // bytes ~2.5× but costs more wall per epoch (ApplyProfile, 4 epochs ×
+    // ~112k events: 4.3/2.9/2.9 s → 6.2/4.3/6.0 s, OPTIMIZATION_r07.md §9)
+    // — the distinct-repos build + join passes outweigh shipping prior rows
+    // to the fold's cheap emit-on-change exit until prior is several times
+    // the batch.
+    val semiJoinFactor = 4.0
     val semiJoinWins = priorTouchedRows > semiJoinFactor * math.max(batchRows, 1L)
     // Prior-state events are folded but never RE-persisted (only fresh,
     // current-epoch events reach the state sink) — path/lang/op are null
@@ -919,32 +870,19 @@ final class CdcEngine(
     // cached: Datasets do NOT reuse shuffle files across separate actions,
     // so without the cache each sink re-runs the union+shuffle+fold
     // (measured 2.3× slower than materializing the fold output once)
-    // Aligned mode: ONE exchange per epoch. Shuffle by the table bucket key
-    // (sessions stay whole — bucket = f(repo)), sort-within by repo, fold
-    // consecutive runs. Every commit then inherits this physical
-    // partitioning through the cache (all projections in between are
-    // narrow) and writes with no repartition of its own. groupByKey's
-    // MapGroupsExec sorts by key anyway, so the sort is not new cost —
-    // only the per-commit shuffles go away.
-    val folded =
-      if (alignedCommits) {
-        // exact 1:1 bucket→partition placement (see partitionProbes): the
-        // shuffle key is a function of the bucket, which is a function of
-        // repo — sessions still arrive whole
-        val nb = state.currentNumBuckets
-        priorEvents.union(newApply).toDF()
-          .repartition(nb, element_at(
-            typedLit(CdcPipeline.partitionProbes(nb)), state.bucketCol + lit(1)))
-          .sortWithinPartitions("repo")
-          .as[ApplyEvent]
-          .mapPartitions(it => CdcPipeline.foldPartition(it, cutoff, epoch, keepParsed))
-      }
-      else
-        priorEvents.union(newApply)
-          .groupByKey(_.repo)
-          .flatMapGroups { (repo, it) =>
-            CdcPipeline.applyGroup(repo, it, cutoff, epoch, keepParsed)
-          }
+    // ONE exchange per epoch: shuffle by the table bucket key (sessions stay
+    // whole — bucket = f(repo)), sort-within by repo, fold consecutive runs.
+    // Every commit then inherits this physical partitioning through the
+    // cache (all projections in between are narrow) and writes with no
+    // repartition of its own. Placement is exactly 1:1 bucket→partition
+    // (see partitionProbes).
+    val nb = state.currentNumBuckets
+    val folded = priorEvents.union(newApply).toDF()
+      .repartition(nb, element_at(
+        typedLit(CdcPipeline.partitionProbes(nb)), state.bucketCol + lit(1)))
+      .sortWithinPartitions("repo")
+      .as[ApplyEvent]
+      .mapPartitions(it => CdcPipeline.foldPartition(it, cutoff, epoch, keepParsed))
     // cached COLUMNAR (DataFrame of two top-level structs), and the sink
     // projections below stay columnar too: InMemoryRelation prunes whole
     // top-level columns, so the transfers commit never reads the cached
@@ -1089,21 +1027,17 @@ final class CdcEngine(
       state.appendNew(f.freshEvents, epoch, metadata = f.meta, lineage = f.lineage,
         touchedBuckets = Some(f.touched), assumeNew = true,
         precomputedStats = Some(f.eventStats), compactInline = inlineCompaction,
-        alignedInput = alignedCommits)
+        alignedInput = true)
     }
     val transfersF = Future {
       desc("transfers commit (mergeDelta)")
-      if (morTransfers)
-        transfers.mergeDelta(f.upserts, epoch,
-          metadata = f.meta, lineage = f.tLineage, touchedBuckets = Some(f.touched),
-          precomputedStats = if (sameBucketing) Some(f.transferStats) else None,
-          compactInline = inlineCompaction,
-          // the fold shuffled by STATE's bucket key — transfers can consume
-          // that partitioning only while the two tables bucket identically
-          alignedInput = alignedCommits && sameBucketing)
-      else
-        transfers.merge(f.upserts, epoch,
-          metadata = f.meta, lineage = f.tLineage, touchedBuckets = Some(f.touched))
+      transfers.mergeDelta(f.upserts, epoch,
+        metadata = f.meta, lineage = f.tLineage, touchedBuckets = Some(f.touched),
+        precomputedStats = if (sameBucketing) Some(f.transferStats) else None,
+        compactInline = inlineCompaction,
+        // the fold shuffled by STATE's bucket key — transfers can consume
+        // that partitioning only while the two tables bucket identically
+        alignedInput = sameBucketing)
     }
     val enrichedF = enriched.map { tbl =>
       Future {
@@ -1140,7 +1074,7 @@ final class CdcEngine(
               compactInline = inlineCompaction,
               // enrich is broadcast-join-only over the upserts, so the
               // fold's partitioning survives to this write too
-              alignedInput = alignedCommits && sameB)
+              alignedInput = sameB)
           case Some((c, n)) =>
             // retro rows change the per-bucket row set — stats/touched are
             // recomputed by the commit
@@ -1415,8 +1349,8 @@ final class CdcEngine(
     enriched.foreach(_.compact(spark, epoch))
   }
 
-  /** Replay the full change log from scratch into a fresh warehouse dir and
-    * return that engine — used to assert byte-identical final state.
+  /** Resolved snapshot of the incrementally-maintained transfers table
+    * (last-writer-wins per repo, internal bucket column hidden).
     */
   def currentTransfers(spark: SparkSession): DataFrame =
     LakeTable.readSnapshot(transfers, spark)

@@ -60,7 +60,7 @@ final case class Manifest(
     files: Seq[FileEntry],   // the COMPLETE live set (snapshot-style)
     metadata: Map[String, String],
     lineage: Map[String, Long], // e.g. minOffset/maxOffset/upsertRows/totalRows
-    /** What produced this epoch: "write" (merge/mergeDelta/appendNew),
+    /** What produced this epoch: "write" (mergeDelta/appendNew),
       * "compact", or "rebucket". Epoch ids are one shared number space per
       * table, so the skip-if-present guards use this to turn an id
       * COLLISION (an ingest epoch reusing a maintenance id, or vice versa)
@@ -70,17 +70,17 @@ final case class Manifest(
     kind: String = "write",
 )
 
-/** A key-bucketed, copy-on-write, MERGE-upsert lake table over plain Parquet
-  * + JSON manifests.
+/** A key-bucketed lake table over plain Parquet + JSON manifests, with two
+  * write paths: merge-on-read upserts (`mergeDelta`) and insert-ignore
+  * appends (`appendNew`).
   *
   * Scale design (the part that must survive 100 TB / 1000 executors):
   *  - data is hash-bucketed on the merge key into `numBuckets` buckets
-  *    (thousands on a real cluster); a MERGE only reads and rewrites the
-  *    buckets its upsert batch touches — commit cost is O(touched data),
-  *    not O(table);
-  *  - the single merge shuffle is `repartition(numBuckets, bucketCol)`, and
-  *    hot merge keys are pre-salted by the caller where state permits
-  *    (SURVEY.md §4 skew row);
+  *    (thousands on a real cluster); a commit writes only the rows of the
+  *    buckets its batch touches — commit cost is O(batch), not O(table);
+  *  - the commit shuffle is `repartition(touched buckets, bucketCol, salt)`
+  *    (skipped when the caller's input is already bucket-partitioned), so
+  *    a hot bucket spreads over several tasks (SURVEY.md §4 skew row);
   *  - readers prune by bucket (and by manifest row counts) without listing
   *    the filesystem: the manifest is the only metadata round-trip;
   *  - schema evolution: each manifest carries a schemaId + schema JSON;
@@ -104,11 +104,9 @@ final class LakeTable(
       * per-epoch delta file per touched bucket) instead of copy-on-writing
       * the whole bucket; `snapshot` resolves last-writer-wins per key by the
       * per-row `__epoch` stamp, restricted to buckets that actually hold
-      * more than one live file. Kills the COW write amplification: commit
-      * cost is O(upserts), read cost is bounded by `compactThreshold`
-      * (over-threshold buckets are compacted back to one file inside the
-      * committing job). COW `merge` commits may interleave freely — they
-      * physically resolve the buckets they rewrite.
+      * more than one live file. Commit cost is O(upserts), read cost is
+      * bounded by `compactThreshold` (over-threshold buckets are compacted
+      * back to one resolved file set inside the committing job).
       */
     val mergeOnRead: Boolean = false,
     /** Max live files per bucket before a commit compacts that bucket. The
@@ -463,99 +461,6 @@ final class LakeTable(
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** MERGE upsert: rows of `upserts` replace existing rows with the same
-    * key. REQUIRES one row per key in `upserts` (the classify fold emits
-    * exactly that) — which lets the merge be an anti-join (existing keys not
-    * replaced) + union instead of a window row_number, saving a sort and a
-    * shuffle per commit. Copy-on-write per touched bucket. Idempotent per
-    * epoch.
-    */
-  def merge(upserts: DataFrame, epoch: Long,
-            metadata: Map[String, String] = Map.empty,
-            lineage: Map[String, Long] = Map.empty,
-            /** Buckets the batch touches, when the caller already knows
-              * (saves one collect job per merge).
-              */
-            touchedBuckets: Option[Set[Int]] = None): Manifest = {
-    if (Files.exists(manifestPath(epoch)))
-      return committedAs(epoch, "write") // exactly-once: epoch already committed
-
-    val spark = upserts.sparkSession
-    val parent = latestManifest()
-    require(parent.forall(_.epoch < epoch), s"epoch $epoch not after ${parent.map(_.epoch)}")
-
-    val (mergedSchema, schemaId) = evolveSchema(parent, upserts.schema)
-    def conform(df: DataFrame): DataFrame = conformTo(mergedSchema)(df)
-
-    val withBucket = conform(upserts).withColumn("__bucket", bucketCol)
-    // buckets touched by this batch — tiny collect (≤ numBuckets ints)
-    val touched = touchedBuckets.getOrElse(
-      withBucket.select("__bucket").distinct()
-        .collect().map(_.getInt(0)).toSet)
-
-    val oldLive = parent.map(_.files).getOrElse(Seq.empty)
-    val (rewritten, carried) = oldLive.partition(f => touched.contains(f.bucket))
-
-    val epochDirRel = f"data/e$epoch%012d"
-    val result: Map[Int, BucketStats] = if (touched.nonEmpty) {
-      val existingKept =
-        if (rewritten.isEmpty) None
-        else {
-          val parentSchema =
-            DataType.fromJson(parent.get.schemaJson).asInstanceOf[StructType]
-          // merge-on-read buckets may hold several VERSIONS per key — they
-          // must be resolved before carrying, or the rewrite would persist
-          // every version under one epoch stamp and snapshots would pick a
-          // winner arbitrarily. Carried rows KEEP their original epoch so
-          // changesSince never re-reports an unchanged row after a rewrite.
-          val withEpochSchema =
-            parentSchema.add(StructField("__epoch", LongType, nullable = true))
-          val raw = readEntries(spark, rewritten, withEpochSchema)
-          val existing = if (mergeOnRead) resolveLatest(raw) else raw
-          Some(existing
-            .select((mergedSchema.fields.toIndexedSeq.map(f =>
-              if (existing.columns.contains(f.name)) col(f.name)
-              else lit(null).cast(f.dataType).as(f.name)) :+ col("__epoch")): _*)
-            .withColumn("__bucket", bucketCol)
-            // existing rows whose key is replaced by this batch drop out
-            .join(withBucket.select(keyColumns.map(col): _*), keyColumns, "left_anti"))
-        }
-      // upserts carry THIS epoch's stamp (legacy pre-stamp files read null
-      // and keep null — they predate incremental reads anyway)
-      val stamped = withBucket.withColumn("__epoch", lit(epoch))
-      val mergedRows = existingKept.fold(stamped)(_.unionByName(stamped))
-        // merge shuffle is SALTED: a hot bucket (mega-key skew) spreads over
-        // `saltFactor` tasks, each writing its own file into the bucket dir
-        .repartition(math.min(parent.map(_.numBuckets).getOrElse(numBuckets), touched.size) * saltFactor,
-          col("__bucket"), saltCol)
-        .sortWithinPartitions((col("__bucket") +: keyColumns.map(col)): _*)
-      mergedRows.write.mode(SaveMode.Overwrite)
-        .option("compression", LakeTable.compression)
-        .partitionBy("__bucket")
-        .parquet(s"$root/$epochDirRel")
-      // per-bucket stats for the manifest: recomputed from the SAME
-      // deterministic plan (callers cache the expensive upstream), which is
-      // cheaper than re-reading the just-written files
-      bucketStatsOf(mergedRows)
-    } else Map.empty
-
-    val newFiles = entriesFor(epochDirRel, epoch, result)
-    val files = (carried ++ newFiles).sortBy(_.bucket)
-    val manifest = Manifest(
-      epoch = epoch,
-      parentEpoch = parent.map(_.epoch).getOrElse(-1L),
-      schemaId = schemaId,
-      schemaJson = mergedSchema.json,
-      keyColumns = keyColumns,
-      numBuckets = parent.map(_.numBuckets).getOrElse(numBuckets),
-      files = files,
-      metadata = metadata,
-      lineage = lineage ++ Map("totalRows" -> files.map(_.rows).sum),
-    )
-    writeManifestAtomically(manifest)
-    manifest
-  }
-
   /** Schema evolution: merged = parent schema ∪ upsert schema (by name);
     * new columns land nullable, schemaId bumps iff the schema changed. A
     * name shared with the table must keep the table's type: an upsert
@@ -620,17 +525,19 @@ final class LakeTable(
   /** Merge-on-read upsert: writes ONLY the upsert rows as a per-epoch delta
     * (one file set per touched bucket); existing rows with the same key stay
     * in older files and lose at read time to the higher `__epoch` stamp
-    * (resolveLatest). Write amplification is O(upserts) — the property the
-    * copy-on-write merge() can't give when hot buckets are touched every
-    * epoch — at the cost of a read-side resolution that stays bounded:
-    * any bucket exceeding `compactThreshold` live files is compacted back
-    * to a single file set inside the committing job. Schema-evolution,
-    * exactly-once and crash-atomicity rules are identical to merge().
+    * (resolveLatest). Write amplification is O(upserts) even when hot
+    * buckets are touched every epoch, at the cost of a read-side resolution
+    * that stays bounded: any bucket exceeding `compactThreshold` live files
+    * is compacted back to a single file set inside the committing job.
+    * For `mergeOnRead` tables (only they resolve versions at read time).
+    * New nullable upsert columns evolve the schema (`evolveSchema`);
+    * re-committing an epoch is a no-op, and a crash before the manifest
+    * link leaves only invisible orphan data files.
     *
-    * REQUIRES one row per key per commit (same contract as merge; the
-    * classify fold emits exactly that): two versions of a key in ONE batch
-    * share an `__epoch` stamp, and `resolveLatest` would break the tie by
-    * partition read order — nondeterministic across replays.
+    * REQUIRES one row per key per commit (the classify fold emits exactly
+    * that): two versions of a key in ONE batch share an `__epoch` stamp,
+    * and `resolveLatest` would break the tie by partition read order —
+    * nondeterministic across replays.
     */
   def mergeDelta(upserts: DataFrame, epoch: Long,
                  metadata: Map[String, String] = Map.empty,
@@ -730,7 +637,7 @@ final class LakeTable(
     * bucket-pruned LEFT ANTI join on the key columns only (column-pruned
     * read of prior files), and ONLY the new rows are written — untouched
     * files are carried, so write amplification is O(batch), never O(bucket).
-    * Same exactly-once/atomicity rules as merge().
+    * Same exactly-once/atomicity rules as mergeDelta().
     */
   def appendNew(upserts: DataFrame, epoch: Long,
                 metadata: Map[String, String] = Map.empty,
@@ -762,7 +669,7 @@ final class LakeTable(
 
     // schema evolution on the append path too (new change-event fields land
     // nullable; old files read through the merged schema with null fill) —
-    // same rules as merge()/mergeDelta()
+    // same rules as mergeDelta()
     val (mergedSchema, schemaId) = evolveSchema(parent, upserts.schema)
     val withBucket = conformTo(mergedSchema)(upserts).withColumn("__bucket", bucketCol)
       // row-level commit stamp: survives compaction, so changesSince stays

@@ -59,7 +59,9 @@ object PlanDump {
           val t0 = System.nanoTime()
           fn(spark, sfDir).write.mode("overwrite").format("noop").save()
           val w = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(50) // let the listener bus drain the last job-end
+          // deterministic drain: every job-end of this run reaches the listener
+          org.apache.spark.sql.graftbridge.GraftBridge
+            .drainListenerBus(spark.sparkContext)
           (w, jobWall.get() / 1e3)
         }
         val (coldW, _) = run() // warm-up; its wall = the cold (codegen-inclusive) cost

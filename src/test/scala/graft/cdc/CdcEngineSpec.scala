@@ -28,32 +28,6 @@ class CdcEngineSpec extends SparkSpec {
     eng
   }
 
-  test("aligned and legacy commit paths produce identical tables") {
-    // the aligned single-shuffle path ships as the default; the legacy
-    // per-commit-shuffle path stays as the A/B control — pin them equal
-    // in sbt (the r6 bench campaign verified this by output sha; this
-    // keeps it pinned against future drift), enriched table included
-    def run(aligned: Boolean): (Map[String, String], Map[String, String], Long) = {
-      val eng = new CdcEngine(tmpDir(s"ab-aligned-$aligned"), numBuckets = 8,
-        cutoffMicros = 14 * day,
-        dim = Some(Enrichment.generateDim(spark, numAsids = 997,
-          yearMonths = Seq(201912, 202001))),
-        alignedCommits = aligned)
-      (0L to 3L).foreach(e => eng.applyEpoch(spark, log.filter(_.epoch == e), e))
-      val enrichedShas = {
-        val df = eng.currentEnriched(spark)
-        val excluded = Set("row_sha256", "duplicatesDropped", "danglingAcks",
-          "unknownPurpose", "negativeSla")
-        val cols = df.columns.filterNot(excluded).sorted.toIndexedSeq.map(col)
-        df.select(col("repo"), sha2(to_json(struct(cols: _*)), 256).as("s"))
-          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      }
-      (shaMap(eng.currentTransfers(spark)), enrichedShas,
-        LakeTable.readSnapshot(eng.state, spark).count())
-    }
-    assert(run(aligned = true) == run(aligned = false))
-  }
-
   test("incremental epoch-by-epoch apply equals one-shot full classification") {
     val eng = buildIncremental(tmpDir("inc"), Seq(0L, 1L, 2L, 3L))
     val incremental = shaMap(eng.currentTransfers(spark))
@@ -114,10 +88,11 @@ class CdcEngineSpec extends SparkSpec {
 
   test("schema evolution: new nullable column in a later epoch, old rows read as null") {
     val dir = tmpDir("evo")
-    val t = new LakeTable(s"$dir/t", numBuckets = 4, keyColumns = Seq("k"))
-    t.merge(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), epoch = 0L)
+    val t = new LakeTable(s"$dir/t", numBuckets = 4, keyColumns = Seq("k"),
+      mergeOnRead = true)
+    t.mergeDelta(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), epoch = 0L)
     // epoch 1 adds a column
-    t.merge(Seq(("b", 3L, "new"), ("c", 4L, "col")).toDF("k", "v", "extra"),
+    t.mergeDelta(Seq(("b", 3L, "new"), ("c", 4L, "col")).toDF("k", "v", "extra"),
       epoch = 1L)
     val m = t.latestManifest().get
     assert(m.schemaId == 2)
@@ -128,8 +103,9 @@ class CdcEngineSpec extends SparkSpec {
 
   test("crash between data write and manifest commit leaves state invisible") {
     val dir = tmpDir("crash")
-    val t = new LakeTable(s"$dir/t", numBuckets = 4, keyColumns = Seq("k"))
-    t.merge(Seq(("a", 1L)).toDF("k", "v"), epoch = 0L)
+    val t = new LakeTable(s"$dir/t", numBuckets = 4, keyColumns = Seq("k"),
+      mergeOnRead = true)
+    t.mergeDelta(Seq(("a", 1L)).toDF("k", "v"), epoch = 0L)
     // simulate a crashed epoch-1 write: orphan data dir, no manifest
     val orphan = new java.io.File(s"$dir/t/data/e000000000001/__bucket=0")
     orphan.mkdirs()
@@ -137,7 +113,7 @@ class CdcEngineSpec extends SparkSpec {
     val snap = LakeTable.readSnapshot(t, spark).as[(String, Long)].collect().toSet
     assert(snap == Set(("a", 1L))) // orphan invisible
     // recovery: re-running epoch 1 commits atomically over the orphan dir
-    t.merge(Seq(("b", 2L)).toDF("k", "v"), epoch = 1L)
+    t.mergeDelta(Seq(("b", 2L)).toDF("k", "v"), epoch = 1L)
     val snap2 = LakeTable.readSnapshot(t, spark).as[(String, Long)].collect().toSet
     assert(snap2 == Set(("a", 1L), ("b", 2L)))
   }
@@ -149,7 +125,7 @@ class CdcEngineSpec extends SparkSpec {
     val wide = CdcPipeline.withRowSha(
         CdcPipeline.classify(log.filter(_.epoch == 2L), 14 * day).toDF())
       .withColumn("pipeline_version", lit("v2"))
-    eng.transfers.merge(wide, epoch = 2L)
+    eng.transfers.mergeDelta(wide, epoch = 2L)
     // the engine (old schema) keeps applying after the widening commit
     eng.applyEpoch(spark, log.filter(_.epoch == 3L), 3L)
 
@@ -348,6 +324,51 @@ class CdcEngineSpec extends SparkSpec {
     val before = eng.enriched.get.latestManifest().get
     eng.applyEpoch(spark, log.filter(_.epoch == 3L), 3L)
     assert(eng.enriched.get.latestManifest().get == before)
+  }
+
+  test("single-shuffle epoch: the commits write no shuffle bytes, the fold does") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val eng = new CdcEngine(tmpDir("one-shuffle"), numBuckets = 8,
+      cutoffMicros = 14 * day,
+      dim = Some(Enrichment.generateDim(spark, numAsids = 997,
+        yearMonths = Seq(201911, 201912))))
+    eng.applyEpoch(spark, log.filter(_.epoch == 0L), 0L)
+
+    // shuffle-write bytes per job description, attributed via stage → job
+    val stageDesc = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val bytes = new java.util.concurrent.ConcurrentHashMap[String,
+      java.util.concurrent.atomic.AtomicLong]()
+    def counter(d: String) =
+      bytes.computeIfAbsent(d, _ => new java.util.concurrent.atomic.AtomicLong())
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val d = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        js.stageInfos.foreach(si => stageDesc.put(si.stageId, d))
+        counter(d)
+      }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null) Option(stageDesc.get(te.stageId)).foreach(d =>
+          counter(d).addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // epoch 1 folds prior state; two files per bucket stay far below the
+      // compaction threshold, so no commit rewrites anything inline
+      eng.applyEpoch(spark, log.filter(_.epoch == 1L), 1L)
+      org.apache.spark.sql.graftbridge.GraftBridge.drainListenerBus(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    def written(phase: String): Long = {
+      val d = s"cdc epoch 1: $phase"
+      assert(bytes.containsKey(d), s"no job tagged '$d': ${bytes.keySet}")
+      bytes.get(d).get()
+    }
+    assert(written("fold + epoch summary") > 0L)
+    Seq("state commit (appendNew)", "transfers commit (mergeDelta)",
+      "enriched commit (mergeDelta)").foreach { phase =>
+      assert(written(phase) == 0L, s"$phase must consume the fold's partitioning")
+    }
   }
 
   test("ingest/maintenance epoch-id collision fails loudly, not as a silent skip") {

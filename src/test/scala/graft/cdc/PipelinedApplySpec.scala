@@ -113,25 +113,6 @@ class PipelinedApplySpec extends SparkSpec {
     assert(stateMap(eng) == stateMap(ref))
   }
 
-  test("classifyPreDedup equals classify modulo the batching-dependent dupe counter") {
-    // the hot-key fixture: redelivered copies + mega-fragmented sessions —
-    // exactly the shape the pre-dedup variant exists for
-    def strip(ds: org.apache.spark.sql.Dataset[TransferRecord]) =
-      ds.toDF().drop("duplicatesDropped").collect()
-        .map(r => r.getString(0) -> r.toSeq.drop(1).toVector).toMap
-    val a = strip(CdcPipeline.classify(log, 14 * day))
-    val b = strip(CdcPipeline.classifyPreDedup(log, 14 * day))
-    assert(a.keySet == b.keySet)
-    assert(a == b, "pre-dedup path must produce identical transfers")
-  }
-
-  test("classifyPreDedup dedup aggregate has a map-side partial phase") {
-    val plan = CdcPipeline.classifyPreDedup(log, 14 * day)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("partial_min_by") || plan.contains("partial_"),
-      s"dedup must combine map-side before the shuffle:\n${plan.take(2000)}")
-  }
-
   test("prior-state fold consumes the stored parse — content is never re-read") {
     import graft.classifier.{Interactions, SpineMessage}
     val eng = new CdcEngine(tmpDir("parsed-path"), numBuckets = 4,

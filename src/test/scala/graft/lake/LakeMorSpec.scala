@@ -4,9 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Merge-on-read resolution under randomized (seeded) schedules: any
-  * interleaving of delta commits, copy-on-write commits, and threshold
-  * compactions must resolve to exactly the last-writer-wins key→value map,
-  * at the head and at any time-travel point.
+  * interleaving of delta commits (with and without inline compaction) and
+  * standalone compaction commits must resolve to exactly the
+  * last-writer-wins key→value map, at the head and at any time-travel point.
   */
 class LakeMorSpec extends SparkSpec {
   import spark.implicits._
@@ -19,16 +19,27 @@ class LakeMorSpec extends SparkSpec {
       val keys = ('a' to 'f').map(_.toString)
       var expectedAt = Map.empty[Long, Map[String, Long]] // epoch → lww map
       var current = Map.empty[String, Long]
+      var epoch = 0L
 
-      (0L until 6L).foreach { epoch =>
+      (0 until 6).foreach { _ =>
         val picked = rng.shuffle(keys).take(1 + rng.nextInt(keys.size))
         val upserts = picked.map(k => (k, epoch * 100 + rng.nextInt(100).toLong))
-        val df = upserts.toDF("k", "v")
-        if (rng.nextBoolean()) t.mergeDelta(df, epoch)
-        else t.merge(df, epoch) // COW interleave: physically resolves buckets
+        t.mergeDelta(upserts.toDF("k", "v"), epoch, compactInline = rng.nextBoolean())
         current = current ++ upserts.toMap
         expectedAt += (epoch -> current)
+        epoch += 1
+        // copy-on-write interleave: a standalone compaction physically
+        // resolves the over-threshold buckets, so later deltas land on a
+        // mix of resolved and delta-holding buckets
+        if (rng.nextBoolean()) {
+          t.compact(spark, epoch)
+          expectedAt += (epoch -> current)
+          epoch += 1
+        }
       }
+      // a final maintenance compaction catches up the deferred buckets
+      t.compact(spark, epoch)
+      expectedAt += (epoch -> current)
 
       // head + every historical epoch resolve to the expected map
       expectedAt.foreach { case (epoch, want) =>
@@ -38,7 +49,7 @@ class LakeMorSpec extends SparkSpec {
       }
       // bounds-pruned point lookups agree with the resolved map at the head
       // (and at one historical epoch) for every key, present or not
-      val headWant = expectedAt(5L)
+      val headWant = expectedAt(epoch)
       (keys :+ "zz-missing").foreach { k =>
         val hit = t.lookup(spark, Map("k" -> k)).select("v").as[Long].collect().toSeq
         assert(hit == headWant.get(k).toSeq, s"seed=$seed lookup($k): $hit")
@@ -85,20 +96,6 @@ class LakeMorSpec extends SparkSpec {
       s"pushdown must survive the manifest-planned scan:\n${pushed.take(1500)}")
   }
 
-  test("COW merge on a multi-version MOR table carries the RESOLVED version once") {
-    val t = new LakeTable(tmpDir("cow-on-mor") + "/t", numBuckets = 1,
-      keyColumns = Seq("k"), mergeOnRead = true)
-    t.mergeDelta(Seq(("a", 1L), ("b", 1L)).toDF("k", "v"), epoch = 0L)
-    t.mergeDelta(Seq(("a", 2L), ("b", 2L)).toDF("k", "v"), epoch = 1L) // 2 versions each
-    // COW commit upserting only "b": "a" must carry as ONE row, the LATEST
-    t.merge(Seq(("b", 9L)).toDF("k", "v"), epoch = 2L)
-    val rows = LakeTable.readSnapshot(t, spark).as[(String, Long)]
-      .collect().sorted.toSeq
-    assert(rows == Seq(("a", 2L), ("b", 9L)), s"got $rows")
-    // physical layout after COW is fully resolved too (one row per key)
-    assert(t.latestManifest().get.files.map(_.rows).sum == 2)
-  }
-
   test("changesSince returns exactly the row versions committed in the range") {
     val t = new LakeTable(tmpDir("changes") + "/t", numBuckets = 2,
       keyColumns = Seq("k"), mergeOnRead = true, compactThreshold = 2)
@@ -115,11 +112,13 @@ class LakeMorSpec extends SparkSpec {
     val upTo2 = t.changesSince(spark, sinceEpoch = 1L, asOf = 2L)
       .select("k", "v").as[(String, Long)].collect().toSet
     assert(upTo2 == Set(("b", 2L), ("c", 2L)))
-    // a COW rewrite must NOT re-report carried (unchanged) rows
-    t.merge(Seq(("d", 4L)).toDF("k", "v"), epoch = 4L)
-    val afterCow = t.changesSince(spark, sinceEpoch = 3L)
+    // a compaction rewrite must NOT re-report carried (unchanged) rows
+    t.mergeDelta(Seq(("d", 4L)).toDF("k", "v"), epoch = 4L, compactInline = false)
+    t.compact(spark, epoch = 5L)
+    assert(t.manifestAt(5L).exists(_.kind == "compact"), "compaction must rewrite")
+    val afterCompact = t.changesSince(spark, sinceEpoch = 3L)
       .select("k", "v").as[(String, Long)].collect().toSet
-    assert(afterCow == Set(("d", 4L)), s"carried rows re-reported: $afterCow")
+    assert(afterCompact == Set(("d", 4L)), s"carried rows re-reported: $afterCompact")
 
     // append-only tables stream too (compaction keeps per-row stamps)
     val app = new LakeTable(tmpDir("changes-app") + "/t", numBuckets = 2,
