@@ -4,7 +4,9 @@ import graft.classifier.{SpineMessage, TransferClassifier}
 import graft.lake.{LakeTable, Manifest}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
+import scala.reflect.ClassTag
 
 /** Classified output fact row MERGE'd into the lake, keyed by `repo`
   * (= conversation). Carries the reference Transfer columns
@@ -41,10 +43,14 @@ final case class TransferRecord(
 
 object CdcPipeline {
 
-  /** Allocation-free (tsMicros, offset) total order for the fold's sort. */
-  private val eventOrder: java.util.Comparator[SlimEvent] =
-    new java.util.Comparator[SlimEvent] {
-      override def compare(a: SlimEvent, b: SlimEvent): Int = {
+  /** Allocation-free (tsMicros, offset) total order: the session order of
+    * every fold. The Ordering.by tuple formulation allocates a Tuple2 + two
+    * boxed longs PER COMPARISON — measurable on the memory-bandwidth-bound
+    * fold path.
+    */
+  private val eventOrder: java.util.Comparator[SessionEvent] =
+    new java.util.Comparator[SessionEvent] {
+      override def compare(a: SessionEvent, b: SessionEvent): Int = {
         val c = java.lang.Long.compare(a.tsMicros, b.tsMicros)
         if (c != 0) c else java.lang.Long.compare(a.offset, b.offset)
       }
@@ -80,73 +86,52 @@ object CdcPipeline {
       .as[ApplyEvent]
   }
 
-  /** Per-key fold, shared by the batch path above and the streaming
-    * flatMapGroupsWithState path.
+  /** One deduped session: the first-seen copy of each commit, sorted by
+    * (tsMicros, offset), and the number of redelivered copies dropped.
     */
-  def classifyGroup(
-      repo: String, events: Iterator[SlimEvent], cutoffMicros: Long): Option[TransferRecord] = {
-    // dedup by commit (event id), keep min offset — replay/redelivery idempotence
-    val byCommit = mutable.HashMap.empty[String, SlimEvent]
-    var dupes = 0L
+  final class Session[E <: SessionEvent](val winners: Array[E], val dropped: Long)
+
+  /** The session kernel, shared by batch `classify` (`classifyGroup`), the
+    * epoch fold (`applyGroup`) and the streaming fold: dedup by commit
+    * (event id) keeping the FIRST-SEEN copy — min offset, then min epoch, so
+    * an exact-offset redelivery keeps the already-durable copy regardless of
+    * iterator order (replay/redelivery idempotence); on a full tie the copy
+    * met first wins — then sort the winners by (tsMicros, offset).
+    */
+  def dedupSession[E <: SessionEvent: ClassTag](events: Iterator[E]): Session[E] = {
+    val byCommit = mutable.HashMap.empty[String, E]
+    var dropped = 0L
     events.foreach { e =>
       byCommit.get(e.commit) match {
         case Some(prev) =>
-          dupes += 1
-          // first-seen wins: min offset, then min epoch — the epoch tiebreak
-          // makes an exact-offset redelivery keep the already-durable copy
-          // regardless of iterator order
+          dropped += 1
           if (e.offset < prev.offset ||
               (e.offset == prev.offset && e.epoch < prev.epoch))
             byCommit.update(e.commit, e)
         case None => byCommit.update(e.commit, e)
       }
     }
-    if (byCommit.isEmpty) return None
-    val deduped = byCommit.values.toArray
-    // primitive comparator: the Ordering.by tuple formulation allocates a
-    // Tuple2 + two boxed longs PER COMPARISON — measurable on the
-    // memory-bandwidth-bound fold path
-    java.util.Arrays.sort(deduped, CdcPipeline.eventOrder)
-    var minOff = Long.MaxValue
-    var maxOff = Long.MinValue
-    val msgs = Vector.newBuilder[SpineMessage]
-    deduped.foreach { e =>
-      if (e.offset < minOff) minOff = e.offset
-      if (e.offset > maxOff) maxOff = e.offset
-      msgs += MessageParser.parse(e.content)
-    }
-    classifyParsed(repo, msgs.result(), cutoffMicros,
-      eventCount = deduped.length.toLong, dupes = dupes,
-      minOff = minOff, maxOff = maxOff)
+    val winners = byCommit.values.toArray
+    java.util.Arrays.sort(winners, eventOrder)
+    new Session(winners, dropped)
   }
 
-  /** Classify an ALREADY-deduped parsed session, presented in
-    * (eventTs, offset) order — shared tail of the batch fold (which dedups
-    * raw events then parses) and the streaming state path (which stores
-    * PARSED messages so session state never holds content payloads). The
-    * stable time sort here keeps the caller's offset tiebreak — the same
-    * deterministic total order on both paths.
+  /** Classify a deduped session: `msgs(i)` is the parsed message of
+    * `session.winners(i)`. The state machine stable-sorts by message time,
+    * so the winners' (tsMicros, offset) order breaks its ties — the same
+    * deterministic total order on every path. The record carries the
+    * session's lineage: winner count, dropped copies, offset bounds.
     */
-  def classifyParsed(repo: String, msgs: Seq[SpineMessage], cutoffMicros: Long,
-                     eventCount: Long, dupes: Long,
-                     minOff: Long, maxOff: Long): Option[TransferRecord] = {
-    // Both batch callers hand msgs already (tsMicros, offset)-sorted, so the
-    // stable re-sort by time is a no-op order-wise — detect sortedness in
-    // one cheap pass and skip the per-group sortBy allocation (r7); the
-    // streaming state path may still deliver unsorted appends and takes the
-    // sort as before.
-    val isSorted = msgs.isInstanceOf[IndexedSeq[_]] && {
-      var i = 1
-      var ok = true
-      while (ok && i < msgs.length) {
-        if (msgs(i - 1).timeMicros > msgs(i).timeMicros) ok = false
-        i += 1
-      }
-      ok
-    }
-    val ordered = if (isSorted) msgs else msgs.sortBy(_.timeMicros)
+  def classifySession(repo: String, session: Session[_ <: SessionEvent],
+                      msgs: Seq[SpineMessage], cutoffMicros: Long): Option[TransferRecord] = {
     val counters = new graft.classifier.Gp2gpSession.Counters
-    TransferClassifier.classify(ordered, cutoffMicros, counters).map { t =>
+    TransferClassifier.classify(msgs, cutoffMicros, counters).map { t =>
+      var minOff = Long.MaxValue
+      var maxOff = Long.MinValue
+      session.winners.foreach { e =>
+        if (e.offset < minOff) minOff = e.offset
+        if (e.offset > maxOff) maxOff = e.offset
+      }
       TransferRecord(
         repo = repo,
         conversationId = t.conversationId,
@@ -163,8 +148,8 @@ object CdcPipeline {
         dateRequestedMicros = t.dateRequestedMicros,
         dateCompletedMicros = t.dateCompletedMicros,
         lastSenderMessageTimestampMicros = t.lastSenderMessageTimestampMicros,
-        eventCount = eventCount,
-        duplicatesDropped = dupes,
+        eventCount = session.winners.length.toLong,
+        duplicatesDropped = session.dropped,
         minOffset = minOff,
         maxOffset = maxOff,
         danglingAcks = counters.danglingAcks,
@@ -172,6 +157,14 @@ object CdcPipeline {
         negativeSla = counters.negativeSla,
       )
     }
+  }
+
+  /** Per-key batch fold: the session kernel, one parse per winner, classify. */
+  def classifyGroup(
+      repo: String, events: Iterator[SlimEvent], cutoffMicros: Long): Option[TransferRecord] = {
+    val session = dedupSession(events)
+    classifySession(repo, session,
+      session.winners.iterator.map(e => MessageParser.parse(e.content)).toVector, cutoffMicros)
   }
 
   /** One output row of the fused epoch fold: either a classified transfer or
@@ -182,9 +175,10 @@ object CdcPipeline {
     */
   final case class ApplyOut(transfer: Option[TransferRecord], event: Option[ApplyEvent])
 
-  /** Fused per-key epoch fold: dedup by commit (min offset), classify the
-    * full session, and emit the deduped events that are NEW this epoch
-    * (their min-offset copy carries the current epoch) for the state table.
+  /** Fused per-key epoch fold: the session kernel (`dedupSession`),
+    * classify the full session, and emit the deduped events that are NEW
+    * this epoch (their first-seen copy carries the current epoch), in
+    * (tsMicros, offset) order, for the state table.
     * Prior-state events carry earlier epochs, so a commit redelivered now
     * resolves to its first-seen copy and is NOT re-emitted — the same
     * first-offset-wins rule as full recompute.
@@ -203,20 +197,8 @@ object CdcPipeline {
                    * (a measured ~10 % apply regression).
                    */
                  keepParsed: Boolean = true): Iterator[ApplyOut] = {
-    val byCommit = mutable.HashMap.empty[String, ApplyEvent]
-    var dupes = 0L
-    events.foreach { e =>
-      byCommit.get(e.commit) match {
-        case Some(prev) =>
-          dupes += 1
-          if (e.offset < prev.offset ||
-              (e.offset == prev.offset && e.epoch < prev.epoch))
-            byCommit.update(e.commit, e)
-        case None => byCommit.update(e.commit, e)
-      }
-    }
-    if (byCommit.isEmpty) return Iterator.empty
-    val deduped = byCommit.values.toArray
+    val session = dedupSession(events)
+    val winners = session.winners
     // Emit-on-change: no event of THIS epoch survived dedup ⇒ the session's
     // input set — and therefore its classification — is exactly what the
     // table already committed. Emitting it anyway (which the fold-everything
@@ -229,36 +211,17 @@ object CdcPipeline {
     // diagnostics, excluded from row_sha256 for the same reason.
     // This check runs BEFORE any parse: a pure-redelivery session exits
     // without re-parsing its whole history.
-    if (!deduped.exists(_.epoch == currentEpoch)) return Iterator.empty
-    // parse-or-reuse ONCE per deduped event, keeping the copy-to-message
-    // pairing so fresh emissions persist their parsed form
-    val withMsg: Array[(ApplyEvent, SpineMessage)] = deduped.map { e =>
-      e -> (if (e.parsed != null) e.parsed else MessageParser.parse(e.content))
-    }
-    val fresh = withMsg.filter(_._1.epoch == currentEpoch)
-    // same deterministic (tsMicros, offset) total order as classifyGroup
-    java.util.Arrays.sort(withMsg, new java.util.Comparator[(ApplyEvent, SpineMessage)] {
-      override def compare(a: (ApplyEvent, SpineMessage),
-                           b: (ApplyEvent, SpineMessage)): Int = {
-        val c = java.lang.Long.compare(a._1.tsMicros, b._1.tsMicros)
-        if (c != 0) c else java.lang.Long.compare(a._1.offset, b._1.offset)
-      }
-    })
-    var minOff = Long.MaxValue
-    var maxOff = Long.MinValue
-    withMsg.foreach { case (e, _) =>
-      if (e.offset < minOff) minOff = e.offset
-      if (e.offset > maxOff) maxOff = e.offset
-    }
+    if (!winners.exists(_.epoch == currentEpoch)) return Iterator.empty
+    // parse-or-reuse ONCE per winner; msgs(i) pairs with winners(i), so
+    // fresh emissions persist their parsed form
+    val msgs = winners.map(e => if (e.parsed != null) e.parsed else MessageParser.parse(e.content))
     // the fold dedups BEFORE classify, so redelivery (in-batch or vs prior
-    // state) is counted here, not by the classifier's inner dedup
-    val transfer = classifyParsed(repo, withMsg.map(_._2).toVector, cutoffMicros,
-        eventCount = deduped.length.toLong, dupes = dupes,
-        minOff = minOff, maxOff = maxOff)
-      .map(t => ApplyOut(Some(t), None))
-    transfer.iterator ++ fresh.iterator.map { case (e, m) =>
-      ApplyOut(None, Some(if (keepParsed) e.copy(parsed = m) else e))
-    }
+    // state) is counted by the kernel, not by the classifier's inner dedup
+    val transfer = classifySession(repo, session, ArraySeq.unsafeWrapArray(msgs), cutoffMicros)
+    transfer.iterator.map(t => ApplyOut(Some(t), None)) ++
+      winners.indices.iterator.filter(i => winners(i).epoch == currentEpoch).map { i =>
+        ApplyOut(None, Some(if (keepParsed) winners(i).copy(parsed = msgs(i)) else winners(i)))
+      }
   }
 
   /** Canonical per-row hash of the classified output — the replay invariant:
@@ -304,7 +267,7 @@ object CdcPipeline {
   /** Partition-local epoch fold: the input is shuffled by table bucket and
     * sorted by repo (sortWithinPartitions), so each session is one
     * consecutive run — buffer a run and hand it to `applyGroup`. Memory
-    * bound = one session's events (applyGroup hash-buffers the session
+    * bound = one session's events (the session kernel hash-buffers the session
     * anyway). Output rows stay in their input partition, which is what lets
     * the commits skip their own shuffles.
     */

@@ -1,5 +1,17 @@
 package graft.cdc
 
+/** The dedup/order key every per-session event row carries: `commit` is the
+  * event id, `(offset, epoch)` decides which redelivered copy is first-seen,
+  * `(tsMicros, offset)` orders the session. The session kernel
+  * (`CdcPipeline.dedupSession`) reads only these four fields.
+  */
+trait SessionEvent {
+  def commit: String
+  def offset: Long
+  def epoch: Long
+  def tsMicros: Long
+}
+
 /** One change event of the binlog/WAL stream: a row-insert into the source
   * table of shape `(repo, path, commit, lang, content)` (the driver-mandated
   * input shape) plus the change-log envelope the tail adds.
@@ -19,7 +31,7 @@ final case class ChangeEvent(
     op: String,
     tsMicros: Long,
     epoch: Long,
-) {
+) extends SessionEvent {
   def slim: SlimEvent = SlimEvent(repo, commit, content, offset, tsMicros, epoch)
 }
 
@@ -37,7 +49,7 @@ final case class SlimEvent(
     offset: Long,
     tsMicros: Long,
     epoch: Long,
-)
+) extends SessionEvent
 
 /** The APPLY fold's working row: a full change event PLUS the optional
   * pre-parsed message. The state table persists every fresh event's parsed
@@ -59,4 +71,4 @@ final case class ApplyEvent(
     tsMicros: Long,
     epoch: Long,
     parsed: graft.classifier.SpineMessage, // null for raw batch rows
-)
+) extends SessionEvent

@@ -8,9 +8,10 @@ package graft.classifier
   *  - cutoff filter:         reference `transfer_service.py:158-164`
   *  - group sort:            reference `transfer_service.py:62` (stable by time)
   *
-  * Pure Scala (no Spark) — executed per key inside `mapGroups` /
-  * `flatMapGroupsWithState`, so the hot path is a single in-memory pass per
-  * session and never materializes a session as a table.
+  * Pure Scala (no Spark) — executed per key by the session kernel
+  * (`CdcPipeline.classifySession`) inside the batch, epoch and streaming
+  * folds, so the hot path is a single in-memory pass per session and never
+  * materializes a session as a table.
   */
 object TransferClassifier {
 

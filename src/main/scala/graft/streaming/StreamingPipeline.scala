@@ -1,18 +1,21 @@
 package graft.streaming
 
-import graft.cdc.{CdcPipeline, ChangeEvent, MessageParser, TransferRecord}
+import graft.cdc.{CdcPipeline, ChangeEvent, MessageParser, SessionEvent, TransferRecord}
 import graft.classifier.SpineMessage
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions.{col, timestamp_micros}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.collection.immutable.ArraySeq
 
 /** Structured Streaming flavour of the CDC pipeline: the change log arrives
   * as a stream of inserts; per-session state (the event-id dedup map) lives
   * in the state store, and every trigger re-emits the affected sessions'
   * classified rows (Update mode ≙ MERGE upsert downstream).
   *
-  * The fold is the SAME pure function as the batch path
-  * (CdcPipeline.classifyGroup) — batch/stream parity by construction.
+  * Each trigger merges the stored session with the incoming events through
+  * the SAME session kernel as the batch paths (`CdcPipeline.dedupSession`
+  * then `CdcPipeline.classifySession`) — batch/stream parity by
+  * construction.
   *
   * State is BOUNDED (the 100×-keys requirement): the input carries a
   * watermark (allowed lateness defaults to the cutoff itself — the
@@ -31,16 +34,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object StreamingPipeline {
 
   /** One deduped, ALREADY-PARSED session event in state: the fixed-width
-    * SpineMessage plus the dedup/order key (commit, offset, epoch, eventTs).
+    * SpineMessage plus the dedup/order key (commit, offset, epoch, tsMicros).
     * Raw `content` payloads are parsed once on arrival and never stored —
     * per-session state stays small no matter how large the wire messages
     * are (the state store is the scarce resource at 100× keys).
     */
   final case class StoredMsg(commit: String, offset: Long, epoch: Long,
-                             eventTs: Long, msg: SpineMessage)
+                             tsMicros: Long, msg: SpineMessage) extends SessionEvent
 
   /** Per-key state: the deduped parsed-event buffer (first-seen offset wins). */
-  final case class SessionState(msgs: Seq[StoredMsg], emittedCount: Long)
+  final case class SessionState(msgs: Seq[StoredMsg])
 
   def classifyStream(
       events: Dataset[ChangeEvent],
@@ -68,43 +71,26 @@ object StreamingPipeline {
             Iterator.empty
           } else {
             val prior = if (state.exists) state.get.msgs else Seq.empty[StoredMsg]
-            // dedup against prior state: first-seen (min offset, then min
-            // epoch) wins — idempotent under redelivery, same rule as the
-            // batch state table. Incoming events are parsed HERE, once, and
-            // only the parsed form enters state. `changed` tracks whether
-            // anything new landed, replacing a full vector compare.
-            val byCommit = scala.collection.mutable.LinkedHashMap.empty[String, StoredMsg]
-            prior.foreach(s => byCommit.update(s.commit, s))
-            var changed = false
-            incoming.foreach { e =>
-              val keep = byCommit.get(e.commit) match {
-                case Some(prev) =>
-                  e.offset < prev.offset ||
-                    (e.offset == prev.offset && e.epoch < prev.epoch)
-                case None => true
-              }
-              if (keep) {
-                byCommit.update(e.commit, StoredMsg(e.commit, e.offset, e.epoch,
-                  e.tsMicros, MessageParser.parse(e.content)))
-                changed = true
-              }
-            }
-            if (!changed) Iterator.empty // pure redelivery: no re-emit
+            // merge against prior state through the session kernel: prior
+            // copies come first, so an exact redelivery keeps the stored
+            // copy. Only incoming WINNERS are parsed, and only the parsed
+            // form enters state.
+            val session = CdcPipeline.dedupSession[SessionEvent](prior.iterator ++ incoming)
+            if (!session.winners.exists(_.isInstanceOf[ChangeEvent]))
+              Iterator.empty // pure redelivery: no re-emit
             else {
-              val merged = byCommit.values.toVector
-              state.update(SessionState(merged,
-                (if (state.exists) state.get.emittedCount else 0L) + 1L))
-              val startMicros = merged.iterator.map(_.eventTs).min
-              val horizonMs = startMicros / 1000L + cutoffMicros / 1000L + 1L
+              val merged = session.winners.map {
+                case s: StoredMsg => s
+                case e: ChangeEvent => StoredMsg(e.commit, e.offset, e.epoch,
+                  e.tsMicros, MessageParser.parse(e.content))
+              }
+              state.update(SessionState(ArraySeq.unsafeWrapArray(merged)))
+              // winners are (tsMicros, offset)-sorted: the head starts the session
+              val horizonMs = merged.head.tsMicros / 1000L + cutoffMicros / 1000L + 1L
               state.setTimeoutTimestamp(
                 math.max(horizonMs, state.getCurrentWatermarkMs() + 1L))
-              // same (eventTs, offset) pre-order as the batch fold, then the
-              // shared classify tail — batch/stream parity by construction
-              val ordered = merged.sortBy(s => (s.eventTs, s.offset))
-              CdcPipeline.classifyParsed(repo, ordered.map(_.msg), cutoffMicros,
-                eventCount = merged.size.toLong, dupes = 0L,
-                minOff = merged.iterator.map(_.offset).min,
-                maxOff = merged.iterator.map(_.offset).max).iterator
+              CdcPipeline.classifySession(repo, session,
+                ArraySeq.unsafeWrapArray(merged.map(_.msg)), cutoffMicros).iterator
             }
           }
       }

@@ -1,6 +1,6 @@
 package graft.model
 
-import graft.cdc.{CdcPipeline, ChangeEvent, MessageParser, TransferRecord}
+import graft.cdc.{ApplyEvent, CdcPipeline, ChangeEvent, MessageParser, TransferRecord}
 import graft.classifier.{Interactions, SpineMessage}
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
@@ -132,5 +132,34 @@ object EquivalenceProps extends Properties("ModelEquivalence") {
       if (engine != model)
         println(s"DIVERGENCE\n case: $c\n engine: $engine\n model:  $model")
       engine == model
+    }
+
+  /** The same sessions through the epoch fold: events of epochs 0 and 1 are
+    * prior state (parsed, no content), epoch-2 events are this epoch's raw
+    * batch. The generator's redelivered copies are epoch 2 at offset+1000,
+    * so they never win dedup and exercise the emit-on-change gate.
+    */
+  property("epoch fold (applyGroup) == independent model on arbitrary sessions") =
+    forAll(caseGen) { c =>
+      val events = eventsOf(c)
+      val applyEvents = events.map { e =>
+        val prior = e.epoch < 2
+        ApplyEvent(e.repo, e.path, e.commit, e.lang,
+          content = if (prior) null else e.content, e.offset, e.op, e.tsMicros, e.epoch,
+          parsed = if (prior) MessageParser.parse(e.content) else null)
+      }
+      val outs = CdcPipeline.applyGroup("repo-rnd", applyEvents.iterator, c.cutoff,
+        currentEpoch = 2L).toVector
+      val winners = events.groupBy(_.commit).values.map(_.minBy(e => (e.offset, e.epoch)))
+      val freshWinners = winners.filter(_.epoch == 2L).map(e => (e.commit, e.offset)).toSet
+      val engine = outs.flatMap(_.transfer).map(toModelRec)
+      val fresh = outs.flatMap(_.event).map(e => (e.commit, e.offset))
+      val ok =
+        if (freshWinners.isEmpty) outs.isEmpty
+        else engine == ReferenceModel.classifyLog(events, c.cutoff) &&
+          fresh.size == freshWinners.size && fresh.toSet == freshWinners
+      if (!ok)
+        println(s"DIVERGENCE (applyGroup)\n case: $c\n engine: $engine\n fresh: $fresh")
+      ok
     }
 }

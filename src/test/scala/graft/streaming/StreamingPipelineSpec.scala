@@ -63,6 +63,40 @@ class StreamingPipelineSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  test("a trigger that redelivers a stored event counts it in duplicatesDropped") {
+    import graft.cdc.{ChangeEvent, MessageParser}
+    import graft.classifier.{Interactions, SpineMessage}
+    implicit val sqlCtx = spark.sqlContext
+
+    val t0 = 1577836800000000L // 2020-01-01 UTC, micros
+    def ev(commit: String, interaction: String, ts: Long, off: Long) =
+      ChangeEvent("repo-D", "p", commit, "scala",
+        MessageParser.format(SpineMessage(ts, "repo-D", commit, interaction,
+          "a", "b", None, None, None, None)),
+        offset = off, op = "insert", tsMicros = ts, epoch = 0L)
+
+    val source = MemoryStream[ChangeEvent]
+    val result = StreamingPipeline.classifyStream(source.toDS(), 14 * day,
+      watermarkDelay = Some("100000 days"))
+    val query = result.writeStream
+      .format("memory").queryName("dupes_stream")
+      .outputMode(OutputMode.Update())
+      .start()
+    try {
+      val start = ev("c1", Interactions.EhrRequestStarted, t0, 1L)
+      source.addData(start)
+      query.processAllAvailable()
+      // the stored start redelivered at a later offset, plus one new event
+      source.addData(start.copy(offset = 5L),
+        ev("c2", Interactions.EhrRequestCompleted, t0 + 1000000L, 2L))
+      query.processAllAvailable()
+      val rows = spark.table("dupes_stream")
+        .select("eventCount", "duplicatesDropped", "minOffset", "maxOffset")
+        .as[(Long, Long, Long, Long)].collect().sorted.toSeq
+      assert(rows == Seq((1L, 0L, 1L, 1L), (2L, 1L, 1L, 2L)))
+    } finally query.stop()
+  }
+
   test("event-time timeout evicts sessions once the watermark passes their cutoff horizon") {
     import graft.cdc.{ChangeEvent, MessageParser}
     import graft.classifier.{Interactions, SpineMessage}
