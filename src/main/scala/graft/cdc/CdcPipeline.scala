@@ -2,6 +2,7 @@ package graft.cdc
 
 import graft.classifier.{SpineMessage, TransferClassifier}
 import graft.lake.{LakeTable, Manifest}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.immutable.ArraySeq
@@ -343,9 +344,10 @@ final class CdcEngine(
     val inlineCompaction: Boolean = true,
     /** Organisation dimension (monthly snapshots, `Enrichment.OrgDimRow`
       * shape). When set, the engine ALSO maintains an `enriched` lake table:
-      * each epoch's transfer upserts pass through `Enrichment.enrich` (two
-      * broadcast joins over the O(batch) upserts — the big side is never
-      * shuffled) before a third concurrent merge-on-read commit, so the
+      * each epoch's transfer upserts are enriched (`Enrichment.enrichWith`:
+      * two lookups per row in the effective dim, broadcast once per dim
+      * version — the upserts are never shuffled and no dim job runs per
+      * epoch) before a third concurrent merge-on-read commit, so the
       * reference pipeline's final output (classified + org metadata) is
       * itself incrementally maintained instead of recomputed O(table) per
       * read. The dim seeds the engine; a later snapshot refresh (the
@@ -448,6 +450,28 @@ final class CdcEngine(
   }
   private def presentDimMonths: Set[Int] = seedDimMonths ++ dimDeltaMonthsAcc
 
+  /** The active dim's `Enrichment.effectiveMap`, broadcast once per dim
+    * version: every enriched commit and retro-correction enriches through it
+    * (`Enrichment.enrichWith`), so no commit runs a dim job. Built on first
+    * use after the active dim changes (`activeDimChanged`).
+    */
+  @volatile private var effectiveDimMemo: Option[Broadcast[Enrichment.EffectiveDim]] = None
+
+  private def effectiveDim: Broadcast[Enrichment.EffectiveDim] = synchronized {
+    effectiveDimMemo.getOrElse {
+      val d = activeDim.get
+      val b = d.sparkSession.sparkContext.broadcast(
+        Enrichment.effectiveMap(d, presentDimMonths))
+      effectiveDimMemo = Some(b)
+      b
+    }
+  }
+
+  private def activeDimChanged(): Unit = synchronized {
+    effectiveDimMemo.foreach(_.unpersist())
+    effectiveDimMemo = None
+  }
+
   /** Memoized `state.bornWith("parsed")` — the birth schema is immutable
     * once the first commit exists, so the per-epoch manifest listing +
     * JSON parse it costs is paid at most once. Left un-cached while the
@@ -514,6 +538,7 @@ final class CdcEngine(
               Seq("asid", "yearMonth"), "left_anti")
             .unionByName(snap)
           activeDim = Some(CdcEngine.materializeDim(folded))
+          activeDimChanged()
           val ms = snap.select(col("yearMonth").cast("int")).distinct()
             .as[Int].collect().toSet
           activeDimMonths = activeDimMonths.map(_ ++ ms)
@@ -522,9 +547,10 @@ final class CdcEngine(
         case None =>
           // no dimlog head: materialize the (deduped) seed to a local
           // relation ONCE — activeDim is otherwise a lazy plan whose dedup
-          // window and seed scan would re-execute inside every epoch's
-          // enriched-commit broadcast build
+          // window and seed scan would re-execute at every use (the
+          // effective-dim build, every dim-update fold)
           activeDim = Some(CdcEngine.materializeDim(activeDim.get))
+          activeDimChanged()
       }
     }
     // only after a SUCCESSFUL rebuild: a transient failure above (executor
@@ -890,11 +916,7 @@ final class CdcEngine(
           coalesce(col("transfer.unknownPurpose"), lit(0L)).as("up"),
           coalesce(col("transfer.negativeSla"), lit(0L)).as("ns"),
           coalesce(col("transfer.duplicatesDropped"), lit(0L)).as("dd"),
-          missingDimFlag.as("md"),
-          // null when no transfer — collect_set drops nulls, so the agg
-          // yields exactly the epoch's distinct request months (feeds the
-          // enriched commit's as-of expansion without its own job)
-          when(col("transfer").isNotNull, ymExpr).as("ym"))
+          missingDimFlag.as("md"))
         .withColumn("__bucket", state.bucketCol) // both tables bucket on repo
         .groupBy("__bucket").agg(
           sum("isE").as("e"), sum("isT").as("t"),
@@ -905,10 +927,8 @@ final class CdcEngine(
           min(when(col("isE") === 1L, col("repo"))).as("emn"),
           max(when(col("isE") === 1L, col("repo"))).as("emx"),
           min(when(col("isT") === 1L, col("repo"))).as("tmn"),
-          max(when(col("isT") === 1L, col("repo"))).as("tmx"),
-          collect_set(col("ym")).as("yms"))
+          max(when(col("isT") === 1L, col("repo"))).as("tmx"))
         .collect()
-      val months = summary.flatMap(_.getSeq[Int](12)).distinct.toSeq
       val eventStats = summary.filter(_.getLong(1) > 0).map(r =>
         r.getInt(0) -> graft.lake.BucketStats(r.getLong(1),
           Option(r.getString(8)), Option(r.getString(9)))).toMap
@@ -957,7 +977,7 @@ final class CdcEngine(
         activeDimMonths.map(_ => "missingDimMonthTransfers" -> total(7))
 
       CdcEngine.FoldResult(epoch, out, upserts, freshEvents, touched, eventStats,
-        transferStats, meta, lineage, tLineage, months)
+        transferStats, meta, lineage, tLineage)
     } catch {
       case t: Throwable =>
         out.unpersist()
@@ -1005,14 +1025,13 @@ final class CdcEngine(
     val enrichedF = enriched.map { tbl =>
       Future {
         desc("enriched commit (mergeDelta)")
-        // enrich ONLY the epoch's upserts (O(batch); two broadcast joins,
-        // no shuffle of the upsert side). Every enriched commit stamps the
-        // dim version it enriched with — the durable watermark that makes
-        // pending retro-corrections derivable after a restart.
+        // enrich ONLY the epoch's upserts (O(batch); two lookups per row in
+        // the broadcast effective dim — no dim job, no shuffle of the upsert
+        // side). Every enriched commit stamps the dim version it enriched
+        // with — the durable watermark that makes pending retro-corrections
+        // derivable after a restart.
         val meta = f.meta + (CdcEngine.DimVersionKey -> dimVersion.toString)
-        val base = Enrichment.enrich(f.upserts, activeDim.get,
-          monthsHint = Some(f.months),
-          presentMonthsHint = Some(presentDimMonths))
+        val base = Enrichment.enrichWith(f.upserts, effectiveDim)
         // a pending dim refresh adds the retro-correction of the committed
         // rows it affects (minus this epoch's own upserts — already freshly
         // enriched) to THIS commit; nonEmptyPending resolves to the cached
@@ -1035,7 +1054,7 @@ final class CdcEngine(
               touchedBuckets = Some(f.touched),
               precomputedStats = if (sameB) Some(f.transferStats) else None,
               compactInline = inlineCompaction,
-              // enrich is broadcast-join-only over the upserts, so the
+              // enrichWith is a narrow projection of the upserts, so the
               // fold's partitioning survives to this write too
               alignedInput = sameB)
           case Some((c, n)) =>
@@ -1171,6 +1190,7 @@ final class CdcEngine(
       activeDim.get.join(delta.select("asid", "yearMonth").distinct(),
           Seq("asid", "yearMonth"), "left_anti")
         .unionByName(delta)))
+    activeDimChanged()
     val ms = delta.select(col("yearMonth").cast("int")).distinct()
       .as[Int].collect().toSet
     activeDimMonths = activeDimMonths.map(_ ++ ms)
@@ -1235,9 +1255,7 @@ final class CdcEngine(
       else asidScoped || ymCol.isin(monthWide.toSeq: _*))
     val kept = excludeRepos.fold(affected)(ex =>
       affected.join(ex.distinct(), Seq("repo"), "left_anti"))
-    Some(Enrichment.enrich(kept, activeDim.get,
-      monthsHint = Some((affectedMonths ++ monthWide).toSeq),
-      presentMonthsHint = Some(presentDimMonths)))
+    Some(Enrichment.enrichWith(kept, effectiveDim))
   }
 
   /** Commit the pending retro-correction on the enriched chain NOW, as its
@@ -1361,10 +1379,6 @@ object CdcEngine {
       meta: Map[String, String],
       lineage: Map[String, Long],
       tLineage: Map[String, Long],
-      /** Distinct request months of this epoch's transfers (from the one
-        * summary job) — feeds the enriched commit's as-of dim expansion.
-        */
-      months: Seq[Int],
   )
 
   /** The reference's datetime-string rendering for commit metadata: ISO with

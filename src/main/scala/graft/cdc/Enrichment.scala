@@ -192,12 +192,60 @@ object Enrichment {
     queryMonths.distinct.sorted.filterNot(ym => present(ym) || present(prev(ym)))
   }
 
-  private def roleCols(prefix: String) = Seq(
-    col("odsCode").as(s"${prefix}_practice_ods_code"),
-    col("name").as(s"${prefix}_practice_name"),
-    col("sicblOdsCode").as(s"${prefix}_practice_sicbl_ods_code"),
-    col("sicblName").as(s"${prefix}_practice_sicbl_name"),
+  /** Dim column → enriched column suffix, per practice role. */
+  private val roleFields = Seq(
+    "odsCode" -> "practice_ods_code",
+    "name" -> "practice_name",
+    "sicblOdsCode" -> "practice_sicbl_ods_code",
+    "sicblName" -> "practice_sicbl_name",
   )
+
+  private def roleCols(prefix: String) =
+    roleFields.map { case (f, n) => col(f).as(s"${prefix}_$n") }
+
+  /** The four practice columns one role enriches with. */
+  final case class Practice(odsCode: String, name: String, sicblOdsCode: String,
+                            sicblName: String)
+
+  type EffectiveDim = Map[(String, Int), Practice]
+
+  /** The effective dim as a driver-side map: (asid, query month) → practice,
+    * over every query month that resolves — {m, next(m) | m ∈ present}, the
+    * cover `enrich` derives when given no months hint. Resolution is
+    * `effectiveAsOf`'s; building the map runs its jobs once, so a caller
+    * builds it once per dim version. `dim` must be (asid, yearMonth)-unique
+    * and broadcast-small, as for `enrich`.
+    */
+  def effectiveMap(dim: DataFrame, present: Set[Int]): EffectiveDim = {
+    def next(ym: Int): Int = if (ym % 100 == 12) ym + 89 else ym + 1
+    effectiveAsOf(dim, (present ++ present.map(next)).toSeq, Some(present))
+      .select("asid", "yearMonth", "odsCode", "name", "sicblOdsCode", "sicblName")
+      .collect()
+      .map(r => (r.getString(0), r.getInt(1)) ->
+        Practice(r.getString(2), r.getString(3), r.getString(4), r.getString(5)))
+      .toMap
+  }
+
+  /** `enrich` against a broadcast `effectiveMap`: the same rows and columns
+    * as `enrich` with the dim the map was built from, but each role is a
+    * per-row map lookup instead of a broadcast join, so the plan has no
+    * broadcast exchange and enriching runs no Spark job of its own. The CDC
+    * engine uses it for every enriched commit, broadcasting the map once per
+    * dim version.
+    */
+  def enrichWith(transfers: DataFrame,
+                 eff: org.apache.spark.broadcast.Broadcast[EffectiveDim]): DataFrame = {
+    val practice = udf((asid: String, ym: Int) => eff.value.get((asid, ym)))
+    val ym = (year(timestamp_micros(col("dateRequestedMicros"))) * 100 +
+      month(timestamp_micros(col("dateRequestedMicros")))).cast("int")
+    def role(struct: String, prefix: String) =
+      roleFields.map { case (f, n) => col(s"$struct.$f").as(s"${prefix}_$n") }
+    transfers
+      .withColumn("__req", practice(col("requestingPracticeAsid"), ym))
+      .withColumn("__snd", practice(col("sendingPracticeAsid"), ym))
+      .select(transfers.columns.toSeq.map(col) ++ role("__req", "requesting") ++
+        role("__snd", "sending"): _*)
+  }
 
   /** Enrich classified transfers with requesting/sending practice metadata,
     * as-of the transfer's request month, null-padded on miss. Two broadcast
@@ -238,9 +286,7 @@ object Enrichment {
     // frame must still CARRY the enrichment columns, null-padded — exactly
     // what the joins below would produce for it.
     if (months.isEmpty)
-      return Seq("requesting", "sending").flatMap(p => Seq(
-        s"${p}_practice_ods_code", s"${p}_practice_name",
-        s"${p}_practice_sicbl_ods_code", s"${p}_practice_sicbl_name"))
+      return Seq("requesting", "sending").flatMap(p => roleFields.map(f => s"${p}_${f._2}"))
         .foldLeft(transfers)((df, n) => df.withColumn(n, lit(null).cast("string")))
     val eff = effectiveAsOf(dim, months, Some(present))
     val reqDim = eff.select(

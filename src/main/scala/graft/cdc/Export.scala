@@ -85,17 +85,18 @@ object Export {
   private def cursorPath(outDir: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(outDir, "_graft_cursor")
 
-  /** Hadoop FileSystem for `outDir` — the cursor must live on the SAME
-    * store the day partitions land on (object store, HDFS, or local), not
-    * on whatever local disk the exporter process happens to run on.
+  /** Hadoop FileSystem for `outDir` — the cursor and the vacated-day
+    * deletes must go to the SAME store the day partitions land on (object
+    * store, HDFS, or local), not to whatever local disk the exporter
+    * process happens to run on.
     */
-  private def cursorFs(spark: org.apache.spark.sql.SparkSession,
-                       outDir: String): org.apache.hadoop.fs.FileSystem =
+  private def destFs(spark: org.apache.spark.sql.SparkSession,
+                     outDir: String): org.apache.hadoop.fs.FileSystem =
     cursorPath(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   def readCursor(spark: org.apache.spark.sql.SparkSession,
                  outDir: String): Option[Long] = {
-    val fs = cursorFs(spark, outDir)
+    val fs = destFs(spark, outDir)
     val p = cursorPath(outDir)
     if (!fs.exists(p)) None
     // an unreadable cursor — zero-length, non-numeric, or failing the
@@ -111,7 +112,7 @@ object Export {
 
   private def writeCursor(spark: org.apache.spark.sql.SparkSession,
                           outDir: String, epoch: Long): Unit = {
-    val fs = cursorFs(spark, outDir)
+    val fs = destFs(spark, outDir)
     val tmp = new org.apache.hadoop.fs.Path(outDir, "._graft_cursor.tmp")
     val out = fs.create(tmp, true)
     try out.write(epoch.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -151,12 +152,20 @@ object Export {
     * exported under the old day forever. Those days' current rows are then
     * re-read from the resolved snapshot and dynamically overwritten
     * (`partitionOverwriteMode=dynamic` — untouched day directories are not
-    * rewritten).
+    * rewritten); a day left with no rows is deleted through the
+    * destination's Hadoop FileSystem, like the partitions and the cursor.
+    *
+    * Cost: at most four Spark jobs and no cache. Two driver-side collects
+    * find the affected days — the changed rows' (repo, day), then the
+    * changed repos' days as of `sinceEpoch` through `lookupAll` (pruned to
+    * their buckets and keys, resolved bucket-locally). The write takes the
+    * exchange by day plus the write itself, and observes the days it wrote
+    * inside the write job. Work is O(changed rows + changed days' current
+    * rows), not O(table).
     *
     * Returns the rewritten day set (empty = nothing changed). The caller
     * owns the cursor: persist `asOf` (e.g. the table's head epoch) and pass
-    * it back as the next call's `sinceEpoch`. Cost is O(changed rows +
-    * changed days' current rows), not O(table).
+    * it back as the next call's `sinceEpoch`.
     */
   def exportDailyIncremental(table: graft.lake.LakeTable,
                              spark: org.apache.spark.sql.SparkSession,
@@ -165,40 +174,31 @@ object Export {
     val changes = table.changesSince(spark, sinceEpoch, asOf)
     if (changes.columns.isEmpty) return Seq.empty
     import spark.implicits._
-    val newDays = withDay(changes).select(col("date_requested_day"))
+    val changed = withDay(changes).select(col("repo"), col("date_requested_day"))
+      .as[(String, String)].collect()
     val movedFrom = {
-      val prior = table.snapshot(spark, asOf = sinceEpoch)
-      if (prior.columns.isEmpty) newDays.limit(0)
-      else withDay(prior.join(changes.select("repo").distinct(), Seq("repo"), "left_semi"))
-        .select(col("date_requested_day"))
+      val prior = table.lookupAll(spark, changed.map(_._1).distinct.toSeq, asOf = sinceEpoch)
+      if (prior.columns.isEmpty) Seq.empty
+      else withDay(prior).select(col("date_requested_day")).as[String].collect().toSeq
     }
-    val days = newDays.union(movedFrom).distinct().as[String].collect().toSeq.sorted
+    val days = (changed.map(_._2).toSeq ++ movedFrom).distinct.sorted
     if (days.isEmpty) return Seq.empty
-    // cached: the merge-on-read snapshot resolution (delta fold) is paid
-    // once, shared by the write action and the written-days collect below
-    val current = withDay(table.snapshot(spark, asOf))
+    val written = org.apache.spark.sql.Observation()
+    withDay(table.snapshot(spark, asOf))
       .filter(col("date_requested_day").isin(days: _*))
-      .cache()
-    val nonEmpty = try {
-      current
-        .repartition(col("date_requested_day"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("date_requested_day")
-        .parquet(outDir)
-      // dynamic overwrite only replaces partitions PRESENT in the written
-      // data — a day whose rows all moved away is written as nothing and its
-      // stale directory would survive; remove those explicitly
-      current.select("date_requested_day").distinct().as[String].collect().toSet
-    } finally current.unpersist()
+      .repartition(col("date_requested_day"))
+      .observe(written, collect_set(col("date_requested_day")).as("days"))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("date_requested_day")
+      .parquet(outDir)
+    // dynamic overwrite only replaces partitions PRESENT in the written
+    // data — a day whose rows all moved away is written as nothing and its
+    // stale directory would survive; remove those explicitly
+    val nonEmpty = written.get("days").asInstanceOf[scala.collection.Seq[String]].toSet
+    val fs = destFs(spark, outDir)
     days.filterNot(nonEmpty).foreach { d =>
-      val dir = java.nio.file.Paths.get(outDir, s"date_requested_day=$d")
-      if (java.nio.file.Files.isDirectory(dir)) {
-        val walk = java.nio.file.Files.walk(dir)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk.close()
-      }
+      fs.delete(new org.apache.hadoop.fs.Path(outDir, s"date_requested_day=$d"), true)
     }
     days
   }

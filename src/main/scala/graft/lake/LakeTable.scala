@@ -3,7 +3,6 @@ package graft.lake
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 import java.nio.file.{Files, Path, Paths}
@@ -39,8 +38,8 @@ final case class FileEntry(
       * alone: `ManifestFileIndex` hands Spark the exact (path, size) set and
       * no listing/stat round-trips happen per query — on an object store at
       * production scale, the per-query LIST calls are the metadata
-      * bottleneck this removes (the Iceberg/Delta planning shape). Empty on
-      * pre-r4 manifests → readers fall back to path listing.
+      * bottleneck this removes (the Iceberg/Delta planning shape). Every
+      * read needs them: an entry without leaves fails the read.
       */
     leaves: Seq[LeafFile] = Seq.empty,
 )
@@ -83,6 +82,10 @@ final case class Manifest(
   *    a hot bucket spreads over several tasks (SURVEY.md §4 skew row);
   *  - readers prune by bucket (and by manifest row counts) without listing
   *    the filesystem: the manifest is the only metadata round-trip;
+  *  - merge-on-read resolution is bucket-local: every file belongs to one
+  *    bucket, so one task reads all of a bucket's files and keeps the
+  *    newest version of each key (`ManifestRead.bucketLocal`) — snapshots,
+  *    lookups, compaction and rebucketing resolve with no exchange;
   *  - schema evolution: each manifest carries a schemaId + schema JSON;
   *    upserts with new nullable columns bump the schemaId and old files are
   *    read through the merged schema (Parquet by-name resolution fills
@@ -103,8 +106,8 @@ final class LakeTable(
     /** Merge-on-read: `mergeDelta` commits write ONLY the upsert rows (a
       * per-epoch delta file per touched bucket) instead of copy-on-writing
       * the whole bucket; `snapshot` resolves last-writer-wins per key by the
-      * per-row `__epoch` stamp, restricted to buckets that actually hold
-      * more than one live file. Commit cost is O(upserts), read cost is
+      * per-row `__epoch` stamp, bucket-locally and only in buckets that
+      * hold more than one live file. Commit cost is O(upserts), read cost is
       * bounded by `compactThreshold` (over-threshold buckets are compacted
       * back to one resolved file set inside the committing job).
       */
@@ -264,11 +267,16 @@ final class LakeTable(
   }
 
   /** Current snapshot as a DataFrame (bucket-pruned when `buckets` given).
-    * Merge-on-read tables resolve last-writer-wins per key, but ONLY over
-    * buckets holding >1 live file — freshly-compacted / single-commit
-    * buckets read straight through with no window shuffle. `key0` prunes by
-    * the per-file first-key-column bounds on top of bucket pruning (point
-    * reads open only the files whose range can hold the key).
+    * Merge-on-read tables resolve last-writer-wins per key, but ONLY in
+    * buckets holding >1 live file, and bucket-locally: one task reads all of
+    * such a bucket's files and keeps each key's newest version, with no
+    * exchange (`ManifestRead.bucketLocal`). Freshly-compacted /
+    * single-commit buckets read straight through. Predicates on key columns
+    * push below the resolution into the parquet readers; any other
+    * predicate applies to the resolved rows. The result reports no
+    * partitioning. `key0` prunes by the per-file first-key-column bounds on
+    * top of bucket pruning (point reads open only the files whose range can
+    * hold the key).
     *
     * key0 CONTRACT: the result is only correct for rows whose first key
     * column EQUALS key0 — every file that can hold a version of key0
@@ -289,20 +297,23 @@ final class LakeTable(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
         else if (!mergeOnRead) readEntries(spark, live, schema)
         else {
-          val withEpoch = schema.add(StructField("__epoch", LongType, nullable = true))
-          def read(fs: Seq[FileEntry]): DataFrame = readEntries(spark, fs, withEpoch)
-          val byBucket = live.groupBy(_.bucket).values.toSeq
-          val single = byBucket.filter(_.size == 1).flatten
-          val multi = byBucket.filter(_.size > 1).flatten
-          val parts = Seq(
-            if (single.isEmpty) None else Some(read(single)),
-            if (multi.isEmpty) None
-            else Some(resolveLatest(read(multi))),
-          ).flatten
-          parts.reduce(_.unionByName(_)).drop("__epoch")
+          val withEpoch = withEpochCol(schema)
+          val (single, multi) = byBucket(live).partition(_.size == 1)
+          Seq(
+            if (single.isEmpty) None else Some(readEntries(spark, single.flatten, withEpoch)),
+            if (multi.isEmpty) None else Some(bucketLocal(spark, multi, withEpoch, resolve = true)),
+          ).flatten.reduce(_.unionByName(_)).drop("__epoch")
         }
     }
   }
+
+  private def withEpochCol(schema: StructType): StructType =
+    schema.add(StructField("__epoch", LongType, nullable = true))
+
+  /** Live entries grouped by bucket, in bucket order; within a bucket in
+    * manifest (commit) order. */
+  private def byBucket(fs: Seq[FileEntry]): Seq[Seq[FileEntry]] =
+    fs.groupBy(_.bucket).toSeq.sortBy(_._1).map(_._2)
 
   /** Per-bucket compaction threshold in [compactThreshold, 2·compactThreshold). */
   private def effectiveThreshold(bucket: Int): Int =
@@ -344,24 +355,41 @@ final class LakeTable(
       FileEntry(p, b, s.rows, epoch, s.min0, s.max0, leavesOf(p))
     }
 
-  /** Parquet read of a manifest file-entry set: manifest-planned (zero
-    * listing — `ManifestFileIndex` over exact (path, size) pairs) when every
-    * entry carries its leaf files; legacy path-listing read for pre-r4
-    * manifests.
+  /** Absolute (path, size) of every leaf file of `fs`. Reads plan from
+    * these alone; an entry without leaves fails loudly. */
+  private def leafFiles(fs: Seq[FileEntry]): Seq[(String, Long)] = fs.flatMap { f =>
+    if (f.leaves.isEmpty)
+      throw new IllegalStateException(
+        s"manifest entry ${f.path} of $root records no leaf files — reads plan " +
+          "from the manifest's leaf list alone")
+    f.leaves.map(l => (s"$root/${f.path}/${l.name}", l.bytes))
+  }
+
+  /** Parquet read of a manifest file-entry set, manifest-planned (zero
+    * listing — `ManifestFileIndex` over exact (path, size) pairs).
     */
   private def readEntries(spark: SparkSession, fs: Seq[FileEntry],
                           schema: StructType): DataFrame =
-    if (fs.nonEmpty && fs.forall(_.leaves.nonEmpty))
-      org.apache.spark.sql.graftbridge.ManifestRead.parquet(spark,
-        fs.flatMap(f => f.leaves.map(l => (s"$root/${f.path}/${l.name}", l.bytes))),
-        schema)
-    else spark.read.schema(schema).parquet(fs.map(f => s"$root/${f.path}"): _*)
+    org.apache.spark.sql.graftbridge.ManifestRead.parquet(spark, leafFiles(fs), schema)
+
+  /** The bucket-local read: each bucket is read whole by one task, which
+    * resolves last-writer-wins by `__epoch` (`resolve`) or concatenates the
+    * bucket's files. `schema` must carry `__epoch` when resolving.
+    */
+  private def bucketLocal(spark: SparkSession, buckets: Seq[Seq[FileEntry]],
+                          schema: StructType, resolve: Boolean): DataFrame =
+    org.apache.spark.sql.graftbridge.ManifestRead.bucketLocal(spark,
+      buckets.map(leafFiles), schema, keyColumns,
+      if (resolve) Some("__epoch") else None)
 
   /** Rewrite each over-threshold bucket's COMPACTABLE files (older than the
-    * `changeRetention` horizon) into one file set. `resolve` = drop
-    * superseded key versions (merge-on-read tables); append-only tables
-    * concatenate. Row counts for the concat path come from the manifest (no
-    * job); the resolve path recounts. Bounds are derived min-of-mins /
+    * `changeRetention` horizon) into one file set, in ONE job: a bucket-local
+    * read (each bucket whole in one task) that resolves superseded key
+    * versions away (`resolve`, merge-on-read tables) or concatenates
+    * (append-only tables), written back by the same tasks — no exchange, one
+    * file per bucket, per-row `__epoch` preserved. Row counts for the concat
+    * path come from the manifest; the resolve path counts its rows inside
+    * the write job (`Dataset.observe`). Bounds are derived min-of-mins /
     * max-of-maxs — a superset of the true range after resolution, which is
     * safe for pruning. Returns the updated live-file list, or `files`
     * unchanged when nothing crosses its threshold.
@@ -375,23 +403,23 @@ final class LakeTable(
     }.keySet
     if (overfull.isEmpty) return files
     val cInput = files.filter(f => overfull.contains(f.bucket) && f.epochAdded <= horizon)
+    val inByBucket = cInput.groupBy(_.bucket)
     val cDirRel = f"data/e$epoch%012dc"
-    val withEpochSchema = schema.add(StructField("__epoch", LongType, nullable = true))
-    val raw = readEntries(spark, cInput, withEpochSchema)
-    val rewritten = (if (resolve) resolveLatest(raw) else raw)
+    val read = bucketLocal(spark, byBucket(cInput), withEpochCol(schema), resolve)
       .withColumn("__bucket", bucketCol)
-    rewritten
-      .repartition(math.max(1, math.min(currentNumBuckets, overfull.size)) * saltFactor,
-        col("__bucket"), saltCol)
-      .sortWithinPartitions((col("__bucket") +: keyColumns.map(col)): _*)
+    val counted = if (resolve) Some(org.apache.spark.sql.Observation()) else None
+    counted.fold(read) { o =>
+      val perBucket = overfull.toSeq.sorted.map(b => count_if(col("__bucket") === b).as(b.toString))
+      read.observe(o, perBucket.head, perBucket.tail: _*)
+    }.sortWithinPartitions((col("__bucket") +: keyColumns.map(col)): _*)
       .write.mode(SaveMode.Overwrite).option("compression", LakeTable.compression).partitionBy("__bucket")
       .parquet(s"$root/$cDirRel")
-    val inByBucket = cInput.groupBy(_.bucket)
-    val rowsByBucket: Map[Int, Long] =
-      if (resolve) spark.read.parquet(s"$root/$cDirRel")
-        .groupBy("__bucket").count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      else inByBucket.map { case (b, fs) => b -> fs.map(_.rows).sum }
+    val rowsByBucket: Map[Int, Long] = counted match {
+      case Some(o) =>
+        val n = o.get
+        overfull.map(b => b -> n(b.toString).asInstanceOf[Long]).filter(_._2 > 0).toMap
+      case None => inByBucket.map { case (b, fs) => b -> fs.map(_.rows).sum }
+    }
     // Derived bounds must use the SAME comparator that wrote them and that
     // mayContain prunes with — UTF8String byte order. Scala's String
     // ordering (UTF-16 code units) disagrees for supplementary characters
@@ -448,17 +476,6 @@ final class LakeTable(
     )
     writeManifestAtomically(manifest)
     manifest
-  }
-
-  /** Last-writer-wins per key: one row per key per epoch is guaranteed by
-    * the one-commit-per-epoch manifest protocol, so (key, __epoch desc) has
-    * no ties and the resolution is deterministic.
-    */
-  private def resolveLatest(df: DataFrame): DataFrame = {
-    val w = Window.partitionBy(keyColumns.map(col): _*)
-      .orderBy(col("__epoch").desc_nulls_last)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
   }
 
   /** Schema evolution: merged = parent schema ∪ upsert schema (by name);
@@ -525,10 +542,11 @@ final class LakeTable(
   /** Merge-on-read upsert: writes ONLY the upsert rows as a per-epoch delta
     * (one file set per touched bucket); existing rows with the same key stay
     * in older files and lose at read time to the higher `__epoch` stamp
-    * (resolveLatest). Write amplification is O(upserts) even when hot
-    * buckets are touched every epoch, at the cost of a read-side resolution
-    * that stays bounded: any bucket exceeding `compactThreshold` live files
-    * is compacted back to a single file set inside the committing job.
+    * (bucket-local resolution in `snapshot`). Write amplification is
+    * O(upserts) even when hot buckets are touched every epoch, at the cost
+    * of a read-side resolution that stays bounded: any bucket exceeding
+    * `compactThreshold` live files is compacted back to a single file set
+    * inside the committing job.
     * For `mergeOnRead` tables (only they resolve versions at read time).
     * New nullable upsert columns evolve the schema (`evolveSchema`);
     * re-committing an epoch is a no-op, and a crash before the manifest
@@ -536,8 +554,8 @@ final class LakeTable(
     *
     * REQUIRES one row per key per commit (the classify fold emits exactly
     * that): two versions of a key in ONE batch share an `__epoch` stamp,
-    * and `resolveLatest` would break the tie by partition read order —
-    * nondeterministic across replays.
+    * and resolution would break the tie by read order — nondeterministic
+    * across replays.
     */
   def mergeDelta(upserts: DataFrame, epoch: Long,
                  metadata: Map[String, String] = Map.empty,
@@ -744,8 +762,9 @@ final class LakeTable(
     * bucket's files (manifest-pruned, no listing; within the bucket the
     * per-file key bounds prune further) and the key equality pushes into the
     * parquet scan, where the within-bucket key sort gives row-group min/max
-    * pruning. Merge-on-read resolution applies as usual. `key` must bind
-    * every bucket column (extra key columns just filter). The bucket id
+    * pruning. A multi-file bucket resolves bucket-locally, in the one task
+    * that reads it (see `snapshot`). `key` must bind every bucket column
+    * (extra key columns just filter). The bucket id
     * targets the AS-OF manifest's bucket count, so time travel across a
     * rebucket resolves against the layout that was live then; each probe
     * value is cast to the table schema's column type before hashing (a
@@ -760,20 +779,46 @@ final class LakeTable(
       case None => spark.emptyDataFrame
       case Some(m) =>
         val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-        import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Pmod, XxHash64}
-        val hash = XxHash64(bucketCols.map { c =>
-          Cast(Literal(key(c)), schema(c).dataType)
-        }, 42L) // functions.xxhash64 seed
-        val bucket = Pmod(hash, Literal(m.numBuckets.toLong))
-          .eval().asInstanceOf[Long].toInt
         val key0 = keyColumns.headOption
           .filter(k0 => key.contains(k0) &&
             schema(k0).dataType == org.apache.spark.sql.types.StringType)
           .map(k0 => key(k0).toString)
-        key.foldLeft(snapshot(spark, asOf, buckets = Some(Set(bucket)), key0 = key0)) {
+        key.foldLeft(snapshot(spark, asOf, buckets = Some(Set(bucketOf(m, schema, key))),
+            key0 = key0)) {
           case (df, (k, v)) => df.filter(col(k) === lit(v))
         }
     }
+  }
+
+  /** Multi-key point read for a table keyed and bucketed by ONE column: the
+    * rows of `values` as of `asOf`. Like `lookup`, it opens only the buckets
+    * the values hash to (computed driver-side), pushes the key IN-list into
+    * the parquet readers and resolves bucket-locally — the incremental
+    * export reads the changed keys' prior rows this way.
+    */
+  def lookupAll(spark: SparkSession, values: Seq[Any],
+                asOf: Long = Long.MaxValue): DataFrame = {
+    require(keyColumns.size == 1 && bucketCols == keyColumns,
+      s"lookupAll needs one key column that is also the bucket column: $keyColumns")
+    val k = keyColumns.head
+    manifestAsOf(asOf) match {
+      case None => spark.emptyDataFrame
+      case Some(m) =>
+        val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+        val buckets = values.map(v => bucketOf(m, schema, Map(k -> v))).toSet
+        snapshot(spark, asOf, buckets = Some(buckets)).filter(col(k).isin(values: _*))
+    }
+  }
+
+  /** The bucket `key` hashes to in manifest `m`'s layout, by evaluating the
+    * writers' Catalyst hash on the driver, each value cast to its column's
+    * type first. */
+  private def bucketOf(m: Manifest, schema: StructType, key: Map[String, Any]): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Pmod, XxHash64}
+    val hash = XxHash64(bucketCols.map { c =>
+      Cast(Literal(key(c)), schema(c).dataType)
+    }, 42L) // functions.xxhash64 seed
+    Pmod(hash, Literal(m.numBuckets.toLong)).eval().asInstanceOf[Long].toInt
   }
 
   /** Incremental (CDC) read: every SURVIVING row version committed in
@@ -782,8 +827,7 @@ final class LakeTable(
     * epoch e only holds rows stamped ≤ e, so `epochAdded > since` is a
     * correct superset even across compaction rewrites), then the exact
     * row-level `__epoch` filter, which parquet min/max stats also prune.
-    * Rows from files predating the per-row stamp (legacy) read as null and
-    * are excluded. The result carries a `_commit_epoch` column.
+    * The result carries a `_commit_epoch` column.
     *
     * Compaction semantics: merge-on-read compaction resolves last-writer-
     * wins and physically DROPS superseded versions, so a consumer whose
@@ -801,7 +845,7 @@ final class LakeTable(
       case None => spark.emptyDataFrame
       case Some(m) =>
         val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-        val withEpoch = schema.add(StructField("__epoch", LongType, nullable = true))
+        val withEpoch = withEpochCol(schema)
         val candidates = m.files.filter(_.epochAdded > sinceEpoch)
         if (candidates.isEmpty)
           spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -843,10 +887,12 @@ final class LakeTable(
     * the bucket count must grow with the data (thousands at 100 TB, not the
     * handful a small table starts with). One full rewrite committed as a
     * normal epoch (exactly-once semantics apply); merge-on-read tables are
-    * resolved during the rewrite, so the new layout starts compact. Later
-    * commits and reads pick up the new count from the manifest
-    * (`currentNumBuckets`). Point lookups hash with the AS-OF manifest's
-    * bucket count, so time travel across a rebucket stays correct. NOTE:
+    * resolved bucket-locally on the OLD layout (no exchange), then the one
+    * repartition moves rows to the new bucket count, so the new layout
+    * starts compact. Later commits and reads pick up the new count from the
+    * manifest (`currentNumBuckets`). Point lookups hash with the AS-OF
+    * manifest's bucket count, so time travel across a rebucket stays
+    * correct. NOTE:
     * the rewrite resolves merge-on-read tables regardless of
     * `changeRetention` — a `changesSince` consumer lagging past a rebucket
     * sees only surviving versions (schedule rebuckets behind the slowest
@@ -862,11 +908,8 @@ final class LakeTable(
     val schema = DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]
     // ALWAYS carry the per-row commit stamp through the rewrite — dropping
     // it would break changesSince for append-only tables after a rebucket
-    val withEpochSchema =
-      schema.add(StructField("__epoch", LongType, nullable = true))
-    val all = readEntries(spark, parent.files, withEpochSchema)
-    val resolved = if (mergeOnRead) resolveLatest(all) else all
-    val rewritten = resolved.withColumn("__bucket", bucketColFor(newNumBuckets))
+    val rewritten = bucketLocal(spark, byBucket(parent.files), withEpochCol(schema),
+      resolve = mergeOnRead).withColumn("__bucket", bucketColFor(newNumBuckets))
 
     val dirRel = f"data/e$epoch%012dr"
     rewritten

@@ -190,4 +190,29 @@ class ResumeAndExportSpec extends SparkSpec {
       .select("repo", "date_requested_day").as[(String, String)].collect().toSet
     assert(back == Set(("r1", "2020-01-02"), ("r2", "2020-01-02")))
   }
+
+  test("incremental export clears a vacated day on a file: URI destination") {
+    // the day partitions and the cursor go through the destination's Hadoop
+    // FileSystem; the vacated-day delete must too — a java.nio path built
+    // from "file:/…" is relative and misses the day directory
+    import graft.lake.LakeTable
+    val t = new LakeTable(tmpDir("move-uri") + "/t", numBuckets = 2,
+      keyColumns = Seq("repo"), mergeOnRead = true)
+    val d1 = 1577836800000000L // 2020-01-01
+    val d2 = d1 + 86400L * 1000000L // 2020-01-02
+    t.mergeDelta(Seq(("r1", d1), ("r2", d2)).toDF("repo", "dateRequestedMicros"), 0L)
+    val dir = tmpDir("move-uri-out")
+    val out = "file:" + dir
+    assert(Export.exportDailyIncremental(t, spark, out, sinceEpoch = -1L, asOf = 0L)
+      == Seq("2020-01-01", "2020-01-02"))
+
+    t.mergeDelta(Seq(("r1", d2)).toDF("repo", "dateRequestedMicros"), 1L)
+    assert(Export.exportDailyIncremental(t, spark, out, sinceEpoch = 0L, asOf = 1L)
+      == Seq("2020-01-01", "2020-01-02"))
+    assert(!new java.io.File(dir, "date_requested_day=2020-01-01").exists(),
+      "vacated day directory must be removed")
+    val back = spark.read.parquet(out)
+      .select("repo", "date_requested_day").as[(String, String)].collect().toSet
+    assert(back == Set(("r1", "2020-01-02"), ("r2", "2020-01-02")))
+  }
 }
