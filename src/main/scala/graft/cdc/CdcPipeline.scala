@@ -1,7 +1,7 @@
 package graft.cdc
 
 import graft.classifier.{SpineMessage, TransferClassifier}
-import graft.lake.{LakeTable, Manifest}
+import graft.lake.{BucketAligned, LakeTable, Manifest}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -760,9 +760,9 @@ final class CdcEngine(
     val newEvents = rawEvents.withColumn("epoch", lit(epoch)).as[ChangeEvent]
 
     // job descriptions are thread-local — tag each of the epoch's jobs so
-    // the Spark UI / ApplyProfile attribute wall-clock to a pipeline stage
-    // instead of an anonymous closure (the commit futures tag their own
-    // threads below)
+    // the Spark UI and perfbench's trace (`--trace 1`) attribute wall-clock
+    // to a pipeline stage instead of an anonymous closure (the commit
+    // futures tag their own threads below)
     def desc(d: String): Unit =
       spark.sparkContext.setJobDescription(s"cdc epoch $epoch: $d")
 
@@ -826,8 +826,9 @@ final class CdcEngine(
       pendingFresh.map(_.eventStats.collect {
         case (b, s) if touched(b) => s.rows }.sum).getOrElse(0L)
     // Factor 4.0: forcing the semi-join at prior ≈ batch cuts fold-shuffle
-    // bytes ~2.5× but costs more wall per epoch (ApplyProfile, 4 epochs ×
-    // ~112k events: 4.3/2.9/2.9 s → 6.2/4.3/6.0 s, OPTIMIZATION_r07.md §9)
+    // bytes ~2.5× but costs more wall per epoch (4 epochs × ~112k events:
+    // 4.3/2.9/2.9 s → 6.2/4.3/6.0 s, OPTIMIZATION_r07.md §9; re-measure
+    // per phase with perfbench's `--trace 1`)
     // — the distinct-repos build + join passes outweigh shipping prior rows
     // to the fold's cheap emit-on-change exit until prior is several times
     // the batch.
@@ -976,7 +977,7 @@ final class CdcEngine(
         // only when the caller declared its dim coverage (see dimMonths)
         activeDimMonths.map(_ => "missingDimMonthTransfers" -> total(7))
 
-      CdcEngine.FoldResult(epoch, out, upserts, freshEvents, touched, eventStats,
+      CdcEngine.FoldResult(epoch, out, upserts, freshEvents, touched, nb, eventStats,
         transferStats, meta, lineage, tLineage)
     } catch {
       case t: Throwable =>
@@ -998,29 +999,24 @@ final class CdcEngine(
     val epoch = f.epoch
     def desc(d: String): Unit =
       spark.sparkContext.setJobDescription(s"cdc epoch $epoch: $d")
-    // the shared summary assumed both tables bucket identically (they do
-    // unless someone rebuckets one table out-of-band) — fall back to the
-    // in-commit count if not
-    val sameBucketing = transfers.currentNumBuckets == state.currentNumBuckets
+    // every sink frame is a narrow projection of the fold output, which sits
+    // one bucket per partition under the state layout's bucket count; a
+    // table rebucketed out of band to another count takes the lake's
+    // unaligned path instead
+    val transferAligned = Some(BucketAligned(f.numBuckets, f.transferStats))
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     val stateF = Future {
       desc("state commit (appendNew)")
       // assumeNew: the fold already guarantees first-seen-only events
       state.appendNew(f.freshEvents, epoch, metadata = f.meta, lineage = f.lineage,
-        touchedBuckets = Some(f.touched), assumeNew = true,
-        precomputedStats = Some(f.eventStats), compactInline = inlineCompaction,
-        alignedInput = true)
+        assumeNew = true, compactInline = inlineCompaction,
+        aligned = Some(BucketAligned(f.numBuckets, f.eventStats)))
     }
     val transfersF = Future {
       desc("transfers commit (mergeDelta)")
-      transfers.mergeDelta(f.upserts, epoch,
-        metadata = f.meta, lineage = f.tLineage, touchedBuckets = Some(f.touched),
-        precomputedStats = if (sameBucketing) Some(f.transferStats) else None,
-        compactInline = inlineCompaction,
-        // the fold shuffled by STATE's bucket key — transfers can consume
-        // that partitioning only while the two tables bucket identically
-        alignedInput = sameBucketing)
+      transfers.mergeDelta(f.upserts, epoch, metadata = f.meta, lineage = f.tLineage,
+        compactInline = inlineCompaction, aligned = transferAligned)
     }
     val enrichedF = enriched.map { tbl =>
       Future {
@@ -1045,21 +1041,13 @@ final class CdcEngine(
         }
         nonEmptyPending match {
           case None =>
-            // fast path (every epoch without pending retro work): same rows
-            // per bucket as the transfers commit, so its precomputed stats
-            // apply when the bucketing matches
-            val sameB = tbl.currentNumBuckets == state.currentNumBuckets
-            tbl.mergeDelta(base, epoch,
-              metadata = meta, lineage = f.tLineage,
-              touchedBuckets = Some(f.touched),
-              precomputedStats = if (sameB) Some(f.transferStats) else None,
-              compactInline = inlineCompaction,
-              // enrichWith is a narrow projection of the upserts, so the
-              // fold's partitioning survives to this write too
-              alignedInput = sameB)
+            // fast path (every epoch without pending retro work): the same
+            // rows per bucket as the transfers commit
+            tbl.mergeDelta(base, epoch, metadata = meta, lineage = f.tLineage,
+              compactInline = inlineCompaction, aligned = transferAligned)
           case Some((c, n)) =>
-            // retro rows change the per-bucket row set — stats/touched are
-            // recomputed by the commit
+            // retro rows change the per-bucket row set — the commit takes
+            // its own stats
             try tbl.mergeDelta(base.unionByName(c), epoch,
               metadata = meta, lineage = f.tLineage + ("reEnriched" -> n),
               compactInline = inlineCompaction)
@@ -1374,6 +1362,9 @@ object CdcEngine {
       upserts: DataFrame,
       freshEvents: DataFrame,
       touched: Set[Int],
+      /** The bucket count the fold partitioned `out` by, one bucket per
+        * partition (the state table's live count). */
+      numBuckets: Int,
       eventStats: Map[Int, graft.lake.BucketStats],
       transferStats: Map[Int, graft.lake.BucketStats],
       meta: Map[String, String],

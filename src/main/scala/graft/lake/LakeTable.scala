@@ -49,6 +49,13 @@ final case class LeafFile(name: String, bytes: Long)
 
 /** Per-bucket write statistics: exact row count + first-key-column bounds. */
 final case class BucketStats(rows: Long, min0: Option[String], max0: Option[String])
+
+/** A commit input that is already partitioned one bucket per partition
+  * under a `numBuckets`-bucket layout of the table's bucket hash, with its
+  * exact per-bucket stats (they become the manifest's counts and bounds).
+  */
+final case class BucketAligned(numBuckets: Int, stats: Map[Int, BucketStats])
+
 final case class Manifest(
     epoch: Long,
     parentEpoch: Long, // -1 for first
@@ -77,9 +84,12 @@ final case class Manifest(
   *  - data is hash-bucketed on the merge key into `numBuckets` buckets
   *    (thousands on a real cluster); a commit writes only the rows of the
   *    buckets its batch touches — commit cost is O(batch), not O(table);
-  *  - the commit shuffle is `repartition(touched buckets, bucketCol, salt)`
-  *    (skipped when the caller's input is already bucket-partitioned), so
-  *    a hot bucket spreads over several tasks (SURVEY.md §4 skew row);
+  *  - a commit whose input is already partitioned one bucket per partition
+  *    under the table's live layout (`BucketAligned`, as the engine's fold
+  *    delivers it) writes with no shuffle; any other input pays one stats
+  *    query, whose exact per-bucket counts fix the touched buckets and the
+  *    salt, and `repartition(touched buckets × salt, bucket, salt)`, so a
+  *    hot bucket spreads over several tasks (SURVEY.md §4 skew row);
   *  - readers prune by bucket (and by manifest row counts) without listing
   *    the filesystem: the manifest is the only metadata round-trip;
   *  - merge-on-read resolution is bucket-local: every file belongs to one
@@ -187,9 +197,7 @@ final class LakeTable(
     */
   def bornWith(field: String): Boolean = {
     val es = committedEpochs()
-    es.nonEmpty && manifestAt(es.min).exists(m =>
-      DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-        .fieldNames.contains(field))
+    es.nonEmpty && manifestAt(es.min).exists(m => schemaOf(m).fieldNames.contains(field))
   }
 
   /** Time travel: newest manifest with epoch ≤ asOf. */
@@ -219,18 +227,16 @@ final class LakeTable(
     */
   def currentNumBuckets: Int = latestManifest().map(_.numBuckets).getOrElse(numBuckets)
 
-  def bucketCol: Column =
-    pmod(xxhash64(bucketCols.map(col): _*), lit(currentNumBuckets)).cast("int")
+  def bucketCol: Column = bucketColFor(currentNumBuckets)
 
   private def bucketColFor(n: Int): Column =
     pmod(xxhash64(bucketCols.map(col): _*), lit(n)).cast("int")
 
-  /** Salt for the merge shuffle: spreads one bucket's rows over several
+  /** Salt for the commit shuffle: spreads one bucket's rows over several
     * tasks when a mega-key makes a bucket hot (north-star skew handling).
     * Hashes the FULL key so salted sub-partitions stay deterministic.
     */
   val saltFactor: Int = 4
-  private def saltCol: Column = saltColFor(saltFactor)
   private def saltColFor(s: Int): Column =
     if (s <= 1) lit(0)
     else pmod(xxhash64((keyColumns.map(col) :+ lit("salt")): _*), lit(s)).cast("int")
@@ -242,17 +248,12 @@ final class LakeTable(
     */
   private val saltRowsPerTask = 131072L
 
-  /** Adaptive salt: full `saltFactor` only when the caller's per-bucket
-    * stats show a bucket big enough to need spreading (or when no stats are
-    * known — compaction/bulk paths keep the conservative default).
+  /** Adaptive salt from a commit's exact per-bucket stats (non-empty): full
+    * `saltFactor` only when a bucket is big enough to need spreading.
     */
-  private def effectiveSalt(maxBucketRows: Option[Long]): Int =
-    maxBucketRows match {
-      case Some(rows) =>
-        math.max(1L, math.min(saltFactor.toLong,
-          (rows + saltRowsPerTask - 1) / saltRowsPerTask)).toInt
-      case None => saltFactor
-    }
+  private def effectiveSalt(stats: Map[Int, BucketStats]): Int =
+    math.max(1L, math.min(saltFactor.toLong,
+      (stats.values.map(_.rows).max + saltRowsPerTask - 1) / saltRowsPerTask)).toInt
 
   /** File-level key-bounds check with Spark's own string comparator
     * (UTF8String binary order — what min/max on StringType produced):
@@ -290,7 +291,7 @@ final class LakeTable(
     manifestAsOf(asOf) match {
       case None => spark.emptyDataFrame
       case Some(m) =>
-        val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+        val schema = schemaOf(m)
         val bucketLive = buckets.fold(m.files)(bs => m.files.filter(f => bs.contains(f.bucket)))
         val live = key0.fold(bucketLive)(v => bucketLive.filter(f => mayContain(f, v)))
         if (live.isEmpty) spark.createDataFrame(
@@ -382,21 +383,30 @@ final class LakeTable(
       buckets.map(leafFiles), schema, keyColumns,
       if (resolve) Some("__epoch") else None)
 
+  /** The one bucket write: rows sorted within each partition by (bucket,
+    * key) — the key order bucket-local resolution merges on — into one
+    * directory per bucket under `dirRel`.
+    */
+  private def writeBuckets(df: DataFrame, dirRel: String): Unit =
+    df.sortWithinPartitions((col("__bucket") +: keyColumns.map(col)): _*)
+      .write.mode(SaveMode.Overwrite).option("compression", LakeTable.compression)
+      .partitionBy("__bucket").parquet(s"$root/$dirRel")
+
   /** Rewrite each over-threshold bucket's COMPACTABLE files (older than the
     * `changeRetention` horizon) into one file set, in ONE job: a bucket-local
     * read (each bucket whole in one task) that resolves superseded key
-    * versions away (`resolve`, merge-on-read tables) or concatenates
-    * (append-only tables), written back by the same tasks — no exchange, one
-    * file per bucket, per-row `__epoch` preserved. Row counts for the concat
-    * path come from the manifest; the resolve path counts its rows inside
-    * the write job (`Dataset.observe`). Bounds are derived min-of-mins /
+    * versions away (merge-on-read tables) or concatenates (append-only
+    * tables), written back by the same tasks — no exchange, one file per
+    * bucket, per-row `__epoch` preserved. Row counts for the concat path
+    * come from the manifest; the resolve path counts its rows inside the
+    * write job (`Dataset.observe`). Bounds are derived min-of-mins /
     * max-of-maxs — a superset of the true range after resolution, which is
-    * safe for pruning. Returns the updated live-file list, or `files`
-    * unchanged when nothing crosses its threshold.
+    * safe for pruning. `nb` is the layout's bucket count. Returns the
+    * updated live-file list, or `files` unchanged when nothing crosses its
+    * threshold.
     */
   private def compactOverfull(spark: SparkSession, files: Seq[FileEntry],
-                              schema: StructType, epoch: Long,
-                              resolve: Boolean): Seq[FileEntry] = {
+                              schema: StructType, epoch: Long, nb: Int): Seq[FileEntry] = {
     val horizon = epoch - changeRetention
     val overfull = files.groupBy(_.bucket).filter { case (b, fs) =>
       fs.count(_.epochAdded <= horizon) > effectiveThreshold(b)
@@ -405,15 +415,13 @@ final class LakeTable(
     val cInput = files.filter(f => overfull.contains(f.bucket) && f.epochAdded <= horizon)
     val inByBucket = cInput.groupBy(_.bucket)
     val cDirRel = f"data/e$epoch%012dc"
-    val read = bucketLocal(spark, byBucket(cInput), withEpochCol(schema), resolve)
-      .withColumn("__bucket", bucketCol)
-    val counted = if (resolve) Some(org.apache.spark.sql.Observation()) else None
-    counted.fold(read) { o =>
+    val read = bucketLocal(spark, byBucket(cInput), withEpochCol(schema), mergeOnRead)
+      .withColumn("__bucket", bucketColFor(nb))
+    val counted = if (mergeOnRead) Some(org.apache.spark.sql.Observation()) else None
+    writeBuckets(counted.fold(read) { o =>
       val perBucket = overfull.toSeq.sorted.map(b => count_if(col("__bucket") === b).as(b.toString))
       read.observe(o, perBucket.head, perBucket.tail: _*)
-    }.sortWithinPartitions((col("__bucket") +: keyColumns.map(col)): _*)
-      .write.mode(SaveMode.Overwrite).option("compression", LakeTable.compression).partitionBy("__bucket")
-      .parquet(s"$root/$cDirRel")
+    }, cDirRel)
     val rowsByBucket: Map[Int, Long] = counted match {
       case Some(o) =>
         val n = o.get
@@ -453,29 +461,62 @@ final class LakeTable(
     * "Off the ingest path" means interleaved between applies (or in the
     * scheduler slot applies otherwise idle in), not parallel with one.
     */
-  def compact(spark: SparkSession, epoch: Long): Manifest = {
+  def compact(spark: SparkSession, epoch: Long): Manifest =
+    publish(epoch, "compact") { parent =>
+      val p = parent.getOrElse(
+        throw new IllegalStateException("compact requires an existing table"))
+      val files = compactOverfull(spark, p.files, schemaOf(p), epoch, p.numBuckets)
+      if (files eq p.files) None
+      else Some(Staged(files, p.schemaId, p.schemaJson, p.numBuckets, p.metadata,
+        Map("compaction" -> 1L)))
+    }
+
+  private def schemaOf(m: Manifest): StructType =
+    DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+
+  /** A commit's outcome before it is published: the complete new live file
+    * set and the manifest fields the commit sets.
+    */
+  private case class Staged(files: Seq[FileEntry], schemaId: Int, schemaJson: String,
+                            numBuckets: Int, metadata: Map[String, String],
+                            lineage: Map[String, Long])
+
+  /** The one publish step of every commit. An epoch already committed
+    * returns its manifest, which must be of `kind` (`committedAs`);
+    * otherwise the epoch must come after the parent (the latest manifest,
+    * read once here). `stage` then writes the commit's data against the
+    * parent and returns what to publish — None means there is nothing to
+    * commit, and the parent is returned unpublished — and the manifest,
+    * with its `totalRows` lineage, is linked atomically. Re-committing an
+    * epoch is therefore a no-op, and a crash before the manifest link
+    * leaves only invisible orphan data files.
+    */
+  private def publish(epoch: Long, kind: String)(
+      stage: Option[Manifest] => Option[Staged]): Manifest = {
     if (Files.exists(manifestPath(epoch)))
-      return committedAs(epoch, "compact")
-    val parent = latestManifest().getOrElse(
-      throw new IllegalStateException("compact requires an existing table"))
-    require(parent.epoch < epoch, s"epoch $epoch not after ${parent.epoch}")
-    val schema = DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]
-    val files = compactOverfull(spark, parent.files, schema, epoch, resolve = mergeOnRead)
-    if (files eq parent.files) return parent
-    val manifest = Manifest(
-      epoch = epoch,
-      parentEpoch = parent.epoch,
-      schemaId = parent.schemaId,
-      schemaJson = parent.schemaJson,
-      keyColumns = keyColumns,
-      kind = "compact",
-      numBuckets = parent.numBuckets,
-      files = files,
-      metadata = parent.metadata,
-      lineage = Map("totalRows" -> files.map(_.rows).sum, "compaction" -> 1L),
-    )
-    writeManifestAtomically(manifest)
-    manifest
+      return committedAs(epoch, kind)
+    val parent = latestManifest()
+    require(parent.forall(_.epoch < epoch), s"epoch $epoch not after ${parent.map(_.epoch)}")
+    stage(parent) match {
+      case None => parent.get
+      case Some(s) =>
+        val manifest = Manifest(
+          epoch = epoch,
+          parentEpoch = parent.map(_.epoch).getOrElse(-1L),
+          schemaId = s.schemaId,
+          schemaJson = s.schemaJson,
+          keyColumns = keyColumns,
+          numBuckets = s.numBuckets,
+          files = s.files,
+          metadata = s.metadata,
+          // totalRows is PHYSICAL rows for a merge-on-read table (superseded
+          // versions included until compaction)
+          lineage = s.lineage ++ Map("totalRows" -> s.files.map(_.rows).sum),
+          kind = kind,
+        )
+        writeManifestAtomically(manifest)
+        manifest
+    }
   }
 
   /** Schema evolution: merged = parent schema ∪ upsert schema (by name);
@@ -492,7 +533,7 @@ final class LakeTable(
     val mergedSchema = parent match {
       case None => upsertSchema
       case Some(p) =>
-        val old = DataType.fromJson(p.schemaJson).asInstanceOf[StructType]
+        val old = schemaOf(p)
         val widened = old.fields.map { f =>
           upsertSchema.fields.find(_.name == f.name) match {
             case Some(u)
@@ -546,11 +587,10 @@ final class LakeTable(
     * O(upserts) even when hot buckets are touched every epoch, at the cost
     * of a read-side resolution that stays bounded: any bucket exceeding
     * `compactThreshold` live files is compacted back to a single file set
-    * inside the committing job.
-    * For `mergeOnRead` tables (only they resolve versions at read time).
-    * New nullable upsert columns evolve the schema (`evolveSchema`);
-    * re-committing an epoch is a no-op, and a crash before the manifest
-    * link leaves only invisible orphan data files.
+    * inside the committing job. Only a `mergeOnRead` table resolves
+    * versions at read time, so any other table refuses the call. New
+    * nullable upsert columns evolve the schema (`evolveSchema`); exactly-once
+    * and crash atomicity come from `publish`.
     *
     * REQUIRES one row per key per commit (the classify fold emits exactly
     * that): two versions of a key in ONE batch share an `__epoch` stamp,
@@ -560,94 +600,32 @@ final class LakeTable(
   def mergeDelta(upserts: DataFrame, epoch: Long,
                  metadata: Map[String, String] = Map.empty,
                  lineage: Map[String, Long] = Map.empty,
-                 touchedBuckets: Option[Set[Int]] = None,
-                 /** Per-bucket stats of `upserts` when the caller already
-                   * computed them (must be exact — they become the manifest
-                   * counts/bounds); saves one aggregation job per commit.
-                   */
-                 precomputedStats: Option[Map[Int, BucketStats]] = None,
                  /** false ⇒ skip inline compaction; the caller runs
                    * `compact()` as its own maintenance epochs so ingest
                    * commit latency stays flat.
                    */
                  compactInline: Boolean = true,
-                 /** true ⇒ the caller guarantees `upserts`' PHYSICAL
-                   * partitioning already co-locates each bucket's rows
-                   * (the engine's fold shuffle keys on this table's
-                   * bucketCol, and every projection in between is narrow)
-                   * — the commit then writes with NO repartition of its
-                   * own: zero additional shuffle, ~one file per touched
-                   * bucket. Correctness does not depend on the contract
-                   * (the manifest lists whatever files land under each
-                   * bucket dir); a broken contract only multiplies files.
+                 /** `upserts` is already partitioned one bucket per
+                   * partition (the engine's fold shuffle keys on the bucket
+                   * hash, and every projection after it is narrow), with
+                   * these exact stats. Used only when its bucket count is
+                   * the table's live one: the commit then writes with no
+                   * shuffle and no stats query. Correctness does not depend
+                   * on the partitioning (the manifest lists whatever files
+                   * land under each bucket dir); a wrong one only
+                   * multiplies files.
                    */
-                 alignedInput: Boolean = false,
+                 aligned: Option[BucketAligned] = None,
                  /** Manifest kind of this commit. Non-"write" callers (e.g.
                    * the engine's dim-update re-enrichment) stamp their own
                    * kind so an ingest epoch colliding with their id fails
                    * loudly instead of silently skipping (see committedAs).
                    */
                  kind: String = "write"): Manifest = {
-    if (Files.exists(manifestPath(epoch)))
-      return committedAs(epoch, kind)
-
-    val spark = upserts.sparkSession
-    val parent = latestManifest()
-    require(parent.forall(_.epoch < epoch), s"epoch $epoch not after ${parent.map(_.epoch)}")
-
-    val (mergedSchema, schemaId) = evolveSchema(parent, upserts.schema)
-    val withBucket = conformTo(mergedSchema)(upserts)
-      .withColumn("__bucket", bucketCol)
-      .withColumn("__epoch", lit(epoch))
-    val touched = touchedBuckets.getOrElse(
-      withBucket.select("__bucket").distinct().collect().map(_.getInt(0)).toSet)
-
-    val epochDirRel = f"data/e$epoch%012d"
-    val stats: Map[Int, BucketStats] =
-      if (touched.isEmpty) Map.empty
-      else {
-        val writeReady =
-          if (alignedInput) withBucket // consume the fold's partitioning as-is
-          else {
-            val salt = effectiveSalt(precomputedStats.filter(_.nonEmpty)
-              .map(_.values.map(_.rows).max))
-            withBucket.repartition(
-              math.max(1, math.min(parent.map(_.numBuckets).getOrElse(numBuckets), touched.size)) * salt,
-              col("__bucket"), saltColFor(salt))
-          }
-        writeReady
-          .sortWithinPartitions((col("__bucket") +: keyColumns.map(col)): _*)
-          .write.mode(SaveMode.Overwrite).option("compression", LakeTable.compression).partitionBy("__bucket")
-          .parquet(s"$root/$epochDirRel")
-        // stats recomputed from the same deterministic plan (no read-back);
-        // a bucket with zero rows leaves no dir and gets no entry
-        precomputedStats.getOrElse(bucketStatsOf(withBucket))
-      }
-    var files = (parent.map(_.files).getOrElse(Seq.empty) ++
-      entriesFor(epochDirRel, epoch, stats)).sortBy(_.bucket)
-
-    // compact over-threshold buckets: read their compactable live files,
-    // resolve the per-key winners, rewrite as one file set (per-row __epoch
-    // preserved) — unless the caller runs compact() out of band
-    if (compactInline)
-      files = compactOverfull(spark, files, mergedSchema, epoch, resolve = true)
-
-    val manifest = Manifest(
-      epoch = epoch,
-      parentEpoch = parent.map(_.epoch).getOrElse(-1L),
-      schemaId = schemaId,
-      schemaJson = mergedSchema.json,
-      keyColumns = keyColumns,
-      numBuckets = parent.map(_.numBuckets).getOrElse(numBuckets),
-      files = files,
-      metadata = metadata,
-      // totalRows is PHYSICAL rows for a merge-on-read table (superseded
-      // versions included until compaction)
-      lineage = lineage ++ Map("totalRows" -> files.map(_.rows).sum),
-      kind = kind,
-    )
-    writeManifestAtomically(manifest)
-    manifest
+    require(mergeOnRead, s"mergeDelta needs a mergeOnRead table: $root does not " +
+      "resolve versions at read time, so an upserted key would stay live twice")
+    write(upserts, epoch, kind, metadata, lineage, compactInline, aligned,
+      insertIgnore = false)
   }
 
   /** Append-only commit for insert-ignore tables (e.g. the sessions-state
@@ -660,101 +638,81 @@ final class LakeTable(
   def appendNew(upserts: DataFrame, epoch: Long,
                 metadata: Map[String, String] = Map.empty,
                 lineage: Map[String, Long] = Map.empty,
-                touchedBuckets: Option[Set[Int]] = None,
                 /** true ⇒ caller guarantees no key already exists (e.g. the
                   * epoch fold only emits first-seen events) — skips the
                   * prior-keys anti-join read entirely.
                   */
                 assumeNew: Boolean = false,
-                /** Exact per-bucket stats of the rows that will be written
-                  * (only valid with assumeNew — the anti-join may drop rows
-                  * the caller can't see); saves one aggregation job.
-                  */
-                precomputedStats: Option[Map[Int, BucketStats]] = None,
                 /** false ⇒ skip inline compaction (see mergeDelta). */
                 compactInline: Boolean = true,
-                /** Pre-bucket-partitioned input — see mergeDelta. Only
-                  * meaningful with `assumeNew` (the anti-join path shuffles
-                  * anyway, destroying the alignment).
+                /** Pre-bucket-partitioned input with exact stats — see
+                  * mergeDelta. Requires `assumeNew`: the anti-join may drop
+                  * rows the stats count.
                   */
-                alignedInput: Boolean = false): Manifest = {
-    if (Files.exists(manifestPath(epoch)))
-      return committedAs(epoch, "write")
-
-    val spark = upserts.sparkSession
-    val parent = latestManifest()
-    require(parent.forall(_.epoch < epoch), s"epoch $epoch not after ${parent.map(_.epoch)}")
-
-    // schema evolution on the append path too (new change-event fields land
-    // nullable; old files read through the merged schema with null fill) —
-    // same rules as mergeDelta()
-    val (mergedSchema, schemaId) = evolveSchema(parent, upserts.schema)
-    val withBucket = conformTo(mergedSchema)(upserts).withColumn("__bucket", bucketCol)
-      // row-level commit stamp: survives compaction, so changesSince stays
-      // exact for append-only tables too
-      .withColumn("__epoch", lit(epoch))
-    val touched = touchedBuckets.getOrElse(
-      withBucket.select("__bucket").distinct().collect().map(_.getInt(0)).toSet)
-
-    val priorKeys = parent match {
-      case _ if assumeNew => None
-      case Some(p) =>
-        val live = p.files.filter(f => touched.contains(f.bucket))
-        if (live.isEmpty) None
-        else Some(readEntries(spark, live,
-            DataType.fromJson(p.schemaJson).asInstanceOf[StructType])
-          .select(keyColumns.map(col): _*))
-      case None => None
-    }
-    val fresh = priorKeys.fold(withBucket)(pk =>
-      withBucket.join(pk, keyColumns, "left_anti"))
-
-    val epochDirRel = f"data/e$epoch%012d"
-    val stats: Map[Int, BucketStats] =
-      if (touched.isEmpty) Map.empty
-      else {
-        val writeReady =
-          if (alignedInput && assumeNew) fresh // fold partitioning as-is
-          else {
-            val salt = effectiveSalt(precomputedStats.filter(_ => assumeNew)
-              .filter(_.nonEmpty).map(_.values.map(_.rows).max))
-            fresh.repartition(
-              math.max(1, math.min(parent.map(_.numBuckets).getOrElse(numBuckets), touched.size)) * salt,
-              col("__bucket"), saltColFor(salt))
-          }
-        writeReady
-          .sortWithinPartitions((col("__bucket") +: keyColumns.map(col)): _*)
-          .write.mode(SaveMode.Overwrite).option("compression", LakeTable.compression).partitionBy("__bucket")
-          .parquet(s"$root/$epochDirRel")
-        // stats recomputed from the same deterministic plan (no read-back);
-        // pure-redelivery batches count to nothing and add no entries
-        precomputedStats.filter(_ => assumeNew).getOrElse(bucketStatsOf(fresh))
-      }
-    var files = (parent.map(_.files).getOrElse(Seq.empty) ++
-      entriesFor(epochDirRel, epoch, stats)).sortBy(_.bucket)
-
-    // append-only tables accumulate one file set per touching epoch per
-    // bucket — after many epochs a bucket read would open thousands of
-    // files. Compact over-threshold buckets by concatenation (rows are
-    // unique by key already — no resolution needed), unless the caller
-    // runs compact() out of band.
-    if (compactInline)
-      files = compactOverfull(spark, files, mergedSchema, epoch, resolve = false)
-
-    val manifest = Manifest(
-      epoch = epoch,
-      parentEpoch = parent.map(_.epoch).getOrElse(-1L),
-      schemaId = schemaId,
-      schemaJson = mergedSchema.json,
-      keyColumns = keyColumns,
-      numBuckets = parent.map(_.numBuckets).getOrElse(numBuckets),
-      files = files,
-      metadata = metadata,
-      lineage = lineage ++ Map("totalRows" -> files.map(_.rows).sum),
-    )
-    writeManifestAtomically(manifest)
-    manifest
+                aligned: Option[BucketAligned] = None): Manifest = {
+    require(aligned.isEmpty || assumeNew, "an aligned appendNew requires assumeNew")
+    write(upserts, epoch, "write", metadata, lineage, compactInline, aligned,
+      insertIgnore = !assumeNew)
   }
+
+  /** The write core of `mergeDelta` and `appendNew`, run inside `publish`
+    * against the parent manifest it read. Evolves the schema, stamps each
+    * row's `__bucket` under the parent's bucket count and its `__epoch`
+    * (the row-level commit stamp: it survives compaction, so resolution and
+    * `changesSince` stay exact), and writes one file set per touched bucket.
+    * `aligned` input under the parent's bucket count is written as it
+    * stands, with its stats. Any other input pays one query for the exact
+    * per-bucket stats of the rows to write — their keys are the touched
+    * buckets, their largest count sets the salt, and they become the
+    * manifest's counts — and is repartitioned by (bucket, salt). Buckets
+    * over their threshold are then compacted inline, resolving exactly when
+    * the table is `mergeOnRead`.
+    */
+  private def write(input: DataFrame, epoch: Long, kind: String,
+                    metadata: Map[String, String], lineage: Map[String, Long],
+                    compactInline: Boolean, aligned: Option[BucketAligned],
+                    insertIgnore: Boolean): Manifest =
+    publish(epoch, kind) { parent =>
+      val nb = parent.fold(numBuckets)(_.numBuckets)
+      val (schema, schemaId) = evolveSchema(parent, input.schema)
+      val rows = conformTo(schema)(input)
+        .withColumn("__bucket", bucketColFor(nb))
+        .withColumn("__epoch", lit(epoch))
+      val dirRel = f"data/e$epoch%012d"
+      // a bucket with zero rows gets no stats, no dir and no entry
+      val stats = aligned.filter(_.numBuckets == nb) match {
+        case Some(a) =>
+          if (a.stats.nonEmpty) writeBuckets(rows, dirRel)
+          a.stats
+        case None =>
+          val fresh = if (insertIgnore) withoutPriorKeys(rows, parent) else rows
+          val s = bucketStatsOf(fresh)
+          if (s.nonEmpty) {
+            val salt = effectiveSalt(s)
+            writeBuckets(fresh.repartition(math.min(nb, s.size) * salt,
+              col("__bucket"), saltColFor(salt)), dirRel)
+          }
+          s
+      }
+      val files = (parent.fold(Seq.empty[FileEntry])(_.files) ++
+        entriesFor(dirRel, epoch, stats)).sortBy(_.bucket)
+      Some(Staged(
+        if (compactInline) compactOverfull(input.sparkSession, files, schema, epoch, nb)
+        else files,
+        schemaId, schema.json, nb, metadata, lineage))
+    }
+
+  /** Insert-ignore: `rows` minus the keys the parent already holds in the
+    * buckets `rows` touches (a key-columns-only read of those buckets).
+    */
+  private def withoutPriorKeys(rows: DataFrame, parent: Option[Manifest]): DataFrame =
+    parent.fold(rows) { p =>
+      val touched = rows.select("__bucket").distinct().collect().map(_.getInt(0)).toSet
+      val live = p.files.filter(f => touched(f.bucket))
+      if (live.isEmpty) rows
+      else rows.join(readEntries(rows.sparkSession, live, schemaOf(p))
+        .select(keyColumns.map(col): _*), keyColumns, "left_anti")
+    }
 
   /** Point lookup — the O(one bucket) read primitive a CDC-maintained table
     * serves: the bucket id is computed DRIVER-SIDE by evaluating the same
@@ -778,7 +736,7 @@ final class LakeTable(
     manifestAsOf(asOf) match {
       case None => spark.emptyDataFrame
       case Some(m) =>
-        val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+        val schema = schemaOf(m)
         val key0 = keyColumns.headOption
           .filter(k0 => key.contains(k0) &&
             schema(k0).dataType == org.apache.spark.sql.types.StringType)
@@ -804,7 +762,7 @@ final class LakeTable(
     manifestAsOf(asOf) match {
       case None => spark.emptyDataFrame
       case Some(m) =>
-        val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+        val schema = schemaOf(m)
         val buckets = values.map(v => bucketOf(m, schema, Map(k -> v))).toSet
         snapshot(spark, asOf, buckets = Some(buckets)).filter(col(k).isin(values: _*))
     }
@@ -844,7 +802,7 @@ final class LakeTable(
     manifestAsOf(asOf) match {
       case None => spark.emptyDataFrame
       case Some(m) =>
-        val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+        val schema = schemaOf(m)
         val withEpoch = withEpochCol(schema)
         val candidates = m.files.filter(_.epochAdded > sinceEpoch)
         if (candidates.isEmpty)
@@ -898,41 +856,21 @@ final class LakeTable(
     * sees only surviving versions (schedule rebuckets behind the slowest
     * consumer, like any compaction).
     */
-  def rebucket(spark: SparkSession, newNumBuckets: Int, epoch: Long): Manifest = {
-    if (Files.exists(manifestPath(epoch)))
-      return committedAs(epoch, "rebucket")
-    val parent = latestManifest().getOrElse(
-      throw new IllegalStateException("rebucket requires an existing table"))
-    require(parent.epoch < epoch, s"epoch $epoch not after ${parent.epoch}")
-
-    val schema = DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]
-    // ALWAYS carry the per-row commit stamp through the rewrite — dropping
-    // it would break changesSince for append-only tables after a rebucket
-    val rewritten = bucketLocal(spark, byBucket(parent.files), withEpochCol(schema),
-      resolve = mergeOnRead).withColumn("__bucket", bucketColFor(newNumBuckets))
-
-    val dirRel = f"data/e$epoch%012dr"
-    rewritten
-      .repartition(newNumBuckets, col("__bucket"), saltCol)
-      .sortWithinPartitions((col("__bucket") +: keyColumns.map(col)): _*)
-      .write.mode(SaveMode.Overwrite).option("compression", LakeTable.compression).partitionBy("__bucket")
-      .parquet(s"$root/$dirRel")
-    val files = entriesFor(dirRel, epoch, bucketStatsOf(rewritten))
-    val manifest = Manifest(
-      epoch = epoch,
-      parentEpoch = parent.epoch,
-      schemaId = parent.schemaId,
-      schemaJson = parent.schemaJson,
-      keyColumns = keyColumns,
-      numBuckets = newNumBuckets,
-      files = files,
-      kind = "rebucket",
-      metadata = parent.metadata + ("rebucketed-from" -> parent.numBuckets.toString),
-      lineage = Map("totalRows" -> files.map(_.rows).sum),
-    )
-    writeManifestAtomically(manifest)
-    manifest
-  }
+  def rebucket(spark: SparkSession, newNumBuckets: Int, epoch: Long): Manifest =
+    publish(epoch, "rebucket") { parent =>
+      val p = parent.getOrElse(
+        throw new IllegalStateException("rebucket requires an existing table"))
+      // ALWAYS carry the per-row commit stamp through the rewrite — dropping
+      // it would break changesSince for append-only tables after a rebucket
+      val rewritten = bucketLocal(spark, byBucket(p.files), withEpochCol(schemaOf(p)),
+        resolve = mergeOnRead).withColumn("__bucket", bucketColFor(newNumBuckets))
+      val dirRel = f"data/e$epoch%012dr"
+      writeBuckets(rewritten.repartition(newNumBuckets, col("__bucket"),
+        saltColFor(saltFactor)), dirRel)
+      Some(Staged(entriesFor(dirRel, epoch, bucketStatsOf(rewritten)), p.schemaId,
+        p.schemaJson, newNumBuckets,
+        p.metadata + ("rebucketed-from" -> p.numBuckets.toString), Map.empty))
+    }
 
   /** Publish via hard-link, not rename: POSIX rename (ATOMIC_MOVE) silently
     * REPLACES an existing target, so a racing duplicate-epoch committer

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import graft.SparkSpec
+import graft.{JobProbe, SparkSpec}
 import graft.lake.LakeTable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -213,7 +213,7 @@ class CdcEngineSpec extends SparkSpec {
       .flatMapGroups((r, it) => CdcPipeline.applyGroup(r, it, cutoffLocal, 1L))
       .filter(_.event.isDefined).map(_.event.get).toDF()
       .withColumn("content_sha256", sh(c("content"), 256))
-    eng.state.appendNew(fresh, 1L, touchedBuckets = Some(touched), assumeNew = true)
+    eng.state.appendNew(fresh, 1L, assumeNew = true)
     assert(eng.state.latestManifest().get.epoch == 1L)
     assert(eng.transfers.latestManifest().get.epoch == 0L, "transfers must lag (crashed)")
 
@@ -246,7 +246,7 @@ class CdcEngineSpec extends SparkSpec {
       .groupByKey(_.repo)
       .flatMapGroups((r, it) => CdcPipeline.applyGroup(r, it, cutoffLocal, 1L))
       .filter(_.transfer.isDefined).map(_.transfer.get).toDF())
-    eng.transfers.mergeDelta(upserts, 1L, touchedBuckets = Some(touched))
+    eng.transfers.mergeDelta(upserts, 1L)
     assert(eng.transfers.latestManifest().get.epoch == 1L)
     assert(eng.state.latestManifest().get.epoch == 0L, "state must lag (crashed)")
 
@@ -283,6 +283,39 @@ class CdcEngineSpec extends SparkSpec {
     // new commits landed in buckets of the grown range
     val lastFiles = eng.transfers.latestManifest().get.files
     assert(lastFiles.exists(_.bucket >= 4), s"new layout unused: $lastFiles")
+  }
+
+  test("a transfers table rebucketed alone commits through the unaligned path") {
+    val dim = Enrichment.generateDim(spark, numAsids = 997,
+      yearMonths = Seq(201911, 201912))
+    val eng = new CdcEngine(tmpDir("rebucket-transfers"), numBuckets = 4,
+      cutoffMicros = 14 * day, dim = Some(dim))
+    eng.applyEpoch(spark, log.filter(_.epoch == 0L), 0L)
+    // out of band: only transfers grows, so the fold (partitioned by the
+    // state table's 4 buckets) no longer matches its layout
+    eng.transfers.rebucket(spark, newNumBuckets = 16, epoch = 1L)
+    val probe = JobProbe(spark)(eng.applyEpoch(spark, log.filter(_.epoch == 1L), 2L))
+
+    Seq(eng.state, eng.transfers, eng.enriched.get).foreach { t =>
+      assert(t.latestManifest().get.epoch == 2L, s"${t.root} did not commit epoch 2")
+    }
+    assert(eng.committedThrough().contains(2L))
+    assert(probe.shuffleBytes("cdc epoch 2: transfers commit (mergeDelta)") > 0L,
+      "the mismatched table must repartition to its own layout")
+    assert(probe.shuffleBytes("cdc epoch 2: enriched commit (mergeDelta)") == 0L)
+    assert(eng.transfers.latestManifest().get.files.filter(_.epochAdded == 2L)
+      .exists(_.bucket >= 4), "the epoch's transfers must land in the 16-bucket layout")
+
+    val classified = CdcPipeline.withRowSha(
+      CdcPipeline.classify(log.filter(_.epoch <= 1L), 14 * day).toDF())
+    assert(shaMap(eng.currentTransfers(spark)) == shaMap(classified))
+    // enriched: the sha-covered columns plus every enrichment column
+    val counters = Set("duplicatesDropped", "danglingAcks", "unknownPurpose", "negativeSla")
+    def rowMap(df: DataFrame): Map[String, String] =
+      df.select(col("repo"), to_json(struct(df.columns.filterNot(counters).sorted.map(col): _*)))
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val want = rowMap(Enrichment.enrich(classified, dim))
+    assert(want.nonEmpty && rowMap(eng.currentEnriched(spark)) == want)
   }
 
   test("slimmed prior-event projection never leaks nulls into durable state") {
@@ -327,42 +360,20 @@ class CdcEngineSpec extends SparkSpec {
   }
 
   test("single-shuffle epoch: the commits write no shuffle bytes, the fold does") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
     val eng = new CdcEngine(tmpDir("one-shuffle"), numBuckets = 8,
       cutoffMicros = 14 * day,
       dim = Some(Enrichment.generateDim(spark, numAsids = 997,
         yearMonths = Seq(201911, 201912))))
     eng.applyEpoch(spark, log.filter(_.epoch == 0L), 0L)
 
-    // shuffle-write bytes per job description, attributed via stage → job
-    val stageDesc = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val bytes = new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.concurrent.atomic.AtomicLong]()
-    def counter(d: String) =
-      bytes.computeIfAbsent(d, _ => new java.util.concurrent.atomic.AtomicLong())
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val d = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        js.stageInfos.foreach(si => stageDesc.put(si.stageId, d))
-        counter(d)
-      }
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) Option(stageDesc.get(te.stageId)).foreach(d =>
-          counter(d).addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // epoch 1 folds prior state; two files per bucket stay far below the
-      // compaction threshold, so no commit rewrites anything inline
-      eng.applyEpoch(spark, log.filter(_.epoch == 1L), 1L)
-      org.apache.spark.sql.graftbridge.GraftBridge.drainListenerBus(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // epoch 1 folds prior state; two files per bucket stay far below the
+    // compaction threshold, so no commit rewrites anything inline
+    val probe = JobProbe(spark)(eng.applyEpoch(spark, log.filter(_.epoch == 1L), 1L))
 
     def written(phase: String): Long = {
       val d = s"cdc epoch 1: $phase"
-      assert(bytes.containsKey(d), s"no job tagged '$d': ${bytes.keySet}")
-      bytes.get(d).get()
+      assert(probe.descriptions.contains(d), s"no job tagged '$d': ${probe.descriptions}")
+      probe.shuffleBytes(d)
     }
     assert(written("fold + epoch summary") > 0L)
     Seq("state commit (appendNew)", "transfers commit (mergeDelta)",

@@ -99,7 +99,7 @@ class PipelinedApplySpec extends SparkSpec {
       .flatMapGroups((r, it) => CdcPipeline.applyGroup(r, it, cutoffLocal, 1L))
       .filter(_.event.isDefined).map(_.event.get).toDF()
       .withColumn("content_sha256", sh(c("content"), 256))
-    eng.state.appendNew(fresh, 1L, touchedBuckets = Some(touched), assumeNew = true)
+    eng.state.appendNew(fresh, 1L, assumeNew = true)
     assert(eng.transfers.latestManifest().get.epoch == 0L, "transfers must lag")
 
     // the restarted PIPELINED driver replays the whole range and heals
