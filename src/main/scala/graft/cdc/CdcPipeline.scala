@@ -76,17 +76,6 @@ object CdcPipeline {
       }
   }
 
-  /** Lift raw change events into the apply fold's row type (no pre-parsed
-    * message — the fold parses them once, on first apply).
-    */
-  def toApplyEvents(events: Dataset[ChangeEvent]): Dataset[ApplyEvent] = {
-    import events.sparkSession.implicits._
-    events.toDF()
-      .withColumn("parsed", lit(null).cast(
-        org.apache.spark.sql.Encoders.product[SpineMessage].schema))
-      .as[ApplyEvent]
-  }
-
   /** One deduped session: the first-seen copy of each commit, sorted by
     * (tsMicros, offset), and the number of redelivered copies dropped.
     */
@@ -171,10 +160,9 @@ object CdcPipeline {
   /** One output row of the fused epoch fold: either a classified transfer or
     * a fresh (first-seen this epoch) state event — both emitted from the
     * SAME bucket-keyed fold pass (`foldPartition`) so an epoch apply has
-    * exactly one shuffle. Fresh events carry their parsed message for the
-    * state sink (see ApplyEvent).
+    * exactly one shuffle.
     */
-  final case class ApplyOut(transfer: Option[TransferRecord], event: Option[ApplyEvent])
+  final case class ApplyOut(transfer: Option[TransferRecord], event: Option[ChangeEvent])
 
   /** Fused per-key epoch fold: the session kernel (`dedupSession`),
     * classify the full session, and emit the deduped events that are NEW
@@ -182,22 +170,11 @@ object CdcPipeline {
     * (tsMicros, offset) order, for the state table.
     * Prior-state events carry earlier epochs, so a commit redelivered now
     * resolves to its first-seen copy and is NOT re-emitted — the same
-    * first-offset-wins rule as full recompute.
-    *
-    * Each deduped event's message comes from its `parsed` field when
-    * present (prior state — parsed exactly once, on first apply) and from
-    * one `MessageParser.parse(content)` otherwise (this epoch's raw batch).
+    * first-offset-wins rule as full recompute. Each winner's `content` is
+    * parsed once.
     */
-  def applyGroup(repo: String, events: Iterator[ApplyEvent],
-                 cutoffMicros: Long, currentEpoch: Long,
-                 /** Attach each fresh event's parsed message for the state
-                   * sink (storeParsedState engines). When false the emitted
-                   * events keep parsed = null — attaching unconditionally
-                   * would serialize a SpineMessage struct per fresh event
-                   * through the fold cache just to be dropped at the sink
-                   * (a measured ~10 % apply regression).
-                   */
-                 keepParsed: Boolean = true): Iterator[ApplyOut] = {
+  def applyGroup(repo: String, events: Iterator[ChangeEvent],
+                 cutoffMicros: Long, currentEpoch: Long): Iterator[ApplyOut] = {
     val session = dedupSession(events)
     val winners = session.winners
     // Emit-on-change: no event of THIS epoch survived dedup ⇒ the session's
@@ -213,16 +190,13 @@ object CdcPipeline {
     // This check runs BEFORE any parse: a pure-redelivery session exits
     // without re-parsing its whole history.
     if (!winners.exists(_.epoch == currentEpoch)) return Iterator.empty
-    // parse-or-reuse ONCE per winner; msgs(i) pairs with winners(i), so
-    // fresh emissions persist their parsed form
-    val msgs = winners.map(e => if (e.parsed != null) e.parsed else MessageParser.parse(e.content))
+    // msgs(i) is the message of winners(i)
+    val msgs = winners.map(e => MessageParser.parse(e.content))
     // the fold dedups BEFORE classify, so redelivery (in-batch or vs prior
     // state) is counted by the kernel, not by the classifier's inner dedup
     val transfer = classifySession(repo, session, ArraySeq.unsafeWrapArray(msgs), cutoffMicros)
     transfer.iterator.map(t => ApplyOut(Some(t), None)) ++
-      winners.indices.iterator.filter(i => winners(i).epoch == currentEpoch).map { i =>
-        ApplyOut(None, Some(if (keepParsed) winners(i).copy(parsed = msgs(i)) else winners(i)))
-      }
+      winners.iterator.filter(_.epoch == currentEpoch).map(e => ApplyOut(None, Some(e)))
   }
 
   /** Canonical per-row hash of the classified output — the replay invariant:
@@ -272,17 +246,17 @@ object CdcPipeline {
     * anyway). Output rows stay in their input partition, which is what lets
     * the commits skip their own shuffles.
     */
-  def foldPartition(events: Iterator[ApplyEvent], cutoffMicros: Long,
-                    currentEpoch: Long, keepParsed: Boolean): Iterator[ApplyOut] =
+  def foldPartition(events: Iterator[ChangeEvent], cutoffMicros: Long,
+                    currentEpoch: Long): Iterator[ApplyOut] =
     new scala.collection.AbstractIterator[ApplyOut] {
       private val buf = events.buffered
       private var cur: Iterator[ApplyOut] = Iterator.empty
       def hasNext: Boolean = {
         while (!cur.hasNext && buf.hasNext) {
           val repo = buf.head.repo
-          val run = scala.collection.mutable.ArrayBuffer.empty[ApplyEvent]
+          val run = scala.collection.mutable.ArrayBuffer.empty[ChangeEvent]
           while (buf.hasNext && buf.head.repo == repo) run += buf.next()
-          cur = applyGroup(repo, run.iterator, cutoffMicros, currentEpoch, keepParsed)
+          cur = applyGroup(repo, run.iterator, cutoffMicros, currentEpoch)
         }
         cur.hasNext
       }
@@ -292,13 +266,16 @@ object CdcPipeline {
 }
 
 /** The incremental CDC engine: tails the change log epoch by epoch and
-  * maintains two lake tables —
+  * maintains these lake tables —
   *
   *  - `state`:     the deduped event buffer per session key (merge identity
   *                 (repo, commit), bucketed by repo, insert-ignore so the
   *                 first-seen offset of a redelivered event is durable);
   *  - `transfers`: the classified output (merge identity repo, upsert via
-  *                 merge-on-read deltas with bounded compaction).
+  *                 merge-on-read deltas with bounded compaction);
+  *  - `enriched` and `dimlog`, only when a `dim` is given: the transfers
+  *                 joined with organisation metadata, and the durable log of
+  *                 dim updates (see `dim`).
   *
   * An epoch apply touches only the buckets its batch's repos hash into and
   * re-folds only the batch's own sessions (semi-join), and both commits
@@ -369,20 +346,6 @@ final class CdcEngine(
       * (applyDimUpdate) and retry the SAME epoch id.
       */
     val strictDimMonths: Boolean = false,
-    /** Persist each fresh event's PARSED message next to its raw content in
-      * the state table, so every later epoch's prior-state read supplies
-      * the stored parse and prunes the content column away entirely (no
-      * re-read, no re-parse — proven by the decoy-content test). This is a
-      * measured TRADE, not a free win: when `content` is large relative to
-      * its parsed extract (the north-star shape — source-file payloads,
-      * where parsed metadata is a tiny fraction of the blob) it removes
-      * most prior-read/shuffle bytes; when content IS the compact message
-      * (this repo's bench fixtures) the duplicated fields cost ~+26 %
-      * shuffle bytes (task-metrics-measured) for no byte win, so the
-      * default stays off. Classification output is identical either way
-      * (PipelinedApplySpec parity test).
-      */
-    val storeParsedState: Boolean = false,
     /** Max live files per bucket before a commit compacts that bucket —
       * passed through to every engine-owned table (see
       * `LakeTable.compactThreshold`). Raise it together with
@@ -470,21 +433,6 @@ final class CdcEngine(
   private def activeDimChanged(): Unit = synchronized {
     effectiveDimMemo.foreach(_.unpersist())
     effectiveDimMemo = None
-  }
-
-  /** Memoized `state.bornWith("parsed")` — the birth schema is immutable
-    * once the first commit exists, so the per-epoch manifest listing +
-    * JSON parse it costs is paid at most once. Left un-cached while the
-    * warehouse is still empty (the answer can flip at the first commit).
-    */
-  @volatile private var stateBornWithParsedMemo: Option[Boolean] = None
-  private def stateBornWithParsed: Boolean = stateBornWithParsedMemo.getOrElse {
-    if (state.latestManifest().isEmpty) false
-    else {
-      val v = state.bornWith("parsed")
-      stateBornWithParsedMemo = Some(v)
-      v
-    }
   }
 
   require(!strictDimMonths || dimMonths.isDefined,
@@ -766,13 +714,20 @@ final class CdcEngine(
     def desc(d: String): Unit =
       spark.sparkContext.setJobDescription(s"cdc epoch $epoch: $d")
 
+    // The state layout, read once per fold: the batch stats, the
+    // pending-fresh filter, the fold's partitioning and the summary all
+    // bucket by it. An in-flight commit of `applyEpochs` never changes it —
+    // only `rebucket` does, and that never runs concurrently with an apply.
+    val nb = state.currentNumBuckets
+    val bucket = state.bucketCol(nb)
+
     // narrow pre-pass: batch stats + touched buckets (partial-agg only;
     // state and transfers hash the same repo column → shared touched set)
     desc("batch stats + touched buckets")
     val stats = newEvents.toDF()
       .agg(
         count(lit(1)), coalesce(min("offset"), lit(0L)), coalesce(max("offset"), lit(0L)),
-        collect_set(state.bucketCol))
+        collect_set(bucket))
       .collect()(0)
     val batchRows = stats.getLong(0)
     val touched = stats.getSeq[Int](3).toSet
@@ -782,37 +737,20 @@ final class CdcEngine(
     // epoch, pruned to this batch's buckets like the snapshot read
     val pendingPart = pendingFresh
       .filter(p => p.touched.exists(touched)) // skip when bucket-disjoint
-      .map(_.freshEvents.where(state.bucketCol.isin(touched.toSeq: _*)))
-    val parsedType = org.apache.spark.sql.Encoders.product[SpineMessage].schema
+      .map(_.freshEvents.where(bucket.isin(touched.toSeq: _*)))
+    // Prior-state events are folded but never RE-persisted (only fresh,
+    // current-epoch events reach the state sink) — path/lang/op are null
+    // LITERALS here, so parquet never reads those columns and they never
+    // cross the sessionize shuffle. Batch events keep full fields; the dedup
+    // keeps whichever copy wins, and a prior-copy win is by definition not
+    // fresh, so nulls never reach durable state.
     val nullS = lit(null).cast("string")
-    // Prior rows enter the fold as ApplyEvent. When the state table carries
-    // the parsed message (every table this binary creates), `content` is a
-    // NULL LITERAL here — the dominant column of the table is pruned at the
-    // parquet scan and never crosses the sessionize shuffle, and the fold
-    // reuses the stored parse. Tables born before the parsed column (their
-    // oldest files physically lack it) keep the legacy content+parse path.
-    def asApplyRows(df: DataFrame, hasParsed: Boolean): DataFrame =
-      if (hasParsed)
-        df.select(col("repo"), nullS.as("path"), col("commit"), nullS.as("lang"),
-          lit(null).cast("string").as("content"), col("offset"), nullS.as("op"),
-          col("tsMicros"), col("epoch"), col("parsed"))
-      else
-        df.select(col("repo"), nullS.as("path"), col("commit"), nullS.as("lang"),
-          col("content"), col("offset"), nullS.as("op"),
-          col("tsMicros"), col("epoch"), lit(null).cast(parsedType).as("parsed"))
-    // a warehouse born with stored parses must keep writing them — a
-    // flag-off engine would append parsed=null rows and a later parsed-path
-    // read would find neither payload form
-    require(storeParsedState || !stateBornWithParsed,
-      "state table was created with storeParsedState=true — the flag must " +
-        "stay on for this warehouse")
-    val snapshotHasParsed = storeParsedState &&
-      priorSnapshot.columns.contains("parsed") && stateBornWithParsed
+    def asPriorEvents(df: DataFrame): DataFrame =
+      df.select(col("repo"), nullS.as("path"), col("commit"), nullS.as("lang"),
+        col("content"), col("offset"), nullS.as("op"), col("tsMicros"), col("epoch"))
     val priorRaw: Option[DataFrame] =
-      ((if (priorSnapshot.columns.isEmpty) None
-        else Some(asApplyRows(priorSnapshot, snapshotHasParsed))).toSeq ++
-        pendingPart.map(asApplyRows(_, hasParsed = storeParsedState)).toSeq)
-        .reduceOption(_.unionByName(_))
+      ((if (priorSnapshot.columns.isEmpty) None else Some(priorSnapshot)).toSeq ++
+        pendingPart.toSeq).map(asPriorEvents).reduceOption(_.unionByName(_))
     // Semi-join gate: manifest row counts (free — no Spark job) tell how
     // much prior state the touched buckets hold. When prior dwarfs the batch
     // (steady incremental state at scale), a semi-join on the batch's repos
@@ -834,29 +772,19 @@ final class CdcEngine(
     // the batch.
     val semiJoinFactor = 4.0
     val semiJoinWins = priorTouchedRows > semiJoinFactor * math.max(batchRows, 1L)
-    // Prior-state events are folded but never RE-persisted (only fresh,
-    // current-epoch events reach the state sink) — path/lang/op are null
-    // LITERALS in asApplyRows (and content too on the parsed path), so
-    // parquet never reads those columns and the steady state's majority
-    // shuffle rows carry the compact parsed struct instead of raw content.
-    // Batch events keep full fields; the dedup keeps whichever copy wins,
-    // and a prior-copy win is by definition not fresh, so nulls never
-    // reach durable state.
-    val priorEvents: Dataset[ApplyEvent] = priorRaw match {
-      case None => spark.emptyDataset[ApplyEvent]
+    val priorEvents: Dataset[ChangeEvent] = priorRaw match {
+      case None => spark.emptyDataset[ChangeEvent]
       case Some(raw0) =>
         val pruned =
           if (semiJoinWins)
             raw0.join(newEvents.select("repo").distinct(), Seq("repo"), "left_semi")
           else raw0
-        pruned.as[ApplyEvent]
+        pruned.as[ChangeEvent]
     }
-    val newApply = CdcPipeline.toApplyEvents(newEvents)
 
     // locals only in the closure — capturing the fields would serialize the
     // whole (non-serializable) engine
     val cutoff = cutoffMicros
-    val keepParsed = storeParsedState
     // cached: Datasets do NOT reuse shuffle files across separate actions,
     // so without the cache each sink re-runs the union+shuffle+fold
     // (measured 2.3× slower than materializing the fold output once)
@@ -866,13 +794,12 @@ final class CdcEngine(
     // cache (all projections in between are narrow) and writes with no
     // repartition of its own. Placement is exactly 1:1 bucket→partition
     // (see partitionProbes).
-    val nb = state.currentNumBuckets
-    val folded = priorEvents.union(newApply).toDF()
+    val folded = priorEvents.union(newEvents).toDF()
       .repartition(nb, element_at(
-        typedLit(CdcPipeline.partitionProbes(nb)), state.bucketCol + lit(1)))
+        typedLit(CdcPipeline.partitionProbes(nb)), bucket + lit(1)))
       .sortWithinPartitions("repo")
-      .as[ApplyEvent]
-      .mapPartitions(it => CdcPipeline.foldPartition(it, cutoff, epoch, keepParsed))
+      .as[ChangeEvent]
+      .mapPartitions(it => CdcPipeline.foldPartition(it, cutoff, epoch))
     // cached COLUMNAR (DataFrame of two top-level structs), and the sink
     // projections below stay columnar too: InMemoryRelation prunes whole
     // top-level columns, so the transfers commit never reads the cached
@@ -885,8 +812,7 @@ final class CdcEngine(
     try {
       val upserts = CdcPipeline.withRowSha(
         out.where(col("transfer").isNotNull).select(col("transfer.*")))
-      val freshRaw = out.where(col("event").isNotNull).select(col("event.*"))
-      val freshEvents = (if (storeParsedState) freshRaw else freshRaw.drop("parsed"))
+      val freshEvents = out.where(col("event").isNotNull).select(col("event.*"))
         .withColumn("content_sha256", sha2(col("content"), 256))
 
       // ONE summary job over the cached fold output: per-bucket row counts
@@ -918,7 +844,7 @@ final class CdcEngine(
           coalesce(col("transfer.negativeSla"), lit(0L)).as("ns"),
           coalesce(col("transfer.duplicatesDropped"), lit(0L)).as("dd"),
           missingDimFlag.as("md"))
-        .withColumn("__bucket", state.bucketCol) // both tables bucket on repo
+        .withColumn("__bucket", bucket) // both tables bucket on repo
         .groupBy("__bucket").agg(
           sum("isE").as("e"), sum("isT").as("t"),
           sum("da").as("da"), sum("up").as("up"),

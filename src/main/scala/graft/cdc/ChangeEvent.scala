@@ -35,12 +35,12 @@ final case class ChangeEvent(
   def slim: SlimEvent = SlimEvent(repo, commit, content, offset, tsMicros, epoch)
 }
 
-/** The fold's working row: exactly the fields the classify fold reads.
-  * `path`/`lang`/`op` never cross the sessionize shuffle — on the
+/** Batch `classify`'s working row: exactly the fields the classify fold
+  * reads. `path`/`lang`/`op` never cross the sessionize shuffle — on the
   * memory-bandwidth-bound classify path (BASELINE.md §2) every byte
-  * shuffled per event is DRAM traffic on both sides of the exchange, and
-  * the full apply path (which must persist whole events to state) pays
-  * them only where it needs them.
+  * shuffled per event is DRAM traffic on both sides of the exchange. The
+  * epoch fold keeps `ChangeEvent` rows (its fresh events persist whole to
+  * state) but reads prior-state rows with those three as null literals.
   */
 final case class SlimEvent(
     repo: String,
@@ -49,26 +49,4 @@ final case class SlimEvent(
     offset: Long,
     tsMicros: Long,
     epoch: Long,
-) extends SessionEvent
-
-/** The APPLY fold's working row: a full change event PLUS the optional
-  * pre-parsed message. The state table persists every fresh event's parsed
-  * form next to its raw content, so on every LATER epoch the prior-state
-  * read supplies `parsed` and NEVER touches `content` — the column (the
-  * dominant bytes of the table) is pruned at the parquet scan, is absent
-  * from the sessionize shuffle, and the per-event re-parse disappears.
-  * Content is only carried by this epoch's batch rows (`parsed == null`),
-  * which are parsed exactly once, on their first apply.
-  */
-final case class ApplyEvent(
-    repo: String,
-    path: String,
-    commit: String,
-    lang: String,
-    content: String, // null for prior-state rows read via `parsed`
-    offset: Long,
-    op: String,
-    tsMicros: Long,
-    epoch: Long,
-    parsed: graft.classifier.SpineMessage, // null for raw batch rows
 ) extends SessionEvent

@@ -189,17 +189,6 @@ final class LakeTable(
     }
   }
 
-  /** Did the table's FIRST commit already carry `field`? A column added by
-    * later schema evolution reads as null from older files, so a caller
-    * that needs the column PHYSICALLY present in every live file (e.g. the
-    * engine's parsed-state fast path, which prunes the fallback column
-    * away) must check the birth schema, not the current one.
-    */
-  def bornWith(field: String): Boolean = {
-    val es = committedEpochs()
-    es.nonEmpty && manifestAt(es.min).exists(m => schemaOf(m).fieldNames.contains(field))
-  }
-
   /** Time travel: newest manifest with epoch ≤ asOf. */
   def manifestAsOf(asOf: Long): Option[Manifest] = {
     val epochs = committedEpochs().filter(_ <= asOf)
@@ -227,9 +216,8 @@ final class LakeTable(
     */
   def currentNumBuckets: Int = latestManifest().map(_.numBuckets).getOrElse(numBuckets)
 
-  def bucketCol: Column = bucketColFor(currentNumBuckets)
-
-  private def bucketColFor(n: Int): Column =
+  /** The bucket id of a row under a layout of `n` buckets. */
+  def bucketCol(n: Int): Column =
     pmod(xxhash64(bucketCols.map(col): _*), lit(n)).cast("int")
 
   /** Salt for the commit shuffle: spreads one bucket's rows over several
@@ -416,7 +404,7 @@ final class LakeTable(
     val inByBucket = cInput.groupBy(_.bucket)
     val cDirRel = f"data/e$epoch%012dc"
     val read = bucketLocal(spark, byBucket(cInput), withEpochCol(schema), mergeOnRead)
-      .withColumn("__bucket", bucketColFor(nb))
+      .withColumn("__bucket", bucketCol(nb))
     val counted = if (mergeOnRead) Some(org.apache.spark.sql.Observation()) else None
     writeBuckets(counted.fold(read) { o =>
       val perBucket = overfull.toSeq.sorted.map(b => count_if(col("__bucket") === b).as(b.toString))
@@ -676,7 +664,7 @@ final class LakeTable(
       val nb = parent.fold(numBuckets)(_.numBuckets)
       val (schema, schemaId) = evolveSchema(parent, input.schema)
       val rows = conformTo(schema)(input)
-        .withColumn("__bucket", bucketColFor(nb))
+        .withColumn("__bucket", bucketCol(nb))
         .withColumn("__epoch", lit(epoch))
       val dirRel = f"data/e$epoch%012d"
       // a bucket with zero rows gets no stats, no dir and no entry
@@ -863,7 +851,7 @@ final class LakeTable(
       // ALWAYS carry the per-row commit stamp through the rewrite — dropping
       // it would break changesSince for append-only tables after a rebucket
       val rewritten = bucketLocal(spark, byBucket(p.files), withEpochCol(schemaOf(p)),
-        resolve = mergeOnRead).withColumn("__bucket", bucketColFor(newNumBuckets))
+        resolve = mergeOnRead).withColumn("__bucket", bucketCol(newNumBuckets))
       val dirRel = f"data/e$epoch%012dr"
       writeBuckets(rewritten.repartition(newNumBuckets, col("__bucket"),
         saltColFor(saltFactor)), dirRel)

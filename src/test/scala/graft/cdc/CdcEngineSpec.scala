@@ -202,13 +202,13 @@ class CdcEngineSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col => c, lit => l, sha2 => sh}
     val stamped = log.filter(_.epoch == 1L).withColumn("epoch", l(1L)).as[ChangeEvent]
     val touched = stamped.toDF().agg(
-      org.apache.spark.sql.functions.collect_set(eng.state.bucketCol))
+      org.apache.spark.sql.functions.collect_set(eng.state.bucketCol(eng.state.currentNumBuckets)))
       .collect()(0).getSeq[Int](0).toSet
     val prior = eng.state.snapshot(spark2, buckets = Some(touched))
     val eventCols = spark2.emptyDataset[ChangeEvent].columns
     val priorEv = prior.select(eventCols.map(c): _*).as[ChangeEvent]
     val cutoffLocal = 14 * day // local copy: the lambda must not capture the spec
-    val fresh = CdcPipeline.toApplyEvents(priorEv.union(stamped))
+    val fresh = priorEv.union(stamped)
       .groupByKey(_.repo)
       .flatMapGroups((r, it) => CdcPipeline.applyGroup(r, it, cutoffLocal, 1L))
       .filter(_.event.isDefined).map(_.event.get).toDF()
@@ -236,13 +236,13 @@ class CdcEngineSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col => c, lit => l}
     val stamped = log.filter(_.epoch == 1L).withColumn("epoch", l(1L)).as[ChangeEvent]
     val touched = stamped.toDF().agg(
-      org.apache.spark.sql.functions.collect_set(eng.state.bucketCol))
+      org.apache.spark.sql.functions.collect_set(eng.state.bucketCol(eng.state.currentNumBuckets)))
       .collect()(0).getSeq[Int](0).toSet
     val prior = eng.state.snapshot(spark, buckets = Some(touched))
     val eventCols = spark.emptyDataset[ChangeEvent].columns
     val priorEv = prior.select(eventCols.map(c): _*).as[ChangeEvent]
     val cutoffLocal = 14 * day
-    val upserts = CdcPipeline.withRowSha(CdcPipeline.toApplyEvents(priorEv.union(stamped))
+    val upserts = CdcPipeline.withRowSha(priorEv.union(stamped)
       .groupByKey(_.repo)
       .flatMapGroups((r, it) => CdcPipeline.applyGroup(r, it, cutoffLocal, 1L))
       .filter(_.transfer.isDefined).map(_.transfer.get).toDF())
@@ -326,6 +326,9 @@ class CdcEngineSpec extends SparkSpec {
     val stateRows = LakeTable.readSnapshot(eng.state, spark)
     assert(stateRows.filter(
       col("path").isNull || col("lang").isNull || col("op").isNull).count() == 0)
+    // and state stays lean: the event columns plus the replay hash, nothing else
+    assert(stateRows.columns.toSeq ==
+      spark.emptyDataset[ChangeEvent].columns.toSeq :+ "content_sha256")
   }
 
   test("incremental enrichment: the enriched table equals batch-enriching the full classify") {

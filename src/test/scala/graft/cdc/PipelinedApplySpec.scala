@@ -88,13 +88,13 @@ class PipelinedApplySpec extends SparkSpec {
     // rows applyEpoch would write), then the process "crashes"
     val stamped = log.filter(_.epoch == 1L).withColumn("epoch", l(1L)).as[ChangeEvent]
     val touched = stamped.toDF().agg(
-      org.apache.spark.sql.functions.collect_set(eng.state.bucketCol))
+      org.apache.spark.sql.functions.collect_set(eng.state.bucketCol(eng.state.currentNumBuckets)))
       .collect()(0).getSeq[Int](0).toSet
     val eventCols = spark.emptyDataset[ChangeEvent].columns
     val priorEv = eng.state.snapshot(spark, buckets = Some(touched))
       .select(eventCols.map(c).toIndexedSeq: _*).as[ChangeEvent]
     val cutoffLocal = 14 * day
-    val fresh = CdcPipeline.toApplyEvents(priorEv.union(stamped))
+    val fresh = priorEv.union(stamped)
       .groupByKey(_.repo)
       .flatMapGroups((r, it) => CdcPipeline.applyGroup(r, it, cutoffLocal, 1L))
       .filter(_.event.isDefined).map(_.event.get).toDF()
@@ -113,56 +113,36 @@ class PipelinedApplySpec extends SparkSpec {
     assert(stateMap(eng) == stateMap(ref))
   }
 
-  test("prior-state fold consumes the stored parse — content is never re-read") {
+  test("a state table born with a parsed column keeps applying from content") {
     import graft.classifier.{Interactions, SpineMessage}
-    val eng = new CdcEngine(tmpDir("parsed-path"), numBuckets = 4,
-      cutoffMicros = 14 * day, storeParsedState = true)
+    val eng = new CdcEngine(tmpDir("parsed-born"), numBuckets = 4,
+      cutoffMicros = 14 * day)
     val t0 = 1577836800000000L
     val req = SpineMessage(t0, "rP", "rP", Interactions.EhrRequestStarted,
       "asid-r", "asid-s", None, None, Some("SystemOne"), Some("Vision"))
-    // state row whose CONTENT is deliberately different from its PARSED
-    // form: if any later fold read the content column, the divergent
-    // payload (a COPC) would change the classification
+    // an older engine stored each event's parse beside its content; this
+    // row's stored parse is a decoy (a COPC, no request), so a fold that
+    // read it instead of `content` would see no request and drop the session
     val decoy = req.copy(guid = "decoy", interactionId = Interactions.CommonPointToPoint)
-    val seeded = Seq(ApplyEvent("rP", "p", "rP", "scala",
-      MessageParser.format(decoy), offset = 1L, op = "insert",
-      tsMicros = t0, epoch = 0L, parsed = req)).toDS().toDF()
+    val ev0 = ChangeEvent("rP", "p", "rP", "scala", MessageParser.format(req),
+      offset = 1L, op = "insert", tsMicros = t0, epoch = 0L)
+    val seeded = Seq((ev0, decoy)).toDF("e", "parsed").select("e.*", "parsed")
       .withColumn("content_sha256", sha2(col("content"), 256))
     eng.state.appendNew(seeded, 0L, assumeNew = true)
-    assert(eng.state.bornWith("parsed"))
 
-    // epoch 1 completes the session; the fold must classify from `parsed`
-    // (request started) — reading content would see a session with no
-    // request and drop it entirely
     val ack = SpineMessage(t0 + 60000000L, "rP", "g2", Interactions.ApplicationAck,
       "asid-s", "asid-r", Some("rP"), None, Some("Vision"), Some("SystemOne"))
-    val ev1 = Seq(ChangeEvent("rP", "p", "g2", "scala",
-      MessageParser.format(ack), offset = 2L, op = "insert",
-      tsMicros = ack.timeMicros, epoch = 1L)).toDS()
-    eng.applyEpoch(spark, ev1, 1L)
-    val rows = eng.currentTransfers(spark).collect()
-    assert(rows.length == 1, "session must classify from the parsed request")
-    assert(rows(0).getAs[String]("status") == "Technical failure")
-    assert(rows(0).getAs[String]("failureReason") == "Core extract not sent")
-  }
+    val ev1 = ChangeEvent("rP", "p", "g2", "scala", MessageParser.format(ack),
+      offset = 2L, op = "insert", tsMicros = ack.timeMicros, epoch = 1L)
+    eng.applyEpoch(spark, Seq(ev1).toDS(), 1L)
 
-  test("storeParsedState on/off produce identical transfers; off keeps state lean") {
-    val on = new CdcEngine(tmpDir("psd-on"), numBuckets = 8,
-      cutoffMicros = 14 * day, storeParsedState = true)
-    val off = new CdcEngine(tmpDir("psd-off"), numBuckets = 8,
-      cutoffMicros = 14 * day)
-    batches.foreach { case (e, b) => on.applyEpoch(spark, b, e) }
-    batches.foreach { case (e, b) => off.applyEpoch(spark, b, e) }
-    assert(shaMap(on.currentTransfers(spark)) == shaMap(off.currentTransfers(spark)),
-      "the stored-parse path must not change any classification")
-    assert(LakeTable.readSnapshot(on.state, spark).columns.contains("parsed"))
-    assert(!LakeTable.readSnapshot(off.state, spark).columns.contains("parsed"),
-      "flag off must not bloat state with the parsed column")
-    // a warehouse born with stored parses refuses a flag-off engine
-    val wrong = new CdcEngine(on.warehouse, numBuckets = 8, cutoffMicros = 14 * day)
-    intercept[IllegalArgumentException] {
-      wrong.applyEpoch(spark, log.filter(_.epoch == 0L), 100L)
-    }
+    val want = shaMap(CdcPipeline.withRowSha(
+      CdcPipeline.classify(Seq(ev0, ev1).toDS(), 14 * day).toDF()))
+    assert(want.size == 1, "the content events classify to one transfer")
+    assert(shaMap(eng.currentTransfers(spark)) == want, "content wins, parsed is ignored")
+    val fresh = LakeTable.readSnapshot(eng.state, spark).where(col("epoch") === 1L)
+    assert(fresh.count() == 1 && fresh.where(col("parsed").isNotNull).count() == 0,
+      "new state rows carry parsed = null")
   }
 
   test("batch-boundary invariance: random epoch splits converge to identical tables") {

@@ -1,6 +1,6 @@
 package graft.model
 
-import graft.cdc.{ApplyEvent, CdcPipeline, ChangeEvent, MessageParser, TransferRecord}
+import graft.cdc.{CdcPipeline, ChangeEvent, MessageParser, TransferRecord}
 import graft.classifier.{Interactions, SpineMessage}
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
@@ -135,18 +135,15 @@ object EquivalenceProps extends Properties("ModelEquivalence") {
     }
 
   /** The same sessions through the epoch fold: events of epochs 0 and 1 are
-    * prior state (parsed, no content), epoch-2 events are this epoch's raw
-    * batch. The generator's redelivered copies are epoch 2 at offset+1000,
+    * prior state (content kept, path/lang/op null as the engine reads them),
+    * epoch-2 events are this epoch's raw batch. The generator's redelivered copies are epoch 2 at offset+1000,
     * so they never win dedup and exercise the emit-on-change gate.
     */
   property("epoch fold (applyGroup) == independent model on arbitrary sessions") =
     forAll(caseGen) { c =>
       val events = eventsOf(c)
       val applyEvents = events.map { e =>
-        val prior = e.epoch < 2
-        ApplyEvent(e.repo, e.path, e.commit, e.lang,
-          content = if (prior) null else e.content, e.offset, e.op, e.tsMicros, e.epoch,
-          parsed = if (prior) MessageParser.parse(e.content) else null)
+        if (e.epoch < 2) e.copy(path = null, lang = null, op = null) else e
       }
       val outs = CdcPipeline.applyGroup("repo-rnd", applyEvents.iterator, c.cutoff,
         currentEpoch = 2L).toVector
