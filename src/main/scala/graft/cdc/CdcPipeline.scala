@@ -203,9 +203,10 @@ object CdcPipeline {
     * two table states are identical iff the (key → row_sha256) maps match.
     * `to_json(struct(...))` is deterministic given fixed column order.
     * Observability counters are excluded: `duplicatesDropped` depends on
-    * where redelivered copies were dropped (in-batch vs in-state
-    * insert-ignore) and the session counters are diagnostics, not semantic
-    * session state.
+    * where redelivered copies were dropped (in the batch, or against the
+    * durable state, where a lower-offset redelivery replaces its earlier
+    * copy) and the session counters are diagnostics, not semantic session
+    * state.
     */
   private val shaExcluded =
     Set("row_sha256", "duplicatesDropped", "danglingAcks", "unknownPurpose", "negativeSla")
@@ -269,8 +270,9 @@ object CdcPipeline {
   * maintains these lake tables —
   *
   *  - `state`:     the deduped event buffer per session key (merge identity
-  *                 (repo, commit), bucketed by repo, insert-ignore so the
-  *                 first-seen offset of a redelivered event is durable);
+  *                 (repo, commit), bucketed by repo, merge-on-read like
+  *                 every table; the fold's first-seen rule emits a key only
+  *                 when its copy wins, so one row per key stays live);
   *  - `transfers`: the classified output (merge identity repo, upsert via
   *                 merge-on-read deltas with bounded compaction);
   *  - `enriched` and `dimlog`, only when a `dim` is given: the transfers
@@ -379,7 +381,7 @@ final class CdcEngine(
     * rebuilt from the dimlog), so a strict-mode abort heals by refreshing
     * the dim and retrying the same epoch id.
     */
-  @volatile private var activeDimMonths: Option[Set[Int]] = dimMonths
+  private def activeDimMonths: Option[Set[Int]] = dimMonths.map(_ ++ dimDeltaMonthsAcc)
   def currentDimMonths: Option[Set[Int]] = { ensureDimState(); activeDimMonths }
 
   /** Highest dim version folded into `activeDim` (-1 = seed only). Version
@@ -439,19 +441,19 @@ final class CdcEngine(
     "strictDimMonths requires dimMonths — the engine can only fail fast on " +
       "months it knows are missing")
 
+  // every table is merge-on-read: per-epoch deltas + read-time
+  // last-writer-wins + bounded compaction — a hot bucket touched every epoch
+  // costs O(its upserts), not O(the whole bucket rewritten)
   val state = new LakeTable(s"$warehouse/state", numBuckets,
     keyColumns = Seq("repo", "commit"), bucketColumns = Seq("repo"),
     compactThreshold = compactThreshold, changeRetention = changeRetention)
-  // merge-on-read: per-epoch deltas + read-time last-writer-wins + bounded
-  // compaction — a hot bucket touched every epoch costs O(its upserts), not
-  // O(the whole bucket rewritten)
   val transfers = new LakeTable(s"$warehouse/transfers", numBuckets,
-    keyColumns = Seq("repo"), mergeOnRead = true,
+    keyColumns = Seq("repo"),
     compactThreshold = compactThreshold, changeRetention = changeRetention)
   /** The enriched-output table — only when a `dim` is supplied. */
   val enriched: Option[LakeTable] = dim.map(_ =>
     new LakeTable(s"$warehouse/enriched", numBuckets,
-      keyColumns = Seq("repo"), mergeOnRead = true,
+      keyColumns = Seq("repo"),
       compactThreshold = compactThreshold, changeRetention = changeRetention))
   /** The dim-update change log — its OWN manifest chain, so dim versions
     * never share the ingest epoch number space. Each `applyDimUpdate`
@@ -462,7 +464,7 @@ final class CdcEngine(
     */
   val dimlog: Option[LakeTable] = dim.map(_ =>
     new LakeTable(s"$warehouse/dimlog", numBuckets = 4,
-      keyColumns = Seq("asid", "yearMonth"), mergeOnRead = true))
+      keyColumns = Seq("asid", "yearMonth")))
 
   /** Rebuild the in-memory dim state from the durable dimlog chain, once
     * per engine instance: activeDim = seed ⊕ resolved dimlog snapshot
@@ -476,21 +478,10 @@ final class CdcEngine(
     dimlog.foreach { dl =>
       dl.latestManifest() match {
         case Some(head) =>
-          val spark = dim.get.sparkSession
-          import spark.implicits._
-          val snap = LakeTable.readSnapshot(dl, spark)
+          val snap = LakeTable.readSnapshot(dl, dim.get.sparkSession)
             .select(dim.get.columns.map(col).toIndexedSeq: _*)
           // activeDim here is still the (deduped) seed — dimInited is false
-          val folded = activeDim.get
-            .join(snap.select("asid", "yearMonth").distinct(),
-              Seq("asid", "yearMonth"), "left_anti")
-            .unionByName(snap)
-          activeDim = Some(CdcEngine.materializeDim(folded))
-          activeDimChanged()
-          val ms = snap.select(col("yearMonth").cast("int")).distinct()
-            .as[Int].collect().toSet
-          activeDimMonths = activeDimMonths.map(_ ++ ms)
-          dimDeltaMonthsAcc ++= ms
+          foldDeltaIntoActive(snap)
           dimVersion = head.epoch
         case None =>
           // no dimlog head: materialize the (deduped) seed to a local
@@ -522,7 +513,7 @@ final class CdcEngine(
     * Pre-flight: the epoch id is validated against EVERY table's manifest
     * chain BEFORE any commit future launches. Without this, a maintenance
     * commit squatting on `epoch` in (say) the transfers chain only throws
-    * inside its own commit future — AFTER the concurrent state appendNew
+    * inside its own commit future — AFTER the concurrent state commit
     * may have durably committed the batch's events under the contested id.
     * A retry under a corrected (different) id then re-stamps the batch,
     * dedup resolves every commit to the already-durable earlier-epoch copy,
@@ -585,9 +576,9 @@ final class CdcEngine(
     * batch, so at steady state only sessions the batch actually touches flow
     * through the single bucket-keyed fold (CdcPipeline.foldPartition), which
     * emits both the classified transfers AND the fresh state events. Both
-    * sinks are O(batch) writes — appendNew for state, mergeDelta
-    * (merge-on-read) for transfers — so bucket-mate sessions untouched by
-    * the batch are neither re-classified nor re-written.
+    * sinks are O(batch) merge-on-read `mergeDelta` writes, so bucket-mate
+    * sessions untouched by the batch are neither re-classified nor
+    * re-written.
     */
   def applyEpoch(spark: SparkSession, rawEvents: Dataset[ChangeEvent], epoch: Long): Manifest = {
     preflight(epoch) match {
@@ -614,7 +605,7 @@ final class CdcEngine(
     * Semantics are identical to calling `applyEpoch` in order:
     *  - epoch e+1's prior state is snapshot(head before e's commit) ∪ e's
     *    cached fold output — by construction exactly the row set e's
-    *    `appendNew` is making durable (see `foldEpoch`); the fold input,
+    *    state commit is making durable (see `foldEpoch`); the fold input,
     *    and therefore every output row, matches the sequential run;
     *  - e's commits are AWAITED before e+1's commits launch, so each
     *    manifest chain stays gap-free and parent-ordered; a crash leaves at
@@ -681,11 +672,12 @@ final class CdcEngine(
     * PREVIOUS epoch's commits are still in flight, its manifest is not yet
     * readable, but its fold output is — so prior state is assembled as
     * snapshot(asOf = head before the in-flight commit) ∪ pending fresh
-    * events, which is by construction exactly the row set the in-flight
-    * `appendNew` is making durable (assumeNew appends precisely
-    * `freshEvents`; data files are immutable and never deleted, so the
-    * as-of read cannot race the concurrent commit). Non-pipelined callers
-    * pass (Long.MaxValue, None) — read the latest durable snapshot.
+    * events: the rows the in-flight state commit makes durable (it writes
+    * precisely `freshEvents`), plus any older copy a fresh event supersedes,
+    * which the fold's dedup drops either way. Data files are immutable and
+    * never deleted, so the as-of read cannot race the concurrent commit.
+    * Non-pipelined callers pass (Long.MaxValue, None) — read the latest
+    * durable snapshot.
     */
   private def foldEpoch(spark: SparkSession, rawEvents: Dataset[ChangeEvent],
                         epoch: Long, stateAsOf: Long,
@@ -819,14 +811,10 @@ final class CdcEngine(
       // for BOTH table commits plus the observability counter sums —
       // replaces three separate aggregation jobs per epoch (per-epoch
       // barriers are the fixed cost that dominates small batches)
-      val ymExpr = {
-        val ts = timestamp_micros(col("transfer.dateRequestedMicros"))
-        (year(ts) * 100 + month(ts)).cast("int")
-      }
+      val ymExpr = Enrichment.requestMonth(col("transfer.dateRequestedMicros"))
       val missingDimFlag: org.apache.spark.sql.Column = activeDimMonths match {
         case Some(ms) =>
-          val prevYm = when(pmod(ymExpr, lit(100)) === 1, ymExpr - 89)
-            .otherwise(ymExpr - 1)
+          val prevYm = Enrichment.prevMonth(ymExpr)
           val missing =
             if (ms.isEmpty) col("transfer").isNotNull
             else col("transfer").isNotNull &&
@@ -933,10 +921,10 @@ final class CdcEngine(
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     val stateF = Future {
+      // the job description predates mergeDelta; traces and tests key on it
       desc("state commit (appendNew)")
-      // assumeNew: the fold already guarantees first-seen-only events
-      state.appendNew(f.freshEvents, epoch, metadata = f.meta, lineage = f.lineage,
-        assumeNew = true, compactInline = inlineCompaction,
+      state.mergeDelta(f.freshEvents, epoch, metadata = f.meta, lineage = f.lineage,
+        compactInline = inlineCompaction,
         aligned = Some(BucketAligned(f.numBuckets, f.eventStats)))
     }
     val transfersF = Future {
@@ -1105,10 +1093,8 @@ final class CdcEngine(
           Seq("asid", "yearMonth"), "left_anti")
         .unionByName(delta)))
     activeDimChanged()
-    val ms = delta.select(col("yearMonth").cast("int")).distinct()
+    dimDeltaMonthsAcc ++= delta.select(col("yearMonth").cast("int")).distinct()
       .as[Int].collect().toSet
-    activeDimMonths = activeDimMonths.map(_ ++ ms)
-    dimDeltaMonthsAcc ++= ms
   }
 
   /** Retro-correction rows pending from dim versions newer than the
@@ -1138,8 +1124,7 @@ final class CdcEngine(
     if (asids.isEmpty) return None
     val yms = deltas.select(col("yearMonth").cast("int")).distinct()
       .as[Int].collect().toSet
-    def nextM(ym: Int): Int = if (ym % 100 == 12) ym + 89 else ym + 1
-    val affectedMonths = yms.flatMap(ym => Set(ym, nextM(ym))) // fallback reach
+    val affectedMonths = yms.flatMap(ym => Set(ym, Enrichment.nextMonth(ym))) // fallback reach
     // WHOLE-MONTH fallback semantics (organisation_metadata_monthly.py:
     // 26-34): a delta that INTRODUCES a previously-absent month changes
     // resolution for EVERY asid of the request months that month serves —
@@ -1155,11 +1140,10 @@ final class CdcEngine(
         .as[Int].collect().toSet
     }
     val introduced = yms.filterNot(monthsAtV0)
-    val monthWide = introduced ++ introduced.map(nextM).filterNot(monthsAtV0)
+    val monthWide = introduced ++ introduced.map(Enrichment.nextMonth).filterNot(monthsAtV0)
     val t = transfers.snapshot(spark, asOf = asOf)
     if (t.columns.isEmpty) return None
-    val ymCol = (year(timestamp_micros(col("dateRequestedMicros"))) * 100 +
-      month(timestamp_micros(col("dateRequestedMicros")))).cast("int")
+    val ymCol = Enrichment.requestMonth(col("dateRequestedMicros"))
     val asidScoped =
       (col("requestingPracticeAsid").isin(asids.toSeq: _*) ||
         col("sendingPracticeAsid").isin(asids.toSeq: _*)) &&

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,6 +21,19 @@ import org.apache.spark.sql.functions._
   * shuffled for enrichment.
   */
 object Enrichment {
+
+  /** The month before / after a yyyymm month. */
+  def prevMonth(ym: Int): Int = if (ym % 100 == 1) ym - 89 else ym - 1
+  def nextMonth(ym: Int): Int = if (ym % 100 == 12) ym + 89 else ym + 1
+
+  /** `prevMonth` over a yyyymm column. */
+  def prevMonth(ym: Column): Column = when(pmod(ym, lit(100)) === 1, ym - 89).otherwise(ym - 1)
+
+  /** The yyyymm (UTC) of an epoch-micros timestamp column. */
+  def requestMonth(micros: Column): Column = {
+    val ts = timestamp_micros(micros)
+    (year(ts) * 100 + month(ts)).cast("int")
+  }
 
   /** The monthly organisation dimension row. */
   final case class OrgDimRow(
@@ -139,10 +152,9 @@ object Enrichment {
     import dim.sparkSession.implicits._
     val months = queryMonths.distinct.sorted
     val present = presentMonthsHint.getOrElse(presentMonths(dim))
-    def prev(ym: Int): Int = if (ym % 100 == 1) ym - 89 else ym - 1
     val mapping = months.flatMap { qm =>
       if (present(qm)) Some((qm, qm))
-      else if (present(prev(qm))) Some((qm, prev(qm)))
+      else if (present(prevMonth(qm))) Some((qm, prevMonth(qm)))
       else None
     }
     val mapDf = mapping.toDF("__qm", "__src")
@@ -188,8 +200,7 @@ object Enrichment {
   def missingDimMonths(dim: DataFrame, queryMonths: Seq[Int],
                        presentMonthsHint: Option[Set[Int]] = None): Seq[Int] = {
     val present = presentMonthsHint.getOrElse(presentMonths(dim))
-    def prev(ym: Int): Int = if (ym % 100 == 1) ym - 89 else ym - 1
-    queryMonths.distinct.sorted.filterNot(ym => present(ym) || present(prev(ym)))
+    queryMonths.distinct.sorted.filterNot(ym => present(ym) || present(prevMonth(ym)))
   }
 
   /** Dim column → enriched column suffix, per practice role. */
@@ -217,8 +228,7 @@ object Enrichment {
     * and broadcast-small, as for `enrich`.
     */
   def effectiveMap(dim: DataFrame, present: Set[Int]): EffectiveDim = {
-    def next(ym: Int): Int = if (ym % 100 == 12) ym + 89 else ym + 1
-    effectiveAsOf(dim, (present ++ present.map(next)).toSeq, Some(present))
+    effectiveAsOf(dim, (present ++ present.map(nextMonth)).toSeq, Some(present))
       .select("asid", "yearMonth", "odsCode", "name", "sicblOdsCode", "sicblName")
       .collect()
       .map(r => (r.getString(0), r.getInt(1)) ->
@@ -236,8 +246,7 @@ object Enrichment {
   def enrichWith(transfers: DataFrame,
                  eff: org.apache.spark.broadcast.Broadcast[EffectiveDim]): DataFrame = {
     val practice = udf((asid: String, ym: Int) => eff.value.get((asid, ym)))
-    val ym = (year(timestamp_micros(col("dateRequestedMicros"))) * 100 +
-      month(timestamp_micros(col("dateRequestedMicros")))).cast("int")
+    val ym = requestMonth(col("dateRequestedMicros"))
     def role(struct: String, prefix: String) =
       roleFields.map { case (f, n) => col(s"$struct.$f").as(s"${prefix}_$n") }
     transfers
@@ -276,10 +285,7 @@ object Enrichment {
     // TRANSFERS, which executed the caller's whole upstream plan once extra
     // per enrich call (measured: c02/c05 ran generate+classify twice).
     val present = presentMonthsHint.getOrElse(presentMonths(dim))
-    val months = monthsHint.getOrElse {
-      def next(ym: Int): Int = if (ym % 100 == 12) ym + 89 else ym + 1
-      (present ++ present.map(next)).toSeq
-    }
+    val months = monthsHint.getOrElse((present ++ present.map(nextMonth)).toSeq)
     // Schema-stable even for an empty/month-less input: callers union
     // enriched frames from different epochs (the CDC engine's pending
     // retro-correction rides a later epoch's commit), so a months-empty
@@ -296,9 +302,7 @@ object Enrichment {
       (col("asid").as("__snd_asid") +: col("yearMonth").as("__ym_s") +:
         roleCols("sending")): _*)
     transfers
-      .withColumn("__ym",
-        (year(timestamp_micros(col("dateRequestedMicros"))) * 100 +
-          month(timestamp_micros(col("dateRequestedMicros")))).cast("int"))
+      .withColumn("__ym", requestMonth(col("dateRequestedMicros")))
       .join(broadcast(reqDim),
         col("requestingPracticeAsid") === col("__req_asid") &&
           col("__ym") === col("__ym_r"), "left_outer")

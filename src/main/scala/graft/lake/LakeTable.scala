@@ -66,9 +66,9 @@ final case class Manifest(
     files: Seq[FileEntry],   // the COMPLETE live set (snapshot-style)
     metadata: Map[String, String],
     lineage: Map[String, Long], // e.g. minOffset/maxOffset/upsertRows/totalRows
-    /** What produced this epoch: "write" (mergeDelta/appendNew),
-      * "compact", or "rebucket". Epoch ids are one shared number space per
-      * table, so the skip-if-present guards use this to turn an id
+    /** What produced this epoch: "write" (mergeDelta), "compact", or
+      * "rebucket". Epoch ids are one shared number space per table, so
+      * the skip-if-present guards use this to turn an id
       * COLLISION (an ingest epoch reusing a maintenance id, or vice versa)
       * into a loud error instead of a silent lost write. Absent in
       * pre-field manifests → renormalized to "write".
@@ -76,9 +76,9 @@ final case class Manifest(
     kind: String = "write",
 )
 
-/** A key-bucketed lake table over plain Parquet + JSON manifests, with two
-  * write paths: merge-on-read upserts (`mergeDelta`) and insert-ignore
-  * appends (`appendNew`).
+/** A key-bucketed, merge-on-read lake table over plain Parquet + JSON
+  * manifests, with one write path: `mergeDelta` upserts write only the
+  * upsert rows, and reads keep the newest version of each key.
   *
   * Scale design (the part that must survive 100 TB / 1000 executors):
   *  - data is hash-bucketed on the merge key into `numBuckets` buckets
@@ -113,15 +113,6 @@ final class LakeTable(
       * buckets on repo so an epoch apply prunes to the touched repos' buckets.
       */
     val bucketColumns: Seq[String] = Seq.empty,
-    /** Merge-on-read: `mergeDelta` commits write ONLY the upsert rows (a
-      * per-epoch delta file per touched bucket) instead of copy-on-writing
-      * the whole bucket; `snapshot` resolves last-writer-wins per key by the
-      * per-row `__epoch` stamp, bucket-locally and only in buckets that
-      * hold more than one live file. Commit cost is O(upserts), read cost is
-      * bounded by `compactThreshold` (over-threshold buckets are compacted
-      * back to one resolved file set inside the committing job).
-      */
-    val mergeOnRead: Boolean = false,
     /** Max live files per bucket before a commit compacts that bucket. The
       * EFFECTIVE threshold is jittered per bucket (threshold + bucket mod
       * threshold, i.e. in [threshold, 2·threshold)): without jitter every
@@ -256,10 +247,10 @@ final class LakeTable(
   }
 
   /** Current snapshot as a DataFrame (bucket-pruned when `buckets` given).
-    * Merge-on-read tables resolve last-writer-wins per key, but ONLY in
-    * buckets holding >1 live file, and bucket-locally: one task reads all of
-    * such a bucket's files and keeps each key's newest version, with no
-    * exchange (`ManifestRead.bucketLocal`). Freshly-compacted /
+    * Resolves last-writer-wins per key, but ONLY in buckets holding >1 live
+    * file, and bucket-locally: one task reads all of such a bucket's files
+    * and keeps each key's newest version, with no exchange
+    * (`ManifestRead.bucketLocal`). Freshly-compacted /
     * single-commit buckets read straight through. Predicates on key columns
     * push below the resolution into the parquet readers; any other
     * predicate applies to the resolved rows. The result reports no
@@ -284,13 +275,12 @@ final class LakeTable(
         val live = key0.fold(bucketLive)(v => bucketLive.filter(f => mayContain(f, v)))
         if (live.isEmpty) spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        else if (!mergeOnRead) readEntries(spark, live, schema)
         else {
           val withEpoch = withEpochCol(schema)
           val (single, multi) = byBucket(live).partition(_.size == 1)
           Seq(
             if (single.isEmpty) None else Some(readEntries(spark, single.flatten, withEpoch)),
-            if (multi.isEmpty) None else Some(bucketLocal(spark, multi, withEpoch, resolve = true)),
+            if (multi.isEmpty) None else Some(bucketLocal(spark, multi, withEpoch)),
           ).flatten.reduce(_.unionByName(_)).drop("__epoch")
         }
     }
@@ -362,14 +352,12 @@ final class LakeTable(
     org.apache.spark.sql.graftbridge.ManifestRead.parquet(spark, leafFiles(fs), schema)
 
   /** The bucket-local read: each bucket is read whole by one task, which
-    * resolves last-writer-wins by `__epoch` (`resolve`) or concatenates the
-    * bucket's files. `schema` must carry `__epoch` when resolving.
+    * resolves last-writer-wins by `__epoch`. `schema` must carry `__epoch`.
     */
   private def bucketLocal(spark: SparkSession, buckets: Seq[Seq[FileEntry]],
-                          schema: StructType, resolve: Boolean): DataFrame =
+                          schema: StructType): DataFrame =
     org.apache.spark.sql.graftbridge.ManifestRead.bucketLocal(spark,
-      buckets.map(leafFiles), schema, keyColumns,
-      if (resolve) Some("__epoch") else None)
+      buckets.map(leafFiles), schema, keyColumns, "__epoch")
 
   /** The one bucket write: rows sorted within each partition by (bucket,
     * key) — the key order bucket-local resolution merges on — into one
@@ -383,11 +371,9 @@ final class LakeTable(
   /** Rewrite each over-threshold bucket's COMPACTABLE files (older than the
     * `changeRetention` horizon) into one file set, in ONE job: a bucket-local
     * read (each bucket whole in one task) that resolves superseded key
-    * versions away (merge-on-read tables) or concatenates (append-only
-    * tables), written back by the same tasks — no exchange, one file per
-    * bucket, per-row `__epoch` preserved. Row counts for the concat path
-    * come from the manifest; the resolve path counts its rows inside the
-    * write job (`Dataset.observe`). Bounds are derived min-of-mins /
+    * versions away, written back by the same tasks — no exchange, one file
+    * per bucket, per-row `__epoch` preserved. Row counts are counted inside
+    * the write job (`Dataset.observe`). Bounds are derived min-of-mins /
     * max-of-maxs — a superset of the true range after resolution, which is
     * safe for pruning. `nb` is the layout's bucket count. Returns the
     * updated live-file list, or `files` unchanged when nothing crosses its
@@ -403,19 +389,14 @@ final class LakeTable(
     val cInput = files.filter(f => overfull.contains(f.bucket) && f.epochAdded <= horizon)
     val inByBucket = cInput.groupBy(_.bucket)
     val cDirRel = f"data/e$epoch%012dc"
-    val read = bucketLocal(spark, byBucket(cInput), withEpochCol(schema), mergeOnRead)
+    val read = bucketLocal(spark, byBucket(cInput), withEpochCol(schema))
       .withColumn("__bucket", bucketCol(nb))
-    val counted = if (mergeOnRead) Some(org.apache.spark.sql.Observation()) else None
-    writeBuckets(counted.fold(read) { o =>
-      val perBucket = overfull.toSeq.sorted.map(b => count_if(col("__bucket") === b).as(b.toString))
-      read.observe(o, perBucket.head, perBucket.tail: _*)
-    }, cDirRel)
-    val rowsByBucket: Map[Int, Long] = counted match {
-      case Some(o) =>
-        val n = o.get
-        overfull.map(b => b -> n(b.toString).asInstanceOf[Long]).filter(_._2 > 0).toMap
-      case None => inByBucket.map { case (b, fs) => b -> fs.map(_.rows).sum }
-    }
+    val counted = org.apache.spark.sql.Observation()
+    val perBucket = overfull.toSeq.sorted.map(b => count_if(col("__bucket") === b).as(b.toString))
+    writeBuckets(read.observe(counted, perBucket.head, perBucket.tail: _*), cDirRel)
+    val n = counted.get
+    val rowsByBucket: Map[Int, Long] =
+      overfull.map(b => b -> n(b.toString).asInstanceOf[Long]).filter(_._2 > 0).toMap
     // Derived bounds must use the SAME comparator that wrote them and that
     // mayContain prunes with — UTF8String byte order. Scala's String
     // ordering (UTF-16 code units) disagrees for supplementary characters
@@ -497,8 +478,8 @@ final class LakeTable(
           numBuckets = s.numBuckets,
           files = s.files,
           metadata = s.metadata,
-          // totalRows is PHYSICAL rows for a merge-on-read table (superseded
-          // versions included until compaction)
+          // totalRows is PHYSICAL rows (superseded versions included until
+          // compaction)
           lineage = s.lineage ++ Map("totalRows" -> s.files.map(_.rows).sum),
           kind = kind,
         )
@@ -575,10 +556,19 @@ final class LakeTable(
     * O(upserts) even when hot buckets are touched every epoch, at the cost
     * of a read-side resolution that stays bounded: any bucket exceeding
     * `compactThreshold` live files is compacted back to a single file set
-    * inside the committing job. Only a `mergeOnRead` table resolves
-    * versions at read time, so any other table refuses the call. New
-    * nullable upsert columns evolve the schema (`evolveSchema`); exactly-once
-    * and crash atomicity come from `publish`.
+    * inside the committing job. New nullable upsert columns evolve the
+    * schema (`evolveSchema`); exactly-once and crash atomicity come from
+    * `publish`.
+    *
+    * Against the parent manifest `publish` read, each row is stamped with
+    * its `__bucket` under the parent's bucket count and its `__epoch` (the
+    * row-level commit stamp: it survives compaction, so resolution and
+    * `changesSince` stay exact). `aligned` input under the parent's bucket
+    * count is written as it stands, with its stats. Any other input pays
+    * one query for the exact per-bucket stats of the rows to write — their
+    * keys are the touched buckets, their largest count sets the salt, and
+    * they become the manifest's counts — and is repartitioned by (bucket,
+    * salt).
     *
     * REQUIRES one row per key per commit (the classify fold emits exactly
     * that): two versions of a key in ONE batch share an `__epoch` stamp,
@@ -609,61 +599,11 @@ final class LakeTable(
                    * kind so an ingest epoch colliding with their id fails
                    * loudly instead of silently skipping (see committedAs).
                    */
-                 kind: String = "write"): Manifest = {
-    require(mergeOnRead, s"mergeDelta needs a mergeOnRead table: $root does not " +
-      "resolve versions at read time, so an upserted key would stay live twice")
-    write(upserts, epoch, kind, metadata, lineage, compactInline, aligned,
-      insertIgnore = false)
-  }
-
-  /** Append-only commit for insert-ignore tables (e.g. the sessions-state
-    * event buffer): rows whose key already exists are dropped via a
-    * bucket-pruned LEFT ANTI join on the key columns only (column-pruned
-    * read of prior files), and ONLY the new rows are written — untouched
-    * files are carried, so write amplification is O(batch), never O(bucket).
-    * Same exactly-once/atomicity rules as mergeDelta().
-    */
-  def appendNew(upserts: DataFrame, epoch: Long,
-                metadata: Map[String, String] = Map.empty,
-                lineage: Map[String, Long] = Map.empty,
-                /** true ⇒ caller guarantees no key already exists (e.g. the
-                  * epoch fold only emits first-seen events) — skips the
-                  * prior-keys anti-join read entirely.
-                  */
-                assumeNew: Boolean = false,
-                /** false ⇒ skip inline compaction (see mergeDelta). */
-                compactInline: Boolean = true,
-                /** Pre-bucket-partitioned input with exact stats — see
-                  * mergeDelta. Requires `assumeNew`: the anti-join may drop
-                  * rows the stats count.
-                  */
-                aligned: Option[BucketAligned] = None): Manifest = {
-    require(aligned.isEmpty || assumeNew, "an aligned appendNew requires assumeNew")
-    write(upserts, epoch, "write", metadata, lineage, compactInline, aligned,
-      insertIgnore = !assumeNew)
-  }
-
-  /** The write core of `mergeDelta` and `appendNew`, run inside `publish`
-    * against the parent manifest it read. Evolves the schema, stamps each
-    * row's `__bucket` under the parent's bucket count and its `__epoch`
-    * (the row-level commit stamp: it survives compaction, so resolution and
-    * `changesSince` stay exact), and writes one file set per touched bucket.
-    * `aligned` input under the parent's bucket count is written as it
-    * stands, with its stats. Any other input pays one query for the exact
-    * per-bucket stats of the rows to write — their keys are the touched
-    * buckets, their largest count sets the salt, and they become the
-    * manifest's counts — and is repartitioned by (bucket, salt). Buckets
-    * over their threshold are then compacted inline, resolving exactly when
-    * the table is `mergeOnRead`.
-    */
-  private def write(input: DataFrame, epoch: Long, kind: String,
-                    metadata: Map[String, String], lineage: Map[String, Long],
-                    compactInline: Boolean, aligned: Option[BucketAligned],
-                    insertIgnore: Boolean): Manifest =
+                 kind: String = "write"): Manifest =
     publish(epoch, kind) { parent =>
       val nb = parent.fold(numBuckets)(_.numBuckets)
-      val (schema, schemaId) = evolveSchema(parent, input.schema)
-      val rows = conformTo(schema)(input)
+      val (schema, schemaId) = evolveSchema(parent, upserts.schema)
+      val rows = conformTo(schema)(upserts)
         .withColumn("__bucket", bucketCol(nb))
         .withColumn("__epoch", lit(epoch))
       val dirRel = f"data/e$epoch%012d"
@@ -673,11 +613,10 @@ final class LakeTable(
           if (a.stats.nonEmpty) writeBuckets(rows, dirRel)
           a.stats
         case None =>
-          val fresh = if (insertIgnore) withoutPriorKeys(rows, parent) else rows
-          val s = bucketStatsOf(fresh)
+          val s = bucketStatsOf(rows)
           if (s.nonEmpty) {
             val salt = effectiveSalt(s)
-            writeBuckets(fresh.repartition(math.min(nb, s.size) * salt,
+            writeBuckets(rows.repartition(math.min(nb, s.size) * salt,
               col("__bucket"), saltColFor(salt)), dirRel)
           }
           s
@@ -685,21 +624,9 @@ final class LakeTable(
       val files = (parent.fold(Seq.empty[FileEntry])(_.files) ++
         entriesFor(dirRel, epoch, stats)).sortBy(_.bucket)
       Some(Staged(
-        if (compactInline) compactOverfull(input.sparkSession, files, schema, epoch, nb)
+        if (compactInline) compactOverfull(upserts.sparkSession, files, schema, epoch, nb)
         else files,
         schemaId, schema.json, nb, metadata, lineage))
-    }
-
-  /** Insert-ignore: `rows` minus the keys the parent already holds in the
-    * buckets `rows` touches (a key-columns-only read of those buckets).
-    */
-  private def withoutPriorKeys(rows: DataFrame, parent: Option[Manifest]): DataFrame =
-    parent.fold(rows) { p =>
-      val touched = rows.select("__bucket").distinct().collect().map(_.getInt(0)).toSet
-      val live = p.files.filter(f => touched(f.bucket))
-      if (live.isEmpty) rows
-      else rows.join(readEntries(rows.sparkSession, live, schemaOf(p))
-        .select(keyColumns.map(col): _*), keyColumns, "left_anti")
     }
 
   /** Point lookup — the O(one bucket) read primitive a CDC-maintained table
@@ -832,15 +759,13 @@ final class LakeTable(
     * pruning works because a batch touches a small FRACTION of buckets, so
     * the bucket count must grow with the data (thousands at 100 TB, not the
     * handful a small table starts with). One full rewrite committed as a
-    * normal epoch (exactly-once semantics apply); merge-on-read tables are
-    * resolved bucket-locally on the OLD layout (no exchange), then the one
+    * normal epoch (exactly-once semantics apply): the table is resolved
+    * bucket-locally on the OLD layout (no exchange), then the one
     * repartition moves rows to the new bucket count, so the new layout
     * starts compact. Later commits and reads pick up the new count from the
     * manifest (`currentNumBuckets`). Point lookups hash with the AS-OF
     * manifest's bucket count, so time travel across a rebucket stays
-    * correct. NOTE:
-    * the rewrite resolves merge-on-read tables regardless of
-    * `changeRetention` — a `changesSince` consumer lagging past a rebucket
+    * correct. NOTE: the rewrite resolves regardless of `changeRetention` — a `changesSince` consumer lagging past a rebucket
     * sees only surviving versions (schedule rebuckets behind the slowest
     * consumer, like any compaction).
     */
@@ -848,10 +773,10 @@ final class LakeTable(
     publish(epoch, "rebucket") { parent =>
       val p = parent.getOrElse(
         throw new IllegalStateException("rebucket requires an existing table"))
-      // ALWAYS carry the per-row commit stamp through the rewrite — dropping
-      // it would break changesSince for append-only tables after a rebucket
-      val rewritten = bucketLocal(spark, byBucket(p.files), withEpochCol(schemaOf(p)),
-        resolve = mergeOnRead).withColumn("__bucket", bucketCol(newNumBuckets))
+      // carry the per-row commit stamp through the rewrite: changesSince
+      // and later resolution read it
+      val rewritten = bucketLocal(spark, byBucket(p.files), withEpochCol(schemaOf(p)))
+        .withColumn("__bucket", bucketCol(newNumBuckets))
       val dirRel = f"data/e$epoch%012dr"
       writeBuckets(rewritten.repartition(newNumBuckets, col("__bucket"),
         saltColFor(saltFactor)), dirRel)

@@ -48,12 +48,12 @@ final class ManifestFileIndex(files: Seq[(String, Long)],
 /** Read-only parquet format whose split unit is one whole lake bucket: the
   * index lists each bucket as a single unsplittable file (standing at its
   * first leaf's path, sized as all its leaves), and the reader opens every
-  * leaf of that bucket inside the one task. With `epochColumn` set the task
+  * leaf of that bucket inside the one task. A bucket of more than one leaf
   * resolves last-writer-wins there — per key, the row with the highest
-  * epoch (null epochs lose) — by a streaming merge of the leaves, each of
-  * which the lake's writers sorted by key. No exchange, and memory bounded
-  * by the bucket's leaf count, not its rows. Without `epochColumn` the
-  * leaves are concatenated.
+  * `epochColumn` (null epochs lose) — by a streaming merge of the leaves,
+  * each of which the lake's writers sorted by key. No exchange, and memory
+  * bounded by the bucket's leaf count, not its rows. A single leaf reads
+  * straight through.
   *
   * The scan reports no partitioning (Spark's `UnknownPartitioning`): the
   * lake's buckets are xxhash64-pmod buckets, not Spark's murmur3 hash
@@ -71,7 +71,7 @@ private final class BucketLocalFormat(
       * oldest commit first */
     units: Map[String, Seq[(String, Long)]],
     keyColumns: Seq[String],
-    epochColumn: Option[String]) extends FileFormat with Serializable {
+    epochColumn: String) extends FileFormat with Serializable {
 
   override def toString: String = "BucketLocalParquet"
 
@@ -90,7 +90,7 @@ private final class BucketLocalFormat(
       requiredSchema: StructType, filters: Seq[Filter], options: Map[String, String],
       hadoopConf: Configuration): PartitionedFile => Iterator[InternalRow] = {
     val keys = keyColumns.toSet
-    val needed = requiredSchema.fieldNames.toSet ++ keys ++ epochColumn
+    val needed = requiredSchema.fieldNames.toSet ++ keys + epochColumn
     val readSchema = StructType(dataSchema.filter(f => needed(f.name)))
     val leafRead = new ParquetFileFormat().buildReaderWithPartitionValues(
       spark, dataSchema, partitionSchema, readSchema,
@@ -98,7 +98,7 @@ private final class BucketLocalFormat(
       options + (FileFormat.OPTION_RETURNING_BATCH -> "false"), hadoopConf)
     val units = this.units
     val keyIdx = keyColumns.map(readSchema.fieldIndex)
-    val epochIdx = epochColumn.map(readSchema.fieldIndex)
+    val epochIdx = readSchema.fieldIndex(epochColumn)
     val outIdx = requiredSchema.fieldNames.toSeq.map(readSchema.fieldIndex)
 
     unit => {
@@ -109,16 +109,14 @@ private final class BucketLocalFormat(
       def open(file: (String, Long)): Iterator[InternalRow] =
         leafRead(PartitionedFile(InternalRow.empty, SparkPath.fromPath(new HPath(file._1)),
           0L, file._2, Array.empty[String], 0L, file._2))
-      epochIdx match {
-        case Some(e) if files.size > 1 =>
-          val toRow = UnsafeProjection.create(bound(readSchema.indices))
-          val keyOf = UnsafeProjection.create(bound(keyIdx))
-          val order = new InterpretedOrdering(keyIdx.indices.map(i =>
-            SortOrder(BoundReference(i, readSchema(keyIdx(i)).dataType, nullable = true),
-              Ascending)))
-          new LastWriterWins(files.map(open), toRow, keyOf, order, e).map(out)
-        case _ => files.iterator.flatMap(open).map(out) // one leaf open at a time
-      }
+      if (files.size > 1) {
+        val toRow = UnsafeProjection.create(bound(readSchema.indices))
+        val keyOf = UnsafeProjection.create(bound(keyIdx))
+        val order = new InterpretedOrdering(keyIdx.indices.map(i =>
+          SortOrder(BoundReference(i, readSchema(keyIdx(i)).dataType, nullable = true),
+            Ascending)))
+        new LastWriterWins(files.map(open), toRow, keyOf, order, epochIdx).map(out)
+      } else open(files.head).map(out)
     }
   }
 }
@@ -199,12 +197,12 @@ object ManifestRead {
 
   /** Bucket-local scan (see `BucketLocalFormat`): each element of `buckets`
     * is one bucket's leaf files, oldest commit first, and is read by exactly
-    * one task. With `epochColumn` the task resolves last-writer-wins per
-    * `keyColumns` value; without it the bucket's leaves are concatenated.
+    * one task, which resolves last-writer-wins by `epochColumn` per
+    * `keyColumns` value.
     */
   def bucketLocal(spark: SparkSession, buckets: Seq[Seq[(String, Long)]],
                   schema: StructType, keyColumns: Seq[String],
-                  epochColumn: Option[String]): DataFrame = {
+                  epochColumn: String): DataFrame = {
     val nonEmpty = buckets.filter(_.nonEmpty)
     val units = nonEmpty.map(b => b.head._1 -> b)
     val format = new BucketLocalFormat(

@@ -88,8 +88,7 @@ class CdcEngineSpec extends SparkSpec {
 
   test("schema evolution: new nullable column in a later epoch, old rows read as null") {
     val dir = tmpDir("evo")
-    val t = new LakeTable(s"$dir/t", numBuckets = 4, keyColumns = Seq("k"),
-      mergeOnRead = true)
+    val t = new LakeTable(s"$dir/t", numBuckets = 4, keyColumns = Seq("k"))
     t.mergeDelta(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), epoch = 0L)
     // epoch 1 adds a column
     t.mergeDelta(Seq(("b", 3L, "new"), ("c", 4L, "col")).toDF("k", "v", "extra"),
@@ -103,8 +102,7 @@ class CdcEngineSpec extends SparkSpec {
 
   test("crash between data write and manifest commit leaves state invisible") {
     val dir = tmpDir("crash")
-    val t = new LakeTable(s"$dir/t", numBuckets = 4, keyColumns = Seq("k"),
-      mergeOnRead = true)
+    val t = new LakeTable(s"$dir/t", numBuckets = 4, keyColumns = Seq("k"))
     t.mergeDelta(Seq(("a", 1L)).toDF("k", "v"), epoch = 0L)
     // simulate a crashed epoch-1 write: orphan data dir, no manifest
     val orphan = new java.io.File(s"$dir/t/data/e000000000001/__bucket=0")
@@ -171,7 +169,7 @@ class CdcEngineSpec extends SparkSpec {
   test("merge-on-read compaction bounds live files per bucket") {
     val dir = tmpDir("compact")
     val t = new LakeTable(s"$dir/t", numBuckets = 2, keyColumns = Seq("k"),
-      mergeOnRead = true, compactThreshold = 3)
+      compactThreshold = 3)
     // hammer one key: every epoch adds a delta file to the same bucket
     (0L to 9L).foreach { e =>
       t.mergeDelta(Seq(("hot", e)).toDF("k", "v"), epoch = e)
@@ -213,7 +211,7 @@ class CdcEngineSpec extends SparkSpec {
       .flatMapGroups((r, it) => CdcPipeline.applyGroup(r, it, cutoffLocal, 1L))
       .filter(_.event.isDefined).map(_.event.get).toDF()
       .withColumn("content_sha256", sh(c("content"), 256))
-    eng.state.appendNew(fresh, 1L, assumeNew = true)
+    eng.state.mergeDelta(fresh, 1L)
     assert(eng.state.latestManifest().get.epoch == 1L)
     assert(eng.transfers.latestManifest().get.epoch == 0L, "transfers must lag (crashed)")
 
@@ -453,6 +451,32 @@ class CdcEngineSpec extends SparkSpec {
     val st = LakeTable.readSnapshot(eng.state, spark)
     assert(st.count() == 1)
     assert(st.select("offset").as[Long].collect().head == 5L)
+  }
+
+  test("a lower-offset redelivery leaves one state row per (repo, commit)") {
+    // c1 lands at offset 900, then is redelivered at offset 5: the
+    // redelivered copy wins dedup, so the state keeps it in place of the
+    // first; a later epoch of the same session folds over that one row
+    val t0 = 1577836800000000L
+    def ev(commit: String, interaction: String, ts: Long, offset: Long,
+           epoch: Long): ChangeEvent =
+      ChangeEvent("r1", "p", commit, "scala",
+        MessageParser.format(graft.classifier.SpineMessage(ts, "r1", commit,
+          interaction, "a", "b", None, None, None, None)),
+        offset = offset, op = "insert", tsMicros = ts, epoch = epoch)
+    import graft.classifier.Interactions.{CommonPointToPoint, EhrRequestStarted}
+    val events = Seq(
+      ev("c1", EhrRequestStarted, t0, offset = 900L, epoch = 0L),
+      ev("c1", EhrRequestStarted, t0, offset = 5L, epoch = 1L),
+      ev("c2", CommonPointToPoint, t0 + 60L * 1000000L, offset = 901L, epoch = 2L))
+    val eng = new CdcEngine(tmpDir("lower-offset"), numBuckets = 4, cutoffMicros = 0L)
+    events.foreach(e => eng.applyEpoch(spark, Seq(e).toDS(), e.epoch))
+    val st = LakeTable.readSnapshot(eng.state, spark)
+      .select("commit", "offset").as[(String, Long)].collect().sorted.toSeq
+    assert(st == Seq(("c1", 5L), ("c2", 901L)), s"state rows: $st")
+    val want = shaMap(CdcPipeline.withRowSha(
+      CdcPipeline.classify(events.toDS(), 0L).toDF()))
+    assert(shaMap(eng.currentTransfers(spark)) == want)
   }
 
   test("changeRetention via the engine keeps lagging change-consumers' versions") {

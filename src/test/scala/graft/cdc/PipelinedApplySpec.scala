@@ -99,7 +99,7 @@ class PipelinedApplySpec extends SparkSpec {
       .flatMapGroups((r, it) => CdcPipeline.applyGroup(r, it, cutoffLocal, 1L))
       .filter(_.event.isDefined).map(_.event.get).toDF()
       .withColumn("content_sha256", sh(c("content"), 256))
-    eng.state.appendNew(fresh, 1L, assumeNew = true)
+    eng.state.mergeDelta(fresh, 1L)
     assert(eng.transfers.latestManifest().get.epoch == 0L, "transfers must lag")
 
     // the restarted PIPELINED driver replays the whole range and heals
@@ -128,7 +128,7 @@ class PipelinedApplySpec extends SparkSpec {
       offset = 1L, op = "insert", tsMicros = t0, epoch = 0L)
     val seeded = Seq((ev0, decoy)).toDF("e", "parsed").select("e.*", "parsed")
       .withColumn("content_sha256", sha2(col("content"), 256))
-    eng.state.appendNew(seeded, 0L, assumeNew = true)
+    eng.state.mergeDelta(seeded, 0L)
 
     val ack = SpineMessage(t0 + 60000000L, "rP", "g2", Interactions.ApplicationAck,
       "asid-s", "asid-r", Some("rP"), None, Some("Vision"), Some("SystemOne"))

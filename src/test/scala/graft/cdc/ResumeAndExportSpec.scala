@@ -169,7 +169,7 @@ class ResumeAndExportSpec extends SparkSpec {
   test("incremental export clears a day whose rows all moved away") {
     import graft.lake.LakeTable
     val t = new LakeTable(tmpDir("move") + "/t", numBuckets = 2,
-      keyColumns = Seq("repo"), mergeOnRead = true)
+      keyColumns = Seq("repo"))
     val d1 = 1577836800000000L // 2020-01-01
     val d2 = d1 + 86400L * 1000000L // 2020-01-02
     t.mergeDelta(Seq(("r1", d1), ("r2", d2)).toDF("repo", "dateRequestedMicros"), 0L)
@@ -197,7 +197,7 @@ class ResumeAndExportSpec extends SparkSpec {
     // from "file:/…" is relative and misses the day directory
     import graft.lake.LakeTable
     val t = new LakeTable(tmpDir("move-uri") + "/t", numBuckets = 2,
-      keyColumns = Seq("repo"), mergeOnRead = true)
+      keyColumns = Seq("repo"))
     val d1 = 1577836800000000L // 2020-01-01
     val d2 = d1 + 86400L * 1000000L // 2020-01-02
     t.mergeDelta(Seq(("r1", d1), ("r2", d2)).toDF("repo", "dateRequestedMicros"), 0L)

@@ -17,7 +17,7 @@ class BucketLocalSpec extends SparkSpec {
     * key is (k, 10 * last epoch + key index). */
   private def multiFileTable(name: String, epochs: Int): LakeTable = {
     val t = new LakeTable(tmpDir(name) + "/t", numBuckets = 4,
-      keyColumns = Seq("k"), mergeOnRead = true, compactThreshold = 99)
+      keyColumns = Seq("k"), compactThreshold = 99)
     (0 until epochs).foreach { e =>
       t.mergeDelta(keys.zipWithIndex.map { case (k, i) => (k, 10L * e + i) }.toDF("k", "v"),
         e.toLong)
@@ -60,7 +60,7 @@ class BucketLocalSpec extends SparkSpec {
     (1 to 5).foreach { seed =>
       val rng = new scala.util.Random(seed)
       val t = new LakeTable(tmpDir(s"bl-fold-$seed") + "/t", numBuckets = 3,
-        keyColumns = Seq("k"), mergeOnRead = true, compactThreshold = 2)
+        keyColumns = Seq("k"), compactThreshold = 2)
       val ks = ('a' to 'f').map(_.toString)
       val bucketOf = ks.toDF("k").select(col("k"), pmod(xxhash64(col("k")), lit(3)).cast("int"))
         .as[(String, Int)].collect().toMap

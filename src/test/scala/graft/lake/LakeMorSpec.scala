@@ -15,7 +15,7 @@ class LakeMorSpec extends SparkSpec {
     (1 to 5).foreach { seed =>
       val rng = new scala.util.Random(seed)
       val t = new LakeTable(tmpDir(s"mor-prop-$seed") + "/t", numBuckets = 3,
-        keyColumns = Seq("k"), mergeOnRead = true, compactThreshold = 2)
+        keyColumns = Seq("k"), compactThreshold = 2)
       val keys = ('a' to 'f').map(_.toString)
       var expectedAt = Map.empty[Long, Map[String, Long]] // epoch → lww map
       var current = Map.empty[String, Long]
@@ -65,7 +65,7 @@ class LakeMorSpec extends SparkSpec {
 
   test("snapshot reads are manifest-planned: exact file set, no listing index") {
     val t = new LakeTable(tmpDir("mplan") + "/t", numBuckets = 3,
-      keyColumns = Seq("k"), mergeOnRead = true)
+      keyColumns = Seq("k"))
     t.mergeDelta(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), 0L)
     t.mergeDelta(Seq(("b", 3L), ("c", 4L)).toDF("k", "v"), 1L)
 
@@ -98,7 +98,7 @@ class LakeMorSpec extends SparkSpec {
 
   test("changesSince returns exactly the row versions committed in the range") {
     val t = new LakeTable(tmpDir("changes") + "/t", numBuckets = 2,
-      keyColumns = Seq("k"), mergeOnRead = true, compactThreshold = 2)
+      keyColumns = Seq("k"), compactThreshold = 2)
     t.mergeDelta(Seq(("a", 0L), ("b", 0L)).toDF("k", "v"), epoch = 0L)
     t.mergeDelta(Seq(("a", 1L)).toDF("k", "v"), epoch = 1L)
     t.mergeDelta(Seq(("b", 2L), ("c", 2L)).toDF("k", "v"), epoch = 2L)
@@ -120,10 +120,10 @@ class LakeMorSpec extends SparkSpec {
       .select("k", "v").as[(String, Long)].collect().toSet
     assert(afterCompact == Set(("d", 4L)), s"carried rows re-reported: $afterCompact")
 
-    // append-only tables stream too (compaction keeps per-row stamps)
+    // fresh-key commits stream too (compaction keeps per-row stamps)
     val app = new LakeTable(tmpDir("changes-app") + "/t", numBuckets = 2,
       keyColumns = Seq("k"), compactThreshold = 2)
-    (0L until 6L).foreach(e => app.appendNew(Seq((s"k$e", e)).toDF("k", "v"), e))
+    (0L until 6L).foreach(e => app.mergeDelta(Seq((s"k$e", e)).toDF("k", "v"), e))
     val appChanges = app.changesSince(spark, sinceEpoch = 3L)
       .select("k").as[String].collect().toSet
     assert(appChanges == Set("k4", "k5"), s"got $appChanges")
@@ -131,7 +131,7 @@ class LakeMorSpec extends SparkSpec {
 
   test("point lookup reads one bucket only and returns the resolved row") {
     val t = new LakeTable(tmpDir("lookup") + "/t", numBuckets = 8,
-      keyColumns = Seq("k"), mergeOnRead = true)
+      keyColumns = Seq("k"))
     val keys = (0 until 40).map(i => s"k$i")
     t.mergeDelta(keys.map(k => (k, 1L)).toDF("k", "v"), epoch = 0L)
     t.mergeDelta(Seq(("k3", 2L)).toDF("k", "v"), epoch = 1L) // newer version
@@ -149,7 +149,7 @@ class LakeMorSpec extends SparkSpec {
   test("rebucket preserves per-row commit stamps (change stream survives)") {
     val t = new LakeTable(tmpDir("rebucket-changes") + "/t", numBuckets = 2,
       keyColumns = Seq("k"))
-    (0L until 4L).foreach(e => t.appendNew(Seq((s"k$e", e)).toDF("k", "v"), e))
+    (0L until 4L).foreach(e => t.mergeDelta(Seq((s"k$e", e)).toDF("k", "v"), e))
     t.rebucket(spark, newNumBuckets = 8, epoch = 4L)
     assert(t.currentNumBuckets == 8)
     val changes = t.changesSince(spark, sinceEpoch = 1L)
@@ -162,7 +162,7 @@ class LakeMorSpec extends SparkSpec {
     val t = new LakeTable(tmpDir("append-compact") + "/t", numBuckets = 2,
       keyColumns = Seq("k"), compactThreshold = 3)
     (0L until 10L).foreach { e =>
-      t.appendNew(Seq((s"k$e", e)).toDF("k", "v"), epoch = e)
+      t.mergeDelta(Seq((s"k$e", e)).toDF("k", "v"), epoch = e)
     }
     val m = t.latestManifest().get
     val perBucket = m.files.groupBy(_.bucket).map(_._2.size)
@@ -178,7 +178,7 @@ class LakeMorSpec extends SparkSpec {
     // one bucket: bucket pruning can't help, only the min/max bounds can.
     // each epoch writes a disjoint key range → disjoint per-file bounds
     val t = new LakeTable(tmpDir("bounds") + "/t", numBuckets = 1,
-      keyColumns = Seq("k"), mergeOnRead = true, compactThreshold = 99)
+      keyColumns = Seq("k"), compactThreshold = 99)
     t.mergeDelta((0 until 10).map(i => (f"a$i%02d", 0L)).toDF("k", "v"), epoch = 0L)
     t.mergeDelta((0 until 10).map(i => (f"b$i%02d", 1L)).toDF("k", "v"), epoch = 1L)
     t.mergeDelta((0 until 10).map(i => (f"c$i%02d", 2L)).toDF("k", "v"), epoch = 2L)
@@ -204,7 +204,7 @@ class LakeMorSpec extends SparkSpec {
 
   test("lookup time travel across a rebucket resolves against the as-of layout") {
     val t = new LakeTable(tmpDir("lookup-rebucket") + "/t", numBuckets = 2,
-      keyColumns = Seq("k"), mergeOnRead = true)
+      keyColumns = Seq("k"))
     val keys = (0 until 20).map(i => s"k$i")
     t.mergeDelta(keys.map(k => (k, 1L)).toDF("k", "v"), epoch = 0L)
     t.rebucket(spark, newNumBuckets = 16, epoch = 1L)
@@ -223,7 +223,7 @@ class LakeMorSpec extends SparkSpec {
 
   test("lookup casts the probe literal to the column type before hashing") {
     val t = new LakeTable(tmpDir("lookup-typed") + "/t", numBuckets = 8,
-      keyColumns = Seq("k"), mergeOnRead = true)
+      keyColumns = Seq("k"))
     t.mergeDelta((0L until 20L).map(i => (i, i * 10)).toDF("k", "v"), epoch = 0L)
     // an Int probe at a LongType column must hash like the writers did
     (0 until 20).foreach { i =>
@@ -234,7 +234,7 @@ class LakeMorSpec extends SparkSpec {
 
   test("changeRetention defers compaction so lagging change consumers keep versions") {
     val t = new LakeTable(tmpDir("retention") + "/t", numBuckets = 1,
-      keyColumns = Seq("k"), mergeOnRead = true, compactThreshold = 2,
+      keyColumns = Seq("k"), compactThreshold = 2,
       changeRetention = 10)
     (0L until 8L).foreach(e => t.mergeDelta(Seq(("a", e)).toDF("k", "v"), epoch = e))
     // every intermediate version of "a" is still readable — compaction was
@@ -244,7 +244,7 @@ class LakeMorSpec extends SparkSpec {
     assert(versions == (0L until 8L).toSeq, s"got $versions")
     // the same schedule WITHOUT retention truncates to surviving versions
     val t2 = new LakeTable(tmpDir("retention-off") + "/t", numBuckets = 1,
-      keyColumns = Seq("k"), mergeOnRead = true, compactThreshold = 2)
+      keyColumns = Seq("k"), compactThreshold = 2)
     (0L until 8L).foreach(e => t2.mergeDelta(Seq(("a", e)).toDF("k", "v"), epoch = e))
     val v2 = t2.changesSince(spark, sinceEpoch = -1L).select("v").as[Long].collect()
     assert(v2.length < 8 && v2.contains(7L), s"got ${v2.toSeq}")
@@ -252,7 +252,7 @@ class LakeMorSpec extends SparkSpec {
 
   test("out-of-band compact() bounds files as its own commit; ingest skips inline") {
     val t = new LakeTable(tmpDir("async-compact") + "/t", numBuckets = 2,
-      keyColumns = Seq("k"), mergeOnRead = true, compactThreshold = 2)
+      keyColumns = Seq("k"), compactThreshold = 2)
     (0L until 8L).foreach(e =>
       t.mergeDelta(Seq(("a", e), (s"k$e", e)).toDF("k", "v"), epoch = e,
         compactInline = false))
@@ -273,8 +273,8 @@ class LakeMorSpec extends SparkSpec {
 
   test("publishing a commit built against a stale parent throws, never resurrects files") {
     val t = new LakeTable(tmpDir("occ") + "/t", numBuckets = 2, keyColumns = Seq("k"))
-    t.appendNew(Seq(("a", 1L)).toDF("k", "v"), epoch = 0L)
-    t.appendNew(Seq(("b", 2L)).toDF("k", "v"), epoch = 1L)
+    t.mergeDelta(Seq(("a", 1L)).toDF("k", "v"), epoch = 0L)
+    t.mergeDelta(Seq(("b", 2L)).toDF("k", "v"), epoch = 1L)
     // a racing writer's commit built BEFORE epoch 1 landed: its file list
     // misses epoch 1's files — publishing it would silently drop them
     val stale = t.latestManifest().get.copy(epoch = 5L, parentEpoch = 0L)
@@ -284,13 +284,13 @@ class LakeMorSpec extends SparkSpec {
     assert(ex.getMessage.contains("single writer"))
     assert(t.latestManifest().get.epoch == 1L, "stale commit must not publish")
     // the chain keeps working afterwards
-    t.appendNew(Seq(("c", 3L)).toDF("k", "v"), epoch = 2L)
+    t.mergeDelta(Seq(("c", 3L)).toDF("k", "v"), epoch = 2L)
     assert(LakeTable.readSnapshot(t, spark).count() == 3L)
   }
 
   test("lineage table exposes per-partition write metrics per commit") {
     val t = new LakeTable(tmpDir("lineage-table") + "/t", numBuckets = 2,
-      keyColumns = Seq("k"), mergeOnRead = true)
+      keyColumns = Seq("k"))
     t.mergeDelta(Seq(("a", 1L), ("b", 1L)).toDF("k", "v"), epoch = 0L,
       metadata = Map("build-tag" -> "x"), lineage = Map("batchRows" -> 2L))
     t.mergeDelta(Seq(("a", 2L)).toDF("k", "v"), epoch = 1L,
@@ -304,23 +304,9 @@ class LakeMorSpec extends SparkSpec {
       .as[Map[String, Long]].head().get("batchRows").contains(1L))
   }
 
-  test("appendNew evolves schema: new columns land nullable, insert-ignore holds") {
-    val t = new LakeTable(tmpDir("append-evo") + "/t", numBuckets = 2,
-      keyColumns = Seq("k"))
-    t.appendNew(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), epoch = 0L)
-    // epoch 1 adds a column AND redelivers key "a" (must be ignored)
-    t.appendNew(Seq(("a", 9L, "dup"), ("c", 3L, "x")).toDF("k", "v", "extra"), epoch = 1L)
-    val m = t.latestManifest().get
-    assert(m.schemaId == 2, s"schemaId must bump: ${m.schemaId}")
-    val rows = LakeTable.readSnapshot(t, spark).orderBy("k")
-      .collect().map(r => (r.getString(0), r.getLong(1), Option(r.getString(2))))
-    assert(rows.toSeq == Seq(("a", 1L, None), ("b", 2L, None), ("c", 3L, Some("x"))),
-      s"got ${rows.toSeq}")
-  }
-
   test("schema evolution through delta commits: old rows null-fill, resolution holds") {
     val t = new LakeTable(tmpDir("mor-evo") + "/t", numBuckets = 2,
-      keyColumns = Seq("k"), mergeOnRead = true)
+      keyColumns = Seq("k"))
     t.mergeDelta(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), epoch = 0L)
     // epoch 1 widens the schema AND re-upserts one key
     t.mergeDelta(Seq(("b", 3L, "x"), ("c", 4L, "y")).toDF("k", "v", "extra"), epoch = 1L)
@@ -339,7 +325,7 @@ class LakeMorSpec extends SparkSpec {
     // silently drops the key's file from point lookups.
     val emoji = "😀"
     val t = new LakeTable(tmpDir("utf8-bounds") + "/t", numBuckets = 1,
-      keyColumns = Seq("k"), mergeOnRead = true, compactThreshold = 2)
+      keyColumns = Seq("k"), compactThreshold = 2)
     t.mergeDelta(Seq(("", 1L)).toDF("k", "v"), epoch = 0L)
     t.mergeDelta(Seq((emoji, 2L)).toDF("k", "v"), epoch = 1L)
     t.mergeDelta(Seq(("a", 3L)).toDF("k", "v"), epoch = 2L)
@@ -354,7 +340,7 @@ class LakeMorSpec extends SparkSpec {
 
   test("type evolution: upcast-compatible upserts are cast, anything else throws at commit") {
     val t = new LakeTable(tmpDir("type-evo") + "/t", numBuckets = 2,
-      keyColumns = Seq("k"), mergeOnRead = true)
+      keyColumns = Seq("k"))
     t.mergeDelta(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), epoch = 0L) // v: long
 
     // an int upsert upcasts into the long column — stored type unchanged
