@@ -8,6 +8,34 @@ import graft.cdc.{CdcEngine, ChangeLogGen, CdcPipeline, GenConfig, MessageParser
   * efficiency = T(4N) / (4 · T(N)).
   */
 object ScalingBench {
+  /** One leg's readings, wall and task-CPU seconds; `apply` is absent when
+    * the leg did not run the apply phase (narrow, fused, SPARK_GRAFT_APPLY=0).
+    */
+  final case class Leg(events: Long, classifySec: Double, classifyCpuSec: Double,
+                       apply: Option[(Double, Double)])
+
+  /** The combined `scaling_efficiency` line for an N leg (bracketed legs
+    * already averaged) and a 4N leg. Apply fields are null unless both legs
+    * ran apply: a ratio of the -1 sentinels would read as a plausible 0.250.
+    */
+  def efficiencyLine(n: Int, small: Leg, large: Leg): String = {
+    val ev = small.events
+    def num(v: Option[Double], fmt: String): String = v.fold("null")(fmt.format(_))
+    val applies = for (a <- small.apply; b <- large.apply) yield (a, b)
+    val sec = applies.map { case ((s1, _), (s4, _)) => (s1, s4) }
+    val cpu = applies.map { case ((_, c1), (_, c4)) => (c1, c4) }
+    f"""{"metric":"scaling_efficiency","events":$ev,"n":$n,"n4":${n * 4},""" +
+    f""""classify_sec_n":${small.classifySec}%.2f,"classify_sec_4n":${large.classifySec}%.2f,""" +
+    f""""classify_eff":${small.classifySec / (4.0 * large.classifySec)}%.3f,""" +
+    s""""apply_sec_n":${num(sec.map(_._1), "%.2f")},"apply_sec_4n":${num(sec.map(_._2), "%.2f")},""" +
+    s""""apply_eff":${num(sec.map { case (s1, s4) => s1 / (4.0 * s4) }, "%.3f")},""" +
+    f""""classify_cpu_sec_n":${small.classifyCpuSec}%.2f,"classify_cpu_sec_4n":${large.classifyCpuSec}%.2f,""" +
+    s""""apply_cpu_sec_n":${num(cpu.map(_._1), "%.2f")},"apply_cpu_sec_4n":${num(cpu.map(_._2), "%.2f")},""" +
+    f""""classify_eps_n":${(ev / small.classifySec).toLong},"classify_eps_4n":${(ev / large.classifySec).toLong},""" +
+    s""""apply_eps_n":${sec.fold("null")(t => (ev / t._1).toLong.toString)},""" +
+    s""""apply_eps_4n":${sec.fold("null")(t => (ev / t._2).toLong.toString)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val nSmall = sys.env.getOrElse("SPARK_GRAFT_N", "8").toInt
     val conversations = sys.env.getOrElse("SPARK_GRAFT_CDC_CONV", "200000").toLong
@@ -26,22 +54,15 @@ object ScalingBench {
     // cleanly). A real 4N cluster brings 4N sockets' bandwidth, so the
     // CPU-normalized efficiency T(N)·CPU(4N) / (4·T(4N)·CPU(N)) is the
     // cluster-predictive number; both raw and normalized are reported.
-    def run(cpus: Int): (Long, Double, Double, Double, Double) = {
+    def run(cpus: Int): Leg = {
       val spark = Bench.session(cpus.toString)
       spark.sparkContext.setLogLevel("WARN")
-      val cpuNs = new java.util.concurrent.atomic.AtomicLong()
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (te.taskMetrics != null) cpuNs.addAndGet(te.taskMetrics.executorCpuTime)
-      })
-      def drained(): Long = {
-        // deterministic listener drain before reading the counter — a
-        // sleep-settle undercounts whenever the async bus lags longer
-        org.apache.spark.sql.graftbridge.GraftBridge
-          .drainListenerBus(spark.sparkContext)
-        cpuNs.get()
+      // (wall s, task-CPU s) of one timed region
+      def measured(body: => Unit): (Double, Double) = {
+        var sec = 0.0
+        val jobs = JobProbe(spark) { sec = Bench.timed(body) }
+        (sec, jobs.totalTaskCpuSec)
       }
-      def cpuSince(mark: Long): Double = (drained() - mark) / 1e9
       // over-partition the shuffle for tail balance; AQE coalesces small ones
       spark.conf.set("spark.sql.shuffle.partitions", (cpus * 4).toString)
       import spark.implicits._
@@ -52,14 +73,12 @@ object ScalingBench {
         val warm = ChangeLogGen.generate(spark, cfg.copy(numConversations = 1000))
         warm.map(e => MessageParser.parse(e.content).timeMicros).agg(max("value")).collect()
         val n = ChangeLogGen.generate(spark, cfg).count()
-        val mark = drained()
-        val sec = Bench.timed(
+        val (sec, cCpu) = measured(
           ChangeLogGen.generate(spark, cfg)
             .map(e => MessageParser.parse(e.content).timeMicros)
             .agg(max("value")).collect())
-        val cCpu = cpuSince(mark)
         spark.stop()
-        return (n, sec, -1.0, cCpu, -1.0)
+        return Leg(n, sec, cCpu, None)
       }
       if (fused) {
         // compute-bound end-to-end measurement: generate → shuffle → fold in
@@ -67,21 +86,17 @@ object ScalingBench {
         val warm = ChangeLogGen.generate(spark, cfg.copy(numConversations = 1000))
         CdcPipeline.classify(warm, 14 * day).write.mode("overwrite").format("noop").save()
         val n = ChangeLogGen.generate(spark, cfg).count()
-        val mark = drained()
-        val sec = Bench.timed(
+        val (sec, cCpu) = measured(
           CdcPipeline.classify(ChangeLogGen.generate(spark, cfg), 14 * day)
             .write.mode("overwrite").format("noop").save())
-        val cCpu = cpuSince(mark)
         spark.stop()
-        return (n, sec, -1.0, cCpu, -1.0)
+        return Leg(n, sec, cCpu, None)
       }
       val log = ChangeLogGen.generate(spark, cfg)
         .repartition(cpus * 2).cache()
       val n = log.count()
-      val cMark = drained()
-      val classifySec = Bench.timed(CdcPipeline.classify(log, 14 * day).write
+      val (classifySec, classifyCpu) = measured(CdcPipeline.classify(log, 14 * day).write
         .mode("overwrite").format("noop").save())
-      val classifyCpu = cpuSince(cMark)
       // per-epoch batch caches: a real binlog tail hands the engine each
       // epoch's batch once — filtering the full mixed cache per epoch would
       // charge the timed region 4× the feed's bytes (and the columnar scan
@@ -92,8 +107,7 @@ object ScalingBench {
         .map(e => e -> log.where(col("epoch") === e).cache())
       byEpoch.foreach(_._2.count())
       log.unpersist()
-      var applyCpu = -1.0
-      val applySec = if (sys.env.get("SPARK_GRAFT_APPLY").contains("0")) -1.0 else {
+      val applied = if (sys.env.get("SPARK_GRAFT_APPLY").contains("0")) None else {
         // SPARK_GRAFT_WH_BASE redirects the warehouse (e.g. to /dev/shm for
         // the tmpfs A/B that separates plan-scaling from the sandbox's one
         // shared disk — BENCH/BASELINE.md §2)
@@ -104,22 +118,20 @@ object ScalingBench {
         }
         val eng = new CdcEngine(wh.toString, numBuckets = 32, cutoffMicros = 14 * day)
         // pipelined epochs by default; SPARK_GRAFT_PIPELINE=0 = sequential A/B
-        val aMark = drained()
-        val sec = Bench.timed(
+        val secCpu = measured(
           if (sys.env.get("SPARK_GRAFT_PIPELINE").contains("0"))
             byEpoch.foreach { case (e, b) => eng.applyEpoch(spark, b, e) }
           else
             eng.applyEpochs(spark, byEpoch))
-        applyCpu = cpuSince(aMark)
         val walk = java.nio.file.Files.walk(wh)
         try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
           .forEach(p => java.nio.file.Files.deleteIfExists(p))
         finally walk.close()
-        sec
+        Some(secCpu)
       }
       byEpoch.foreach(_._2.unpersist())
       spark.stop()
-      (n, classifySec, applySec, classifyCpu, applyCpu)
+      Leg(n, classifySec, classifyCpu, applied)
     }
 
     // SPARK_GRAFT_LEG=<cpus>: run exactly ONE leg in THIS JVM and exit —
@@ -132,11 +144,13 @@ object ScalingBench {
     // launches each leg as its own JVM with -Xmx ∝ cores (constant
     // heap-per-core = real executor sizing) and combines the legs.
     sys.env.get("SPARK_GRAFT_LEG").foreach { legCpus =>
-      val (n, c, a, cCpu, aCpu) = run(legCpus.toInt)
+      val leg = run(legCpus.toInt)
+      // the -1 sentinels stay here: lib_scaling_leg.sh tests apply_* > 0
+      val (a, aCpu) = leg.apply.getOrElse((-1.0, -1.0))
       println(
-        f"""{"metric":"scaling_leg","cpus":${legCpus.toInt},"events":$n,""" +
-        f""""classify_sec":$c%.3f,"apply_sec":$a%.3f,""" +
-        f""""classify_cpu_sec":$cCpu%.3f,"apply_cpu_sec":$aCpu%.3f,""" +
+        f"""{"metric":"scaling_leg","cpus":${legCpus.toInt},"events":${leg.events},""" +
+        f""""classify_sec":${leg.classifySec}%.3f,"apply_sec":$a%.3f,""" +
+        f""""classify_cpu_sec":${leg.classifyCpuSec}%.3f,"apply_cpu_sec":$aCpu%.3f,""" +
         f""""heap_mb":${Runtime.getRuntime.maxMemory() / (1024 * 1024)}}""")
       return
     }
@@ -147,21 +161,15 @@ object ScalingBench {
     // two legs minutes apart inherits the drift; bracketing the 4N leg with
     // N legs on both sides cancels a linear drift term
     val bracket = sys.env.get("SPARK_GRAFT_BRACKET").contains("1")
-    val (n1, c1, a1, cc1, ac1) = run(nSmall)
-    val (_, c4, a4, cc4, ac4) = run(nSmall * 4)
-    val (c1e, a1e, cc1e, ac1e) = if (!bracket) (c1, a1, cc1, ac1) else {
-      val (_, c1b, a1b, cc1b, ac1b) = run(nSmall)
-      ((c1 + c1b) / 2.0, (a1 + a1b) / 2.0, (cc1 + cc1b) / 2.0, (ac1 + ac1b) / 2.0)
+    val small = run(nSmall)
+    val large = run(nSmall * 4)
+    val smallAvg = if (!bracket) small else {
+      val again = run(nSmall)
+      def avg(x: Double, y: Double) = (x + y) / 2.0
+      Leg(small.events, avg(small.classifySec, again.classifySec),
+        avg(small.classifyCpuSec, again.classifyCpuSec),
+        for ((s1, c1) <- small.apply; (s2, c2) <- again.apply) yield (avg(s1, s2), avg(c1, c2)))
     }
-    val effClassify = c1e / (4.0 * c4)
-    val effApply = a1e / (4.0 * a4)
-    println(
-      f"""{"metric":"scaling_efficiency","events":$n1,"n":$nSmall,"n4":${nSmall * 4},""" +
-      f""""classify_sec_n":$c1e%.2f,"classify_sec_4n":$c4%.2f,"classify_eff":$effClassify%.3f,""" +
-      f""""apply_sec_n":$a1e%.2f,"apply_sec_4n":$a4%.2f,"apply_eff":$effApply%.3f,""" +
-      f""""classify_cpu_sec_n":$cc1e%.2f,"classify_cpu_sec_4n":$cc4%.2f,""" +
-      f""""apply_cpu_sec_n":$ac1e%.2f,"apply_cpu_sec_4n":$ac4%.2f,""" +
-      f""""classify_eps_n":${(n1 / c1e).toLong},"classify_eps_4n":${(n1 / c4).toLong},""" +
-      f""""apply_eps_n":${(n1 / a1e).toLong},"apply_eps_4n":${(n1 / a4).toLong}}""")
+    println(efficiencyLine(nSmall, smallAvg, large))
   }
 }

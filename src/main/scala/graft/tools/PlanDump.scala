@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Bench, JobProbe, SparkEntry}
 
 /** Optimization-round instrumentation (guide §1): dump `.explain("formatted")`
   * for named declared queries to `plans/<tag>/<query>_<suffix>.txt`, and
@@ -20,13 +19,7 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val doTime = sys.env.get("PLANDUMP_TIME").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.maxResultSize", "2g")
-      .getOrCreate()
+    val spark = Bench.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val dir = java.nio.file.Paths.get(s"plans/$tag")
     java.nio.file.Files.createDirectories(dir)
@@ -40,33 +33,20 @@ object PlanDump {
       if (doTime) {
         // per-run job-wall accounting: total − Σ(job wall) ≈ driver-side
         // (planning/optimization/codegen) time, the guide §7.3 split
-        val jobWall = new java.util.concurrent.atomic.AtomicLong()
-        val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobs.put(js.jobId, js.time)
-          override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-            Option(jobs.remove(je.jobId)).foreach(t0 => jobWall.addAndGet(je.time - t0))
-        }
-        spark.sparkContext.addSparkListener(listener)
         // PLANDUMP_COLD=1: clear the DF cache before every timed run so
         // operators that cache intermediates (d05/d08/e03) are timed the
         // way the bench sees them — one cold run each, not cache replays
         val cold = sys.env.get("PLANDUMP_COLD").contains("1")
         def run(): (Double, Double) = {
           if (cold) spark.catalog.clearCache()
-          jobWall.set(0L)
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          val w = (System.nanoTime() - t0) / 1e9
-          // deterministic drain: every job-end of this run reaches the listener
-          org.apache.spark.sql.graftbridge.GraftBridge
-            .drainListenerBus(spark.sparkContext)
-          (w, jobWall.get() / 1e3)
+          var w = 0.0
+          val probe = JobProbe(spark) {
+            w = Bench.timed(fn(spark, sfDir).write.mode("overwrite").format("noop").save())
+          }
+          (w, probe.totalJobWallSec)
         }
         val (coldW, _) = run() // warm-up; its wall = the cold (codegen-inclusive) cost
         val rs = Seq.fill(3)(run()).sortBy(_._1)
-        spark.sparkContext.removeSparkListener(listener) // one listener per query, not cumulative
         val (med, medJobs) = rs(1)
         println(f"[plandump] $name median=$med%.3f jobs=$medJobs%.3f driver=${med - medJobs}%.3f " +
           f"cold=$coldW%.3f runs=${rs.map(t => f"${t._1}%.3f").mkString(",")}")

@@ -1,18 +1,18 @@
 package graft.tools
 
-import graft.Bench
+import graft.{Bench, JobProbe}
 import graft.ops.{GraphOps, TextOps, VectorOps}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** sf1 scale probe (round-6): runs the three heaviest data-pipeline
-  * operators — d05 MinHash-LSH near-dup join, d09 connected-components
-  * clustering, e02 IVF ANN — at 10× the bench scale (50k docs / 20k
-  * vectors derived deterministically from the sf0.1 tables), recording
-  * wall seconds AND shuffle bytes (the noise-free metric on this shared
-  * box). Certifies that the LSH band/bucket sizing and the pointer-jump
-  * iteration count hold above the gate scale.
+/** sf1 scale probe (round-6): runs the heaviest data-pipeline operators —
+  * d05 MinHash-LSH near-dup join, d09 connected-components clustering, d08
+  * SimHash Hamming-LSH join, e02 IVF ANN — at 10× the bench scale (50k
+  * docs / 20k vectors derived deterministically from the sf0.1 tables),
+  * recording wall seconds AND shuffle bytes (the noise-free metric on this
+  * shared box; read per probe through `graft.JobProbe`). Certifies that the
+  * LSH band/bucket sizing and the pointer-jump iteration count hold above
+  * the gate scale.
   *
   * The sf1 tables are synthesized as `SPARK_GRAFT_SCALE_REPS` (default 10)
   * deterministic replicas of sf0.1: ids offset per replica; replica r>0
@@ -74,15 +74,9 @@ object ScaleProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "10").toInt
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft-scaleprobe")
-    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = Bench.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
-
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          shuffleBytes.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
 
     // reuse is keyed on the synth PARAMETERS, not bare directory existence —
     // a rerun with different reps/sf must not silently probe stale data
@@ -111,12 +105,10 @@ object ScaleProbe {
       .write.mode("overwrite").format("noop").save()
 
     def probe(name: String)(job: => Long): (String, Double, Long, Long) = {
-      shuffleBytes.set(0L)
       var rows = 0L
-      val sec = Bench.timed { rows = job }
-      org.apache.spark.sql.graftbridge.GraftBridge
-        .drainListenerBus(spark.sparkContext) // deterministic listener drain
-      (name, sec, shuffleBytes.get(), rows)
+      var sec = 0.0
+      val jobs = JobProbe(spark) { sec = Bench.timed { rows = job } }
+      (name, sec, jobs.totalShuffleBytes, rows)
     }
 
     // d09 consumes d05's persisted pair set, so each probe's wall/shuffle
@@ -134,6 +126,12 @@ object ScaleProbe {
       // on non-convergence, so completing IS the certification
       probe("d09_dup_clusters") {
         GraphOps.connectedComponents(pairs.select(col("a"), col("b"))).count()
+      },
+      // d08's levers (16-bit bands, Hamming ≤ 3): the band join must stay
+      // bucket-bound at 10× the docs, as d05's does
+      probe("d08_simhash_dups") {
+        TextOps.simhashNearDups(docs, "doc_id", "text", maxHamming = 3,
+          bandBits = 16).count()
       },
       // gate levers (16 cells) vs sqrt(n)-scaled levers (~128 cells):
       // the scale path keeps per-query scanned fraction ≈ nprobe/cells
@@ -155,8 +153,8 @@ object ScaleProbe {
     val qs = results.map { case (n, sec, b, rows) =>
       f""""$n":{"sec":$sec%.3f,"shuffle_bytes":$b,"rows":$rows}"""
     }.mkString("{", ",", "}")
-    val (controlCpuSec, controlEff) = Bench.cpuControl(
-      scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt).getOrElse(32))
+    val (controlCpuSec, controlEff) =
+      Bench.cpuControl(scala.util.Try(cpus.toInt).getOrElse(32))
     val line =
       s"""{"metric":"scale_probe","docs":$nDocs,"vecs":$nVecs,"reps":$reps,""" +
         f""""queries":$qs,"control_cpu_sec":$controlCpuSec%.3f,"control_eff":$controlEff%.3f}"""
