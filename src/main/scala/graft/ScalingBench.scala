@@ -117,12 +117,7 @@ object ScalingBench {
           case None => java.nio.file.Files.createTempDirectory(s"scale-$cpus")
         }
         val eng = new CdcEngine(wh.toString, numBuckets = 32, cutoffMicros = 14 * day)
-        // pipelined epochs by default; SPARK_GRAFT_PIPELINE=0 = sequential A/B
-        val secCpu = measured(
-          if (sys.env.get("SPARK_GRAFT_PIPELINE").contains("0"))
-            byEpoch.foreach { case (e, b) => eng.applyEpoch(spark, b, e) }
-          else
-            eng.applyEpochs(spark, byEpoch))
+        val secCpu = measured(eng.applyEpochs(spark, byEpoch))
         val walk = java.nio.file.Files.walk(wh)
         try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
           .forEach(p => java.nio.file.Files.deleteIfExists(p))

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 import scala.reflect.ClassTag
+import scala.util.{Failure, Try}
 
 /** Classified output fact row MERGE'd into the lake, keyed by `repo`
   * (= conversation). Carries the reference Transfer columns
@@ -455,6 +456,11 @@ final class CdcEngine(
     new LakeTable(s"$warehouse/enriched", numBuckets,
       keyColumns = Seq("repo"),
       compactThreshold = compactThreshold, changeRetention = changeRetention))
+  /** The tables every ingest epoch commits, state first: preflight,
+    * `committedThrough`, `rebucket` and `maintain` visit them in this order.
+    */
+  private val tables: Seq[(String, LakeTable)] =
+    Seq("state" -> state, "transfers" -> transfers) ++ enriched.map("enriched" -> _)
   /** The dim-update change log — its OWN manifest chain, so dim versions
     * never share the ingest epoch number space. Each `applyDimUpdate`
     * commits its delta ROWS here (merge-on-read on (asid, yearMonth)), so
@@ -478,7 +484,7 @@ final class CdcEngine(
     dimlog.foreach { dl =>
       dl.latestManifest() match {
         case Some(head) =>
-          val snap = LakeTable.readSnapshot(dl, dim.get.sparkSession)
+          val snap = dl.snapshot(dim.get.sparkSession)
             .select(dim.get.columns.map(col).toIndexedSeq: _*)
           // activeDim here is still the (deduped) seed — dimInited is false
           foldDeltaIntoActive(snap)
@@ -498,29 +504,37 @@ final class CdcEngine(
     dimInited = true
   }
 
-  /** Exactly-once fast path + collision pre-flight, shared by `applyEpoch`
-    * and `applyEpochs`.
+  /** Exactly-once fast path + collision pre-flight for `applyEpochs`: one
+    * pass over `tables`, reading each table's manifest at `epoch` once.
     *
     * Fast path: an epoch ALL tables already committed is skipped without
     * paying the fold — a checkpoint restart (foreachBatch redelivers the
     * batch in flight at the crash; batch drivers re-run whole epoch ranges,
-    * see `committedThrough`) costs one manifest stat per replayed epoch,
-    * not a Spark job. Returns Some(transfers manifest) for the skip. A
-    * half-committed epoch (crash between the concurrent commits) returns
+    * see `committedThrough`) costs one manifest stat per table per replayed
+    * epoch, not a Spark job. Returns Some(transfers manifest) for the skip.
+    * A half-committed epoch (crash between the concurrent commits) returns
     * None: the deterministic fold re-runs and the skip-if-present commits
     * heal the lagging side.
     *
     * Pre-flight: the epoch id is validated against EVERY table's manifest
-    * chain BEFORE any commit future launches. Without this, a maintenance
+    * chain BEFORE any commit future launches. A table holding a manifest at
+    * `epoch` must hold an ingest ("write") one. Without this, a maintenance
     * commit squatting on `epoch` in (say) the transfers chain only throws
     * inside its own commit future — AFTER the concurrent state commit
     * may have durably committed the batch's events under the contested id.
     * A retry under a corrected (different) id then re-stamps the batch,
     * dedup resolves every commit to the already-durable earlier-epoch copy,
     * `fresh` comes back empty, and the sessions' transfer rows are silently
-    * never written. Aborting here — before the fold, before either sink —
-    * keeps the failed epoch side-effect-free, so the caller may retry under
-    * the SAME or a new id.
+    * never written. A table with no manifest at `epoch` must be able to
+    * APPEND it, i.e. its head must be below the id: a commit future would
+    * throw its "not after parent" require only AFTER sibling futures may have
+    * committed — e.g. a dim-update parked at a high id on the enriched chain
+    * would let every later source-numbered ingest epoch commit
+    * state+transfers, then fail enriched, with NO heal (same id: still below
+    * head; new id: fresh comes back empty and the rows are never written).
+    * Aborting here — before the fold, before any sink — keeps the failed
+    * epoch side-effect-free, so the caller may retry under the SAME or a
+    * new id.
     *
     * CONTRACT: the epoch id must determine the batch content (streaming
     * checkpoints own their batchId numbering — see StreamingIngest), and
@@ -530,34 +544,15 @@ final class CdcEngine(
     * what keeps a post-abort dim refresh from wedging dense ingest ids.
     */
   private def preflight(epoch: Long): Option[Manifest] = {
-    (transfers.manifestAt(epoch), state.manifestAt(epoch),
-        enriched.map(_.manifestAt(epoch))) match {
-      case (Some(t), Some(st), e) if e.forall(_.isDefined) =>
-        val kinds = Seq(Some(t), Some(st), e.flatten).flatten.map(_.kind)
-        require(kinds.forall(_ == "write"),
-          s"epoch $epoch already used by a '${kinds.find(_ != "write").get}' " +
-            "maintenance commit — ingest and maintenance epoch ids must be disjoint")
-        return Some(t)
-      case _ => ()
-    }
-    (Seq(transfers -> "transfers", state -> "state") ++
-        enriched.map(_ -> "enriched")).foreach { case (tbl, name) =>
-      tbl.manifestAt(epoch) match {
-        case Some(m) =>
-          require(m.kind == "write",
-            s"epoch $epoch of $name is already a '${m.kind}' maintenance commit — " +
+    val atEpoch = tables.map { case (name, tbl) =>
+      val m = tbl.manifestAt(epoch)
+      m match {
+        case Some(c) =>
+          require(c.kind == "write",
+            s"epoch $epoch of $name is already a '${c.kind}' maintenance commit — " +
               "ingest and maintenance epoch ids must be disjoint (aborting before " +
               "any table commits)")
         case None =>
-          // Head-ordering pre-flight: a commit future would throw its
-          // "not after parent" require only AFTER sibling futures may have
-          // committed — e.g. a dim-update parked at a high id on the
-          // enriched chain would let every later source-numbered ingest
-          // epoch commit state+transfers, then fail enriched, with NO heal
-          // (same id: still below head; new id: fresh comes back empty and
-          // the rows are never written). Abort side-effect-free instead:
-          // a table with no manifest at this epoch must be able to APPEND
-          // it, i.e. its head must be below the id.
           tbl.latestManifest().foreach { h =>
             require(h.epoch < epoch,
               s"epoch $epoch of $name is below the chain head ${h.epoch} — " +
@@ -565,11 +560,27 @@ final class CdcEngine(
                 "(aborting before any table commits)")
           }
       }
-    }
-    None
+      name -> m
+    }.toMap
+    if (atEpoch.values.forall(_.isDefined)) atEpoch("transfers") else None
   }
 
-  /** Apply one epoch of change events. Returns the transfers-table manifest.
+  /** Apply one epoch of change events: `applyEpochs` of one batch. Returns
+    * the transfers-table manifest.
+    */
+  def applyEpoch(spark: SparkSession, rawEvents: Dataset[ChangeEvent], epoch: Long): Manifest =
+    applyEpochs(spark, Seq(epoch -> rawEvents)).get
+
+  /** Apply a strictly-increasing sequence of (epoch, batch) pairs with
+    * DEPTH-1 PIPELINING: while epoch e's commits (parquet + manifest I/O)
+    * run in the background, epoch e+1's fold (batch stats, prior-state
+    * assembly, the sessionize/classify shuffle, the epoch summary) is
+    * already computing on the driver thread — per-epoch wall-clock
+    * approaches max(fold, commits) instead of fold + commits, which is the
+    * fixed-cost term that erodes N→4N scaling at small per-epoch batches.
+    * This is the engine's one epoch driver: `applyEpoch` is a call with one
+    * batch, so every caller shares its preflight, fold, commits, cache
+    * release and job-description reset.
     *
     * Per-epoch cost is O(batch + batch sessions' history): prior state is
     * bucket-pruned, then SEMI-JOINED to the batch's repos when it dwarfs the
@@ -579,30 +590,8 @@ final class CdcEngine(
     * sinks are O(batch) merge-on-read `mergeDelta` writes, so bucket-mate
     * sessions untouched by the batch are neither re-classified nor
     * re-written.
-    */
-  def applyEpoch(spark: SparkSession, rawEvents: Dataset[ChangeEvent], epoch: Long): Manifest = {
-    preflight(epoch) match {
-      case Some(t) => return t
-      case None    => ()
-    }
-    val f = foldEpoch(spark, rawEvents, epoch, stateAsOf = Long.MaxValue,
-      pendingFresh = None)
-    try commitEpoch(spark, f)
-    finally {
-      f.out.unpersist()
-      spark.sparkContext.setJobDescription(null) // don't leak the tag to caller jobs
-    }
-  }
-
-  /** Apply a strictly-increasing sequence of (epoch, batch) pairs with
-    * DEPTH-1 PIPELINING: while epoch e's commits (parquet + manifest I/O)
-    * run in the background, epoch e+1's fold (batch stats, prior-state
-    * assembly, the sessionize/classify shuffle, the epoch summary) is
-    * already computing on the driver thread — per-epoch wall-clock
-    * approaches max(fold, commits) instead of fold + commits, which is the
-    * fixed-cost term that erodes N→4N scaling at small per-epoch batches.
     *
-    * Semantics are identical to calling `applyEpoch` in order:
+    * Semantics are identical to applying the epochs one call each, in order:
     *  - epoch e+1's prior state is snapshot(head before e's commit) ∪ e's
     *    cached fold output — by construction exactly the row set e's
     *    state commit is making durable (see `foldEpoch`); the fold input,
@@ -664,6 +653,14 @@ final class CdcEngine(
     }
   }
 
+  /** Job descriptions are thread-local — tag each of the epoch's jobs so
+    * the Spark UI and perfbench's trace (`--trace 1`) attribute wall-clock
+    * to a pipeline stage instead of an anonymous closure. The fold tags the
+    * driver thread; each commit future tags its own.
+    */
+  private def describe(spark: SparkSession, epoch: Long, phase: String): Unit =
+    spark.sparkContext.setJobDescription(s"cdc epoch $epoch: $phase")
+
   /** The epoch's COMPUTE phase: batch stats, prior-state assembly, the fused
     * sessionize/classify fold (cached + materialized by the summary job),
     * and the shared epoch summary. No table is written.
@@ -676,8 +673,8 @@ final class CdcEngine(
     * precisely `freshEvents`), plus any older copy a fresh event supersedes,
     * which the fold's dedup drops either way. Data files are immutable and
     * never deleted, so the as-of read cannot race the concurrent commit.
-    * Non-pipelined callers pass (Long.MaxValue, None) — read the latest
-    * durable snapshot.
+    * With no commit in flight (the first epoch of a call) it is
+    * (Long.MaxValue, None) — read the latest durable snapshot.
     */
   private def foldEpoch(spark: SparkSession, rawEvents: Dataset[ChangeEvent],
                         epoch: Long, stateAsOf: Long,
@@ -699,13 +696,6 @@ final class CdcEngine(
     // Tungsten; the typed map would deserialize the whole batch per action.)
     val newEvents = rawEvents.withColumn("epoch", lit(epoch)).as[ChangeEvent]
 
-    // job descriptions are thread-local — tag each of the epoch's jobs so
-    // the Spark UI and perfbench's trace (`--trace 1`) attribute wall-clock
-    // to a pipeline stage instead of an anonymous closure (the commit
-    // futures tag their own threads below)
-    def desc(d: String): Unit =
-      spark.sparkContext.setJobDescription(s"cdc epoch $epoch: $d")
-
     // The state layout, read once per fold: the batch stats, the
     // pending-fresh filter, the fold's partitioning and the summary all
     // bucket by it. An in-flight commit of `applyEpochs` never changes it —
@@ -715,7 +705,7 @@ final class CdcEngine(
 
     // narrow pre-pass: batch stats + touched buckets (partial-agg only;
     // state and transfers hash the same repo column → shared touched set)
-    desc("batch stats + touched buckets")
+    describe(spark, epoch, "batch stats + touched buckets")
     val stats = newEvents.toDF()
       .agg(
         count(lit(1)), coalesce(min("offset"), lit(0L)), coalesce(max("offset"), lit(0L)),
@@ -728,7 +718,7 @@ final class CdcEngine(
     // pending (not-yet-durable) fresh events from the in-flight previous
     // epoch, pruned to this batch's buckets like the snapshot read
     val pendingPart = pendingFresh
-      .filter(p => p.touched.exists(touched)) // skip when bucket-disjoint
+      .filter(p => p.eventStats.keySet.exists(touched)) // skip when it wrote none of them
       .map(_.freshEvents.where(bucket.isin(touched.toSeq: _*)))
     // Prior-state events are folded but never RE-persisted (only fresh,
     // current-epoch events reach the state sink) — path/lang/op are null
@@ -822,7 +812,7 @@ final class CdcEngine(
           missing.cast("long")
         case None => lit(0L)
       }
-      desc("fold + epoch summary")
+      describe(spark, epoch, "fold + epoch summary")
       val summary = out.select(
           coalesce(col("transfer.repo"), col("event.repo")).as("repo"),
           col("event").isNotNull.cast("long").as("isE"),
@@ -891,7 +881,7 @@ final class CdcEngine(
         // only when the caller declared its dim coverage (see dimMonths)
         activeDimMonths.map(_ => "missingDimMonthTransfers" -> total(7))
 
-      CdcEngine.FoldResult(epoch, out, upserts, freshEvents, touched, nb, eventStats,
+      CdcEngine.FoldResult(epoch, out, upserts, freshEvents, nb, eventStats,
         transferStats, meta, lineage, tLineage)
     } catch {
       case t: Throwable =>
@@ -904,15 +894,15 @@ final class CdcEngine(
     * concurrently (separate manifest chains, all consuming the CACHED fold
     * output) and awaited — per-epoch latency is max(commit), not
     * sum(commit), which at small batches is dominated by write fixed costs.
-    * Crash/failure of either side leaves at most one table committed;
+    * A failed commit rethrows only once every commit has settled, so none
+    * still writes when the caller releases the fold output or retries.
+    * A crash or failure may leave some tables committed and others not;
     * re-running the epoch heals it in either order: each commit is
     * skip-if-present and the fold is deterministic, so the lagging side
     * recomputes identically (asserted both ways in CdcEngineSpec).
     */
   private def commitEpoch(spark: SparkSession, f: CdcEngine.FoldResult): Manifest = {
     val epoch = f.epoch
-    def desc(d: String): Unit =
-      spark.sparkContext.setJobDescription(s"cdc epoch $epoch: $d")
     // every sink frame is a narrow projection of the fold output, which sits
     // one bucket per partition under the state layout's bucket count; a
     // table rebucketed out of band to another count takes the lake's
@@ -922,19 +912,19 @@ final class CdcEngine(
     import scala.concurrent.ExecutionContext.Implicits.global
     val stateF = Future {
       // the job description predates mergeDelta; traces and tests key on it
-      desc("state commit (appendNew)")
+      describe(spark, epoch, "state commit (appendNew)")
       state.mergeDelta(f.freshEvents, epoch, metadata = f.meta, lineage = f.lineage,
         compactInline = inlineCompaction,
         aligned = Some(BucketAligned(f.numBuckets, f.eventStats)))
     }
     val transfersF = Future {
-      desc("transfers commit (mergeDelta)")
+      describe(spark, epoch, "transfers commit (mergeDelta)")
       transfers.mergeDelta(f.upserts, epoch, metadata = f.meta, lineage = f.tLineage,
         compactInline = inlineCompaction, aligned = transferAligned)
     }
     val enrichedF = enriched.map { tbl =>
       Future {
-        desc("enriched commit (mergeDelta)")
+        describe(spark, epoch, "enriched commit (mergeDelta)")
         // enrich ONLY the epoch's upserts (O(batch); two lookups per row in
         // the broadcast effective dim — no dim job, no shuffle of the upsert
         // side). Every enriched commit stamps the dim version it enriched
@@ -969,10 +959,10 @@ final class CdcEngine(
         }
       }
     }
-    Await.result(stateF, scala.concurrent.duration.Duration.Inf)
-    val tManifest = Await.result(transfersF, scala.concurrent.duration.Duration.Inf)
-    enrichedF.foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
-    tManifest
+    val settled = (Seq(stateF, transfersF) ++ enrichedF)
+      .map(fut => Try(Await.result(fut, scala.concurrent.duration.Duration.Inf)))
+    settled.collectFirst { case Failure(t) => throw t }
+    settled(1).get // the transfers manifest
   }
 
   /** Resume point for a batch driver: the highest epoch BOTH tables have
@@ -984,8 +974,7 @@ final class CdcEngine(
     * replays the exact in-flight batchId.)
     */
   def committedThrough(): Option[Long] = {
-    val heads = Seq(Some(transfers), Some(state), enriched).flatten
-      .map(_.latestManifest())
+    val heads = tables.map(_._2.latestManifest())
     if (heads.exists(_.isEmpty)) None else Some(heads.flatten.map(_.epoch).min)
   }
 
@@ -1210,9 +1199,7 @@ final class CdcEngine(
     * keep touching a small fraction of the data.
     */
   def rebucket(spark: SparkSession, newNumBuckets: Int, epoch: Long): Unit = {
-    state.rebucket(spark, newNumBuckets, epoch)
-    transfers.rebucket(spark, newNumBuckets, epoch)
-    enriched.foreach(_.rebucket(spark, newNumBuckets, epoch))
+    tables.foreach(_._2.rebucket(spark, newNumBuckets, epoch))
   }
 
   /** Maintenance between ingest epochs: compact both tables' over-threshold
@@ -1223,23 +1210,21 @@ final class CdcEngine(
     * parallel with one — each table is single-writer (see LakeTable.compact).
     */
   def maintain(spark: SparkSession, epoch: Long): Unit = {
-    state.compact(spark, epoch)
-    transfers.compact(spark, epoch)
-    enriched.foreach(_.compact(spark, epoch))
+    tables.foreach(_._2.compact(spark, epoch))
   }
 
   /** Resolved snapshot of the incrementally-maintained transfers table
     * (last-writer-wins per repo, internal bucket column hidden).
     */
   def currentTransfers(spark: SparkSession): DataFrame =
-    LakeTable.readSnapshot(transfers, spark)
+    transfers.snapshot(spark)
 
   /** Resolved snapshot of the incrementally-maintained enriched output
     * (requires the engine to have been built with a `dim`).
     */
   def currentEnriched(spark: SparkSession): DataFrame =
-    LakeTable.readSnapshot(enriched.getOrElse(throw new IllegalStateException(
-      "engine was built without a dim — no enriched table")), spark)
+    enriched.getOrElse(throw new IllegalStateException(
+      "engine was built without a dim — no enriched table")).snapshot(spark)
 }
 
 object CdcEngine {
@@ -1271,7 +1256,6 @@ object CdcEngine {
       out: DataFrame,
       upserts: DataFrame,
       freshEvents: DataFrame,
-      touched: Set[Int],
       /** The bucket count the fold partitioned `out` by, one bucket per
         * partition (the state table's live count). */
       numBuckets: Int,

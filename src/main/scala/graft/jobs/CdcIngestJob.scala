@@ -31,17 +31,16 @@ import org.apache.spark.sql.SparkSession
   *   GRAFT_DIM_UPDATE_VERSION  the delta's dim version (required with
   *                          GRAFT_DIM_UPDATE; its own monotonic number
   *                          space, disjoint from ingest epoch ids)
-  *   GRAFT_PIPELINE=0       sequential applyEpoch loop instead of the
-  *                          depth-1 pipelined applyEpochs (A/B control)
   *   SPARK_MASTER           defaults to local[*]; set by spark-submit on a
   *                          real cluster
   *
   * Epoch identity: the change log's own `epoch` stamps (a binlog tail's
   * batch numbering — the generator, a Kafka-offset chunker, or a CDC
   * collector all provide one). The job replays `committedThrough+1 ..`
-  * through `applyEpochs`, so crash/restart at any point resumes exactly
-  * (asserted by ResumeAndExportSpec/PipelinedApplySpec for the engine
-  * primitives and `CdcIngestJobSpec` end-to-end).
+  * through `applyEpochs`, the engine's one epoch driver, so crash/restart
+  * at any point resumes exactly (asserted by ResumeAndExportSpec/
+  * PipelinedApplySpec for the engine primitives and `CdcIngestJobSpec`
+  * end-to-end).
   */
 object CdcIngestJob {
 
@@ -90,10 +89,7 @@ object CdcIngestJob {
       val todo = epochs.filter(_ >= from)
       val batches: Seq[(Long, org.apache.spark.sql.Dataset[ChangeEvent])] =
         todo.toIndexedSeq.map(e => e -> log.where(org.apache.spark.sql.functions.col("epoch") === e))
-      if (env.get("GRAFT_PIPELINE").contains("0"))
-        batches.foreach { case (e, b) => eng.applyEpoch(spark, b, e) }
-      else
-        eng.applyEpochs(spark, batches)
+      eng.applyEpochs(spark, batches)
       val r = Result(epochs.head, epochs.last, todo.length.toLong)
       println(s"[graft] CDC_INGEST epochs=${r.firstEpoch}..${r.lastEpoch} " +
         s"applied=${r.appliedEpochs} warehouse=$warehouse")

@@ -855,10 +855,4 @@ object LakeTable {
     * single-disk box (BENCH/BASELINE.md §2).
     */
   val compression: String = "zstd"
-
-  /** A snapshot read that hides the internal bucket column. */
-  def readSnapshot(t: LakeTable, spark: SparkSession, asOf: Long = Long.MaxValue): DataFrame = {
-    val df = t.snapshot(spark, asOf)
-    if (df.columns.contains("__bucket")) df.drop("__bucket") else df
-  }
 }

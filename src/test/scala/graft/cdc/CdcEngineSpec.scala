@@ -81,7 +81,7 @@ class CdcEngineSpec extends SparkSpec {
 
   test("time travel: snapshotAt an earlier epoch sees the earlier state") {
     val eng = buildIncremental(tmpDir("tt"), Seq(0L, 1L, 2L, 3L))
-    val at0 = LakeTable.readSnapshot(eng.transfers, spark, asOf = 0L).count()
+    val at0 = eng.transfers.snapshot(spark, asOf = 0L).count()
     val at3 = eng.currentTransfers(spark).count()
     assert(at0 > 0 && at0 < at3)
   }
@@ -95,7 +95,7 @@ class CdcEngineSpec extends SparkSpec {
       epoch = 1L)
     val m = t.latestManifest().get
     assert(m.schemaId == 2)
-    val snap = LakeTable.readSnapshot(t, spark).orderBy("k")
+    val snap = t.snapshot(spark).orderBy("k")
       .collect().map(r => (r.getString(0), r.getLong(1), Option(r.getString(2))))
     assert(snap.toSeq == Seq(("a", 1L, None), ("b", 3L, Some("new")), ("c", 4L, Some("col"))))
   }
@@ -108,11 +108,11 @@ class CdcEngineSpec extends SparkSpec {
     val orphan = new java.io.File(s"$dir/t/data/e000000000001/__bucket=0")
     orphan.mkdirs()
     Seq(("zzz", 99L)).toDF("k", "v").write.mode("overwrite").parquet(orphan.toString)
-    val snap = LakeTable.readSnapshot(t, spark).as[(String, Long)].collect().toSet
+    val snap = t.snapshot(spark).as[(String, Long)].collect().toSet
     assert(snap == Set(("a", 1L))) // orphan invisible
     // recovery: re-running epoch 1 commits atomically over the orphan dir
     t.mergeDelta(Seq(("b", 2L)).toDF("k", "v"), epoch = 1L)
-    val snap2 = LakeTable.readSnapshot(t, spark).as[(String, Long)].collect().toSet
+    val snap2 = t.snapshot(spark).as[(String, Long)].collect().toSet
     assert(snap2 == Set(("a", 1L), ("b", 2L)))
   }
 
@@ -181,7 +181,7 @@ class CdcEngineSpec extends SparkSpec {
     assert(perBucket.forall(_ <= 2 * 3),
       s"live files per bucket must stay bounded by 2x threshold: ${m.files}")
     // resolution yields the last writer despite all the deltas/compactions
-    val rows = LakeTable.readSnapshot(t, spark).as[(String, Long)].collect().toSeq
+    val rows = t.snapshot(spark).as[(String, Long)].collect().toSeq
     assert(rows == Seq(("hot", 9L)))
   }
 
@@ -264,6 +264,20 @@ class CdcEngineSpec extends SparkSpec {
     assert(got2 == want2)
   }
 
+  test("a failed state commit rethrows only after the sibling commits settle") {
+    // seed state with a content_sha256 the epoch-1 state commit cannot evolve
+    // (string upsert over a stored INT): the fold never reads the column, so
+    // only the state commit fails, on the driver, while transfers commits
+    val eng = new CdcEngine(tmpDir("settle"), numBuckets = 4, cutoffMicros = 14 * day)
+    eng.state.mergeDelta(log.filter(_.epoch == 0L).toDF()
+      .withColumn("content_sha256", lit(0)), 0L)
+    intercept[IllegalArgumentException] {
+      eng.applyEpoch(spark, log.filter(_.epoch == 1L), 1L)
+    }
+    assert(eng.transfers.manifestAt(1L).isDefined,
+      "the transfers commit must have settled before the state failure surfaced")
+  }
+
   test("rebucket mid-chain: applies continue correctly on the grown layout") {
     val eng = new CdcEngine(tmpDir("rebucket"), numBuckets = 4, cutoffMicros = 14 * day)
     eng.applyEpoch(spark, log.filter(_.epoch == 0L), 0L)
@@ -321,7 +335,7 @@ class CdcEngineSpec extends SparkSpec {
     // never re-persisted); if one ever won freshness it would null a
     // durable column — assert every committed state row stays fully typed
     val eng = buildIncremental(tmpDir("slim-state"), Seq(0L, 1L, 2L, 3L))
-    val stateRows = LakeTable.readSnapshot(eng.state, spark)
+    val stateRows = eng.state.snapshot(spark)
     assert(stateRows.filter(
       col("path").isNull || col("lang").isNull || col("op").isNull).count() == 0)
     // and state stays lean: the event columns plus the replay hash, nothing else
@@ -448,7 +462,7 @@ class CdcEngineSpec extends SparkSpec {
       offset = 5L, op = "insert", tsMicros = 1L, epoch = 0L)
     eng.applyEpoch(spark, Seq(e1).toDS(), 0L)
     eng.applyEpoch(spark, Seq(e1.copy(offset = 900L, epoch = 1L)).toDS(), 1L)
-    val st = LakeTable.readSnapshot(eng.state, spark)
+    val st = eng.state.snapshot(spark)
     assert(st.count() == 1)
     assert(st.select("offset").as[Long].collect().head == 5L)
   }
@@ -471,7 +485,7 @@ class CdcEngineSpec extends SparkSpec {
       ev("c2", CommonPointToPoint, t0 + 60L * 1000000L, offset = 901L, epoch = 2L))
     val eng = new CdcEngine(tmpDir("lower-offset"), numBuckets = 4, cutoffMicros = 0L)
     events.foreach(e => eng.applyEpoch(spark, Seq(e).toDS(), e.epoch))
-    val st = LakeTable.readSnapshot(eng.state, spark)
+    val st = eng.state.snapshot(spark)
       .select("commit", "offset").as[(String, Long)].collect().sorted.toSeq
     assert(st == Seq(("c1", 5L), ("c2", 901L)), s"state rows: $st")
     val want = shaMap(CdcPipeline.withRowSha(

@@ -329,10 +329,15 @@ class DimUpdateSpec extends SparkSpec {
     eng.applyEpoch(spark, conv("r1", t0, 0L, 0L).toDS(), 0L)
     // epoch 1: February conversation — 202002 and 202001 both lack a
     // snapshot → the reference's OdsMetadataNotFound; side-effect-free abort
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val ex = intercept[IllegalStateException] {
       eng.applyEpoch(spark, conv("r2", feb, 10L, 1L).toDS(), 1L)
     }
     assert(ex.getMessage.contains("OdsMetadataNotFound"))
+    // the abort neither leaks its phase tag to the caller's jobs nor pins
+    // the fold's cached output
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
     assert(eng.state.manifestAt(1L).isEmpty && eng.transfers.manifestAt(1L).isEmpty)
 
     // the heal: a 202001 snapshot (covers February via fallback) that ALSO

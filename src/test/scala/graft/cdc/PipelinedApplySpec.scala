@@ -1,7 +1,6 @@
 package graft.cdc
 
 import graft.SparkSpec
-import graft.lake.LakeTable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,7 +25,7 @@ class PipelinedApplySpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getString(1)).toMap
 
   private def stateMap(eng: CdcEngine): Map[(String, String), Long] =
-    LakeTable.readSnapshot(eng.state, spark)
+    eng.state.snapshot(spark)
       .select("repo", "commit", "offset").collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
 
@@ -140,7 +139,7 @@ class PipelinedApplySpec extends SparkSpec {
       CdcPipeline.classify(Seq(ev0, ev1).toDS(), 14 * day).toDF()))
     assert(want.size == 1, "the content events classify to one transfer")
     assert(shaMap(eng.currentTransfers(spark)) == want, "content wins, parsed is ignored")
-    val fresh = LakeTable.readSnapshot(eng.state, spark).where(col("epoch") === 1L)
+    val fresh = eng.state.snapshot(spark).where(col("epoch") === 1L)
     assert(fresh.count() == 1 && fresh.where(col("parsed").isNotNull).count() == 0,
       "new state rows carry parsed = null")
   }

@@ -20,7 +20,7 @@ class LakeCommitSpec extends SparkSpec {
     // execution each is a shuffle-map job plus a result job
     assert(probe.jobs("unaligned commit") == 4, s"ran ${probe.jobs("unaligned commit")} jobs")
     assert(t.latestManifest().get.files.filter(_.epochAdded == 1L).map(_.rows).sum == 10L)
-    assert(LakeTable.readSnapshot(t, spark).as[(String, Long)].collect().toMap ==
+    assert(t.snapshot(spark).as[(String, Long)].collect().toMap ==
       keys.map(k => k -> (if (keys.take(10).contains(k)) 1L else 0L)).toMap)
   }
 }

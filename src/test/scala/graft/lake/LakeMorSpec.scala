@@ -139,7 +139,7 @@ class LakeMorSpec extends SparkSpec {
     val hit = t.lookup(spark, Map("k" -> "k3"))
     assert(hit.select("k", "v").as[(String, Long)].collect().toSeq == Seq(("k3", 2L)))
     // the read touches a strict subset of the table's files (bucket pruning)
-    val allFiles = LakeTable.readSnapshot(t, spark).inputFiles.length
+    val allFiles = t.snapshot(spark).inputFiles.length
     val hitFiles = hit.inputFiles.length
     assert(hitFiles < allFiles, s"lookup read $hitFiles of $allFiles files")
     // a missing key resolves to empty, not an error
@@ -169,7 +169,7 @@ class LakeMorSpec extends SparkSpec {
     // jittered threshold: hard bound 2t
     assert(perBucket.forall(_ <= 2 * 3),
       s"append-only buckets must compact: ${m.files}")
-    val rows = LakeTable.readSnapshot(t, spark).as[(String, Long)].collect().toSet
+    val rows = t.snapshot(spark).as[(String, Long)].collect().toSet
     assert(rows == (0L until 10L).map(e => (s"k$e", e)).toSet)
     assert(m.lineage("totalRows") == 10L)
   }
@@ -188,7 +188,7 @@ class LakeMorSpec extends SparkSpec {
     val hit = t.lookup(spark, Map("k" -> "b05"))
     assert(hit.select("k", "v").as[(String, Long)].collect().toSeq == Seq(("b05", 1L)))
     // bounds must prune to exactly the one file set whose range holds "b05"
-    val allFiles = LakeTable.readSnapshot(t, spark).inputFiles.length
+    val allFiles = t.snapshot(spark).inputFiles.length
     val hitFiles = hit.inputFiles
     assert(hitFiles.length < allFiles && hitFiles.forall(_.contains("e000000000001")),
       s"bounds pruning must isolate epoch 1's file: ${hitFiles.mkString(", ")}")
@@ -258,13 +258,13 @@ class LakeMorSpec extends SparkSpec {
         compactInline = false))
     val before = t.latestManifest().get.files.groupBy(_.bucket).map(_._2.size).max
     assert(before > 4, s"inline compaction must be off (max files/bucket $before)")
-    val want = LakeTable.readSnapshot(t, spark).as[(String, Long)].collect().toSet
+    val want = t.snapshot(spark).as[(String, Long)].collect().toSet
 
     val m = t.compact(spark, epoch = 100L)
     assert(m.epoch == 100L && m.lineage.get("compaction").contains(1L))
     val after = t.latestManifest().get.files.groupBy(_.bucket).map(_._2.size).max
     assert(after <= 4, s"compact() must bound files/bucket: $after")
-    assert(LakeTable.readSnapshot(t, spark).as[(String, Long)].collect().toSet == want)
+    assert(t.snapshot(spark).as[(String, Long)].collect().toSet == want)
     // idempotent: re-running the same maintenance epoch is a no-op
     assert(t.compact(spark, epoch = 100L).epoch == 100L)
     // nothing over threshold now → no new commit
@@ -285,7 +285,7 @@ class LakeMorSpec extends SparkSpec {
     assert(t.latestManifest().get.epoch == 1L, "stale commit must not publish")
     // the chain keeps working afterwards
     t.mergeDelta(Seq(("c", 3L)).toDF("k", "v"), epoch = 2L)
-    assert(LakeTable.readSnapshot(t, spark).count() == 3L)
+    assert(t.snapshot(spark).count() == 3L)
   }
 
   test("lineage table exposes per-partition write metrics per commit") {
@@ -312,9 +312,12 @@ class LakeMorSpec extends SparkSpec {
     t.mergeDelta(Seq(("b", 3L, "x"), ("c", 4L, "y")).toDF("k", "v", "extra"), epoch = 1L)
     val m = t.latestManifest().get
     assert(m.schemaId == 2)
-    val snap = LakeTable.readSnapshot(t, spark).orderBy("k")
+    val snap = t.snapshot(spark).orderBy("k")
       .collect().map(r => (r.getString(0), r.getLong(1), Option(r.getString(2))))
     assert(snap.toSeq == Seq(("a", 1L, None), ("b", 3L, Some("x")), ("c", 4L, Some("y"))))
+    // the internal bucket and commit-stamp columns never surface
+    val cols = t.snapshot(spark).columns.toSeq
+    assert(!cols.contains("__bucket") && !cols.contains("__epoch"), cols)
   }
 
   test("derived compaction bounds use UTF8 byte order — supplementary keys stay findable") {
@@ -346,7 +349,7 @@ class LakeMorSpec extends SparkSpec {
     // an int upsert upcasts into the long column — stored type unchanged
     t.mergeDelta(Seq(("b", 30), ("c", 40)).toDF("k", "v"), epoch = 1L)
     assert(t.latestManifest().get.schemaId == 1, "upcast must not bump the schema")
-    val snap = LakeTable.readSnapshot(t, spark).orderBy("k")
+    val snap = t.snapshot(spark).orderBy("k")
       .collect().map(r => (r.getString(0), r.getLong(1)))
     assert(snap.toSeq == Seq(("a", 1L), ("b", 30L), ("c", 40L)))
 
