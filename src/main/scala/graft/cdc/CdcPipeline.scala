@@ -290,7 +290,8 @@ object CdcPipeline {
   * exchange per epoch, ~one file per touched bucket per sink. Fold
   * parallelism therefore equals the bucket count, so size `numBuckets` ≥
   * the cluster's cores (`rebucket` grows it).
-  * Exactly-once: both commits are keyed by the epoch number; a re-run
+  * Exactly-once: every ingest table's commit (state, transfers and, with a
+  * dim, enriched) is keyed by the epoch number; a re-run
   * of an already-committed epoch is a no-op, and replay from any checkpoint
   * reproduces identical table state (verified via row_sha256 equality).
   */
@@ -365,78 +366,82 @@ final class CdcEngine(
       */
     val changeRetention: Int = 0,
 ) {
-  /** The dim in force for subsequent epoch enrichment — the constructor
-    * `dim` (seed) overlaid with every committed `applyDimUpdate` delta.
-    * Rebuilt from the durable `dimlog` chain on first use (see
-    * `ensureDimState`), so a restarted engine never silently enriches with
-    * a stale dim.
+  /** The dim in force (see `CdcEngine.DimState`), built from the durable
+    * dimlog chain on first use, so a restarted engine never silently
+    * enriches with a stale seed. None until built, and always None without
+    * a `dim`. Guarded by the engine lock: `dimState` builds it, `setDim`
+    * swaps in the value an update folded.
     */
-  // seed dims are caller-supplied and unvalidated — dedup once at entry
-  // (duplicate (asid, yearMonth) rows would fan transfers out into
-  // duplicate enriched rows; effectiveAsOf expects key-unique dims)
-  @volatile private var activeDim: Option[DataFrame] = dim.map(Enrichment.dedupDim)
-  def currentDim: Option[DataFrame] = { ensureDimState(); activeDim }
+  private var dimInForce: Option[CdcEngine.DimState] = None
 
-  /** Months with a dim snapshot, as currently known — the constructor
-    * declaration extended by every `applyDimUpdate` delta (in-session or
-    * rebuilt from the dimlog), so a strict-mode abort heals by refreshing
-    * the dim and retrying the same epoch id.
+  /** The dim in force, built on first use: the deduped seed (duplicate
+    * (asid, yearMonth) rows would fan transfers out into duplicate enriched
+    * rows) folded with the dimlog snapshot at the chain head, or the seed
+    * materialized once (so its dedup and scan never re-run per use) when
+    * the chain has no head. A failed build (executor loss mid-collect, an
+    * unreadable manifest) sets nothing, so the next call retries instead
+    * of pinning the stale seed.
     */
-  private def activeDimMonths: Option[Set[Int]] = dimMonths.map(_ ++ dimDeltaMonthsAcc)
-  def currentDimMonths: Option[Set[Int]] = { ensureDimState(); activeDimMonths }
-
-  /** Highest dim version folded into `activeDim` (-1 = seed only). Version
-    * ids are the dimlog's OWN monotonic number space, disjoint from ingest
-    * epoch ids by construction — the property that lets a strictDimMonths
-    * abort heal (refresh the dim, retry the SAME ingest epoch id) without
-    * the dim commit wedging the ingest chain's head ordering.
-    */
-  @volatile private var dimVersion: Long = -1L
-  def currentDimVersion: Long = { ensureDimState(); dimVersion }
-
-  @volatile private var dimInited: Boolean = false
-
-  /** Distinct months of the constructor seed dim (memoized tiny collect) —
-    * `pendingReEnrich` needs month PRESENCE at the watermark to detect
-    * deltas that introduce a new month (whole-month fallback semantics).
-    */
-  @volatile private var seedDimMonthsMemo: Option[Set[Int]] = None
-
-  /** Months added by committed dim deltas (rebuilt from the dimlog at
-    * ensureDimState, extended per applyDimUpdate fold). seed ∪ this = the
-    * ACTIVE dim's month presence — maintained incrementally so the
-    * per-epoch enriched commit never pays `effectiveAsOf`'s presence job.
-    */
-  @volatile private var dimDeltaMonthsAcc: Set[Int] = Set.empty
-
-  private def seedDimMonths: Set[Int] = seedDimMonthsMemo.getOrElse {
-    val s = Enrichment.presentMonths(dim.get)
-    seedDimMonthsMemo = Some(s)
-    s
-  }
-  private def presentDimMonths: Set[Int] = seedDimMonths ++ dimDeltaMonthsAcc
-
-  /** The active dim's `Enrichment.effectiveMap`, broadcast once per dim
-    * version: every enriched commit and retro-correction enriches through it
-    * (`Enrichment.enrichWith`), so no commit runs a dim job. Built on first
-    * use after the active dim changes (`activeDimChanged`).
-    */
-  @volatile private var effectiveDimMemo: Option[Broadcast[Enrichment.EffectiveDim]] = None
-
-  private def effectiveDim: Broadcast[Enrichment.EffectiveDim] = synchronized {
-    effectiveDimMemo.getOrElse {
-      val d = activeDim.get
-      val b = d.sparkSession.sparkContext.broadcast(
-        Enrichment.effectiveMap(d, presentDimMonths))
-      effectiveDimMemo = Some(b)
-      b
+  private def dimState: Option[CdcEngine.DimState] = synchronized {
+    if (dimInForce.isEmpty) dimInForce = dim.map { raw =>
+      val seed = Enrichment.dedupDim(raw)
+      val dl = dimlog.get
+      dl.latestManifest() match {
+        case Some(head) =>
+          CdcEngine.DimState(seed, -1L, Set.empty).fold(
+            dl.snapshot(seed.sparkSession).select(seed.columns.map(col).toIndexedSeq: _*),
+            head.epoch)
+        case None => CdcEngine.DimState(CdcEngine.materializeDim(seed), -1L, Set.empty)
+      }
     }
+    dimInForce
   }
 
-  private def activeDimChanged(): Unit = synchronized {
-    effectiveDimMemo.foreach(_.unpersist())
-    effectiveDimMemo = None
-  }
+  private def setDim(s: CdcEngine.DimState): Unit = synchronized { dimInForce = Some(s) }
+
+  /** The dim in force (None without a `dim`). */
+  def currentDim: Option[DataFrame] = dimState.map(_.dim)
+
+  /** Months with a dim snapshot, as known under `s` — the constructor
+    * declaration extended by every committed dim delta's months, so a
+    * strict-mode abort heals by refreshing the dim and retrying the same
+    * epoch id.
+    */
+  private def dimMonthsOf(s: Option[CdcEngine.DimState]): Option[Set[Int]] =
+    dimMonths.map(_ ++ s.fold(Set.empty[Int])(_.deltaMonths))
+  def currentDimMonths: Option[Set[Int]] = dimMonthsOf(dimState)
+
+  /** Highest dim version folded into the dim in force (-1 = seed only). */
+  def currentDimVersion: Long = dimState.fold(-1L)(_.version)
+
+  /** Distinct months of the constructor seed dim — `pendingReEnrich` needs
+    * month PRESENCE at the watermark to detect deltas that introduce a new
+    * month (whole-month fallback semantics).
+    */
+  private lazy val seedDimMonths: Set[Int] = Enrichment.presentMonths(dim.get)
+
+  /** The last broadcast `Enrichment.effectiveMap` and the state it was
+    * built from. Guarded by the engine lock.
+    */
+  private var effectiveMemo: Option[(CdcEngine.DimState, Broadcast[Enrichment.EffectiveDim])] = None
+
+  /** `s`'s `Enrichment.effectiveMap`, broadcast once per state: every
+    * enriched commit and retro-correction enriches through it
+    * (`Enrichment.enrichWith`), so no commit runs a dim job. Building the
+    * broadcast for a new state releases the previous one.
+    */
+  private def effectiveDim(s: CdcEngine.DimState): Broadcast[Enrichment.EffectiveDim] =
+    synchronized {
+      effectiveMemo match {
+        case Some((built, b)) if built eq s => b
+        case prev =>
+          prev.foreach(_._2.unpersist())
+          val b = s.dim.sparkSession.sparkContext.broadcast(
+            Enrichment.effectiveMap(s.dim, seedDimMonths ++ s.deltaMonths))
+          effectiveMemo = Some(s -> b)
+          b
+      }
+    }
 
   require(!strictDimMonths || dimMonths.isDefined,
     "strictDimMonths requires dimMonths — the engine can only fail fast on " +
@@ -464,45 +469,13 @@ final class CdcEngine(
   /** The dim-update change log — its OWN manifest chain, so dim versions
     * never share the ingest epoch number space. Each `applyDimUpdate`
     * commits its delta ROWS here (merge-on-read on (asid, yearMonth)), so
-    * the active dim is durable: a restarted engine rebuilds
+    * the dim in force is durable: a restarted engine rebuilds
     * seed ⊕ dimlog-snapshot from the chain alone, no caller replay of the
     * dim feed needed. Broadcast-small by the same contract as `dim`.
     */
   val dimlog: Option[LakeTable] = dim.map(_ =>
     new LakeTable(s"$warehouse/dimlog", numBuckets = 4,
       keyColumns = Seq("asid", "yearMonth")))
-
-  /** Rebuild the in-memory dim state from the durable dimlog chain, once
-    * per engine instance: activeDim = seed ⊕ resolved dimlog snapshot
-    * (last-writer-wins per (asid, yearMonth) by version), months extended
-    * with the dimlog's, version = the chain head. Without this, operator
-    * error at restart would silently enrich future epochs with the stale
-    * seed (the round-4 "process state, not durable" gap).
-    */
-  private def ensureDimState(): Unit = synchronized {
-    if (dimInited) return
-    dimlog.foreach { dl =>
-      dl.latestManifest() match {
-        case Some(head) =>
-          val snap = dl.snapshot(dim.get.sparkSession)
-            .select(dim.get.columns.map(col).toIndexedSeq: _*)
-          // activeDim here is still the (deduped) seed — dimInited is false
-          foldDeltaIntoActive(snap)
-          dimVersion = head.epoch
-        case None =>
-          // no dimlog head: materialize the (deduped) seed to a local
-          // relation ONCE — activeDim is otherwise a lazy plan whose dedup
-          // window and seed scan would re-execute at every use (the
-          // effective-dim build, every dim-update fold)
-          activeDim = Some(CdcEngine.materializeDim(activeDim.get))
-          activeDimChanged()
-      }
-    }
-    // only after a SUCCESSFUL rebuild: a transient failure above (executor
-    // loss mid-collect) must leave the flag unset so the next call retries,
-    // not pin the session to the stale seed with retro-correction disabled
-    dimInited = true
-  }
 
   /** Exactly-once fast path + collision pre-flight for `applyEpochs`: one
     * pass over `tables`, reading each table's manifest at `epoch` once.
@@ -544,25 +517,33 @@ final class CdcEngine(
     * what keeps a post-abort dim refresh from wedging dense ingest ids.
     */
   private def preflight(epoch: Long): Option[Manifest] = {
-    val atEpoch = tables.map { case (name, tbl) =>
-      val m = tbl.manifestAt(epoch)
-      m match {
-        case Some(c) =>
-          require(c.kind == "write",
-            s"epoch $epoch of $name is already a '${c.kind}' maintenance commit — " +
-              "ingest and maintenance epoch ids must be disjoint (aborting before " +
-              "any table commits)")
-        case None =>
-          tbl.latestManifest().foreach { h =>
-            require(h.epoch < epoch,
-              s"epoch $epoch of $name is below the chain head ${h.epoch} — " +
-                "ingest epoch ids must stay above every table's head " +
-                "(aborting before any table commits)")
-          }
-      }
-      name -> m
-    }.toMap
+    val atEpoch = tables.map { case (name, tbl) => name -> claim(name, tbl, epoch, "write") }.toMap
     if (atEpoch.values.forall(_.isDefined)) atEpoch("transfers") else None
+  }
+
+  /** The id check every commit entry point (`preflight`, `applyDimUpdate`,
+    * `flushDimUpdates`) runs before it writes anything: the manifest
+    * already at `id` on `table`, which must be a `kind` commit (a replay),
+    * or None when `id` is above the chain head (a new commit). Any other
+    * id throws IllegalArgumentException, so the caller aborts with no
+    * change made.
+    */
+  private def claim(name: String, table: LakeTable, id: Long,
+                    kind: String): Option[Manifest] = {
+    val at = table.manifestAt(id)
+    at match {
+      case Some(m) =>
+        require(m.kind == kind,
+          s"id $id of $name is already a '${m.kind}' commit, not '$kind' — ingest, " +
+            "maintenance and flush ids must be disjoint (aborting before any change)")
+      case None =>
+        table.latestManifest().foreach { h =>
+          require(h.epoch < id,
+            s"id $id of $name is below the chain head ${h.epoch} — ids must stay " +
+              "above the head of every chain they commit to (aborting before any change)")
+        }
+    }
+    at
   }
 
   /** Apply one epoch of change events: `applyEpochs` of one batch. Returns
@@ -680,10 +661,11 @@ final class CdcEngine(
                         epoch: Long, stateAsOf: Long,
                         pendingFresh: Option[CdcEngine.FoldResult]): CdcEngine.FoldResult = {
     import spark.implicits._
-    // rebuild the active dim/months from the durable dimlog before the
-    // first epoch of a restarted engine (no-op afterwards) — the strict
-    // gate and the enriched commit both read them
-    ensureDimState()
+    // the dim in force, read once: the strict gate, the missing-month
+    // counter and the enriched commit (its version stamp, its broadcast,
+    // its retro-correction) all see this one value
+    val dimNow = dimState
+    val knownMonths = dimMonthsOf(dimNow)
     // Re-stamp the batch with THIS epoch. Freshness (which events the fold
     // persists to the durable state table) must mean "first applied in this
     // epoch", not "stamped with this epoch by the source": a streaming
@@ -802,7 +784,7 @@ final class CdcEngine(
       // replaces three separate aggregation jobs per epoch (per-epoch
       // barriers are the fixed cost that dominates small batches)
       val ymExpr = Enrichment.requestMonth(col("transfer.dateRequestedMicros"))
-      val missingDimFlag: org.apache.spark.sql.Column = activeDimMonths match {
+      val missingDimFlag: org.apache.spark.sql.Column = knownMonths match {
         case Some(ms) =>
           val prevYm = Enrichment.prevMonth(ymExpr)
           val missing =
@@ -852,7 +834,7 @@ final class CdcEngine(
         throw new IllegalStateException(
           s"OdsMetadataNotFound: epoch $epoch has ${total(7)} transfer(s) whose " +
             "request month AND previous month both lack a dim snapshot " +
-            s"(declared months: ${activeDimMonths.map(_.toSeq.sorted.mkString(",")).getOrElse("")}) — " +
+            s"(declared months: ${knownMonths.map(_.toSeq.sorted.mkString(",")).getOrElse("")}) — " +
             "strictDimMonths aborted the epoch before any table committed")
 
       val lineage = Map(
@@ -879,10 +861,10 @@ final class CdcEngine(
         "danglingAcks" -> total(3), "unknownPurpose" -> total(4),
         "negativeSla" -> total(5), "duplicatesDropped" -> total(6)) ++
         // only when the caller declared its dim coverage (see dimMonths)
-        activeDimMonths.map(_ => "missingDimMonthTransfers" -> total(7))
+        knownMonths.map(_ => "missingDimMonthTransfers" -> total(7))
 
       CdcEngine.FoldResult(epoch, out, upserts, freshEvents, nb, eventStats,
-        transferStats, meta, lineage, tLineage)
+        transferStats, meta, lineage, tLineage, dimNow)
     } catch {
       case t: Throwable =>
         out.unpersist()
@@ -930,32 +912,25 @@ final class CdcEngine(
         // side). Every enriched commit stamps the dim version it enriched
         // with — the durable watermark that makes pending retro-corrections
         // derivable after a restart.
-        val meta = f.meta + (CdcEngine.DimVersionKey -> dimVersion.toString)
-        val base = Enrichment.enrichWith(f.upserts, effectiveDim)
+        val dimNow = f.dim.get
+        val meta = f.meta + (CdcEngine.DimVersionKey -> dimNow.version.toString)
+        val base = Enrichment.enrichWith(f.upserts, effectiveDim(dimNow))
         // a pending dim refresh adds the retro-correction of the committed
         // rows it affects (minus this epoch's own upserts — already freshly
-        // enriched) to THIS commit; nonEmptyPending resolves to the cached
-        // non-empty retro frame + count, or None
-        val pending = pendingReEnrich(spark, asOf = epoch - 1,
-          excludeRepos = Some(f.upserts.select("repo")))
-        val nonEmptyPending = pending.flatMap { re =>
-          val c = re.cache() // shared by the count and the merge write
-          val n = c.count()
-          if (n > 0) Some((c, n)) else { c.unpersist(); None }
-        }
-        nonEmptyPending match {
+        // enriched) to THIS commit
+        withRetro(spark, dimNow, asOf = epoch - 1,
+            excludeRepos = Some(f.upserts.select("repo"))) {
           case None =>
             // fast path (every epoch without pending retro work): the same
             // rows per bucket as the transfers commit
             tbl.mergeDelta(base, epoch, metadata = meta, lineage = f.tLineage,
               compactInline = inlineCompaction, aligned = transferAligned)
-          case Some((c, n)) =>
+          case Some((retro, n)) =>
             // retro rows change the per-bucket row set — the commit takes
             // its own stats
-            try tbl.mergeDelta(base.unionByName(c), epoch,
+            tbl.mergeDelta(base.unionByName(retro), epoch,
               metadata = meta, lineage = f.tLineage + ("reEnriched" -> n),
               compactInline = inlineCompaction)
-            finally c.unpersist()
         }
       }
     }
@@ -965,8 +940,9 @@ final class CdcEngine(
     settled(1).get // the transfers manifest
   }
 
-  /** Resume point for a batch driver: the highest epoch BOTH tables have
-    * committed, or None on a fresh warehouse. A restarted job replays
+  /** Resume point for a batch driver: the highest epoch every ingest table
+    * (state, transfers and, with a dim, enriched) has committed, or None on
+    * a fresh warehouse. A restarted job replays
     * `(committedThrough.getOrElse(-1L) + 1) to lastEpoch` — and because
     * `applyEpoch` is a fast no-op on fully-committed epochs and heals
     * half-committed ones, replaying from 0 is also always safe, just
@@ -986,12 +962,12 @@ final class CdcEngine(
     *     manifest chain, so version ids never share the ingest epoch number
     *     space. This is what lets a strictDimMonths abort heal: refresh the
     *     dim at any version, then retry the SAME ingest epoch id (the
-    *     enriched chain's head never moved). It also makes the active dim
+    *     enriched chain's head never moved). It also makes the dim in force
     *     durable: a restarted engine rebuilds seed ⊕ dimlog from the chain
-    *     alone (`ensureDimState`), no caller replay of the dim feed;
-    *  2. the delta folds into the active dim (last-writer-wins on
-    *     (asid, yearMonth), materialized to bound plan depth), so every
-    *     subsequent epoch enriches with the refreshed metadata — the
+    *     alone (`dimState`), no caller replay of the dim feed;
+    *  2. only then is the dim in force swapped for the state with the
+    *     delta folded in (`DimState.fold`), so every subsequent epoch
+    *     enriches with the refreshed metadata — the
     *     reference's per-run metadata reload (`transfer_classifier.py:
     *     171-193`) made incremental;
     *  3. the retro-correction of ALREADY-committed enriched rows rides the
@@ -1005,9 +981,9 @@ final class CdcEngine(
     *     a restart (`pendingReEnrich`).
     *
     * Replaying an already-committed version returns the existing manifest
-    * without touching the active dim — UNLESS this session's dim provably
-    * predates it (`version > dimVersion`: the commit landed but the fold
-    * crashed before the version advanced), in which case the COMMITTED
+    * without touching the dim in force — UNLESS this session's dim provably
+    * predates it (`version` above the state's version: the commit landed
+    * but the fold crashed before the swap), in which case the COMMITTED
     * rows are read back from the dimlog and folded. Folding the caller's
     * file on replay would be wrong twice over: an OLD version's rows would
     * overwrite newer dim rows for overlapping keys (durably corrupting
@@ -1019,77 +995,43 @@ final class CdcEngine(
   def applyDimUpdate(spark: SparkSession, dimDelta: DataFrame, version: Long): Manifest = {
     val dl = dimlog.getOrElse(throw new IllegalStateException(
       "engine was built without a dim — no enriched table to re-enrich"))
-    ensureDimState()
-    import spark.implicits._
-    val base = activeDim.get
-    val delta = dimDelta.select(base.columns.map(col).toIndexedSeq: _*)
-
-    // VALIDATE the version id before ANY state mutates — an abort must
-    // leave the engine exactly as it was
-    dl.manifestAt(version) match {
+    val now = dimState.get
+    val cols = now.dim.columns.map(col).toIndexedSeq
+    // the version id is validated before anything is written, and the dim
+    // in force changes only by the swap after a durable commit — an abort
+    // leaves the engine exactly as it was
+    claim("dimlog", dl, version, "dim-update") match {
       case Some(m) =>
-        require(m.kind == "dim-update",
-          s"version $version of the dimlog is already a '${m.kind}' commit")
         // replay of a committed version: the delta is already durable.
-        // Fold ONLY when this session's dim predates it (commit landed,
-        // fold crashed before dimVersion advanced) — and fold the
+        // Fold ONLY when this session's dim predates it — and fold the
         // COMMITTED rows read back from the chain, not the caller's file,
         // so a stale-version rerun can't overwrite newer dim rows and a
         // changed file can't leak unpersisted rows (see docstring)
-        if (version > dimVersion) {
-          val committed = dl.changesSince(spark, version - 1, asOf = version)
-            .select(base.columns.map(col).toIndexedSeq: _*)
-          foldDeltaIntoActive(committed)
-          dimVersion = version
-        }
-        return m
+        if (version > now.version)
+          setDim(now.fold(
+            dl.changesSince(spark, version - 1, asOf = version).select(cols: _*), version))
+        m
       case None =>
-        dl.latestManifest().foreach { h =>
-          require(h.epoch < version,
-            s"dim version $version is below the dimlog head ${h.epoch} — " +
-              "versions must stay monotonic (aborting before any change)")
-        }
+        val keyed = dimDelta.select(cols: _*).cache()
+        try {
+          val n = keyed.count()
+          // one row per (asid, yearMonth) per delta: the mergeDelta contract —
+          // two versions of a key in ONE delta would resolve nondeterministically
+          require(keyed.select("asid", "yearMonth").distinct().count() == n,
+            "dim delta must carry one row per (asid, yearMonth)")
+          val m = dl.mergeDelta(keyed, version,
+            metadata = Map("dim-delta-rows" -> n.toString),
+            lineage = Map("deltaRows" -> n), kind = "dim-update")
+          setDim(now.fold(keyed, version))
+          m
+        } finally keyed.unpersist()
     }
-    val keyed = delta.cache()
-    try {
-      val n = keyed.count()
-      // one row per (asid, yearMonth) per delta: the mergeDelta contract —
-      // two versions of a key in ONE delta would resolve nondeterministically
-      require(keyed.select("asid", "yearMonth").distinct().count() == n,
-        "dim delta must carry one row per (asid, yearMonth)")
-      val m = dl.mergeDelta(keyed, version,
-        metadata = Map("dim-delta-rows" -> n.toString),
-        lineage = Map("deltaRows" -> n), kind = "dim-update")
-      // fold into the active dim only after the delta is durable
-      foldDeltaIntoActive(keyed)
-      dimVersion = version
-      m
-    } finally keyed.unpersist()
-  }
-
-  /** Fold a (column-conformed) delta into the active dim — last-writer-wins
-    * on (asid, yearMonth), materialized to keep plan depth flat — and
-    * extend the strict/lineage month coverage with the delta's months (so a
-    * strictDimMonths abort heals by refreshing the dim and retrying the
-    * same ingest epoch id). Idempotent: re-folding the same delta is a
-    * no-op by construction.
-    */
-  private def foldDeltaIntoActive(delta: DataFrame): Unit = {
-    val spark = delta.sparkSession
-    import spark.implicits._
-    activeDim = Some(CdcEngine.materializeDim(
-      activeDim.get.join(delta.select("asid", "yearMonth").distinct(),
-          Seq("asid", "yearMonth"), "left_anti")
-        .unionByName(delta)))
-    activeDimChanged()
-    dimDeltaMonthsAcc ++= delta.select(col("yearMonth").cast("int")).distinct()
-      .as[Int].collect().toSet
   }
 
   /** Retro-correction rows pending from dim versions newer than the
     * enriched table's recorded `dim-version`: the already-committed
     * transfers (snapshot as of `asOf`) the pending deltas can affect,
-    * re-enriched with the active dim, minus `excludeRepos` (keys the
+    * re-enriched with the dim state `now`, minus `excludeRepos` (keys the
     * caller is upserting this epoch anyway — their fresh upsert already
     * enriches with the current dim). None = no version is pending. The
     * (asid × month) filter pushes to the parquet scan over compacted
@@ -1100,13 +1042,14 @@ final class CdcEngine(
     * identical version — the superset filter is safe.
     */
   private[cdc] def pendingReEnrich(spark: SparkSession, asOf: Long,
-                                   excludeRepos: Option[DataFrame]): Option[DataFrame] = {
+                                   excludeRepos: Option[DataFrame],
+                                   now: CdcEngine.DimState = dimState.get): Option[DataFrame] = {
     import spark.implicits._
     val tbl = enriched.get
     val v0 = tbl.latestManifest()
       .flatMap(_.metadata.get(CdcEngine.DimVersionKey)).map(_.toLong)
       .getOrElse(-1L)
-    if (dimVersion <= v0) return None
+    if (now.version <= v0) return None
     val deltas = dimlog.get.changesSince(spark, v0)
     // the dim is broadcast-small by contract → bounded driver-side collects
     val asids = deltas.select("asid").distinct().as[String].collect().toSet
@@ -1142,8 +1085,26 @@ final class CdcEngine(
       else asidScoped || ymCol.isin(monthWide.toSeq: _*))
     val kept = excludeRepos.fold(affected)(ex =>
       affected.join(ex.distinct(), Seq("repo"), "left_anti"))
-    Some(Enrichment.enrichWith(kept, effectiveDim))
+    Some(Enrichment.enrichWith(kept, effectiveDim(now)))
   }
+
+  /** Run `body` over the retro-correction pending under `now` (see
+    * `pendingReEnrich`), cached once for its count and its commit:
+    * Some((rows, n)) when n > 0 rows are owed, else None. The cache is
+    * released when `body` returns or throws.
+    */
+  private def withRetro[A](spark: SparkSession, now: CdcEngine.DimState, asOf: Long,
+                           excludeRepos: Option[DataFrame])(
+      body: Option[(DataFrame, Long)] => A): A =
+    pendingReEnrich(spark, asOf, excludeRepos, now) match {
+      case None => body(None)
+      case Some(re) =>
+        val rows = re.cache()
+        try {
+          val n = rows.count()
+          body(if (n > 0) Some((rows, n)) else None)
+        } finally rows.unpersist()
+    }
 
   /** Commit the pending retro-correction on the enriched chain NOW, as its
     * own `kind="dim-update"` epoch — for a dim refresh with no subsequent
@@ -1157,44 +1118,31 @@ final class CdcEngine(
   def flushDimUpdates(spark: SparkSession, epoch: Long): Long = {
     val tbl = enriched.getOrElse(throw new IllegalStateException(
       "engine was built without a dim — no enriched table to re-enrich"))
-    ensureDimState()
-    tbl.manifestAt(epoch) match {
-      case Some(m) =>
-        require(m.kind == "dim-update",
-          s"epoch $epoch of enriched is already a '${m.kind}' commit — " +
-            "flush epoch ids must be disjoint from ingest/maintenance ids")
-        return m.lineage.getOrElse("reEnriched", 0L)
+    claim("enriched", tbl, epoch, "dim-update") match {
+      case Some(m) => m.lineage.getOrElse("reEnriched", 0L)
       case None =>
-        tbl.latestManifest().foreach { h =>
-          require(h.epoch < epoch,
-            s"flush epoch $epoch is below the enriched chain head ${h.epoch} — " +
-              "epoch ids must stay monotonic per table (aborting before any change)")
-        }
-    }
-    // NOTE: an all-miss flush (n == 0) deliberately commits nothing, so the
-    // watermark does not advance and a later flush re-scans the (tiny)
-    // dimlog pending set — any subsequent ingest epoch's enriched commit
-    // advances it. Inline compaction follows the engine's configuration;
-    // beware that a far-parked flush epoch id also moves the
-    // changeRetention horizon forward (schedule flush ids like maintenance
-    // ids, near the ingest numbering).
-    pendingReEnrich(spark, asOf = epoch - 1, excludeRepos = None) match {
-      case None => 0L
-      case Some(re) =>
-        val c = re.cache() // shared by the count and the merge write
-        try {
-          val n = c.count()
-          if (n > 0)
-            tbl.mergeDelta(c, epoch,
-              metadata = Map(CdcEngine.DimVersionKey -> dimVersion.toString),
+        // NOTE: an all-miss flush (n == 0) deliberately commits nothing, so
+        // the watermark does not advance and a later flush re-scans the
+        // (tiny) dimlog pending set — any subsequent ingest epoch's enriched
+        // commit advances it. Inline compaction follows the engine's
+        // configuration; beware that a far-parked flush epoch id also moves
+        // the changeRetention horizon forward (schedule flush ids like
+        // maintenance ids, near the ingest numbering).
+        val now = dimState.get
+        withRetro(spark, now, asOf = epoch - 1, excludeRepos = None) {
+          case None => 0L
+          case Some((retro, n)) =>
+            tbl.mergeDelta(retro, epoch,
+              metadata = Map(CdcEngine.DimVersionKey -> now.version.toString),
               lineage = Map("reEnriched" -> n), kind = "dim-update",
               compactInline = inlineCompaction)
-          n
-        } finally c.unpersist()
+            n
+        }
     }
   }
 
-  /** Grow both tables' bucket counts (one epoch number each, state first) —
+  /** Grow every ingest table's bucket count (state, transfers and, with a
+    * dim, enriched; one epoch number each, state first) —
     * run when the table outgrows its bucket granularity so epoch applies
     * keep touching a small fraction of the data.
     */
@@ -1202,8 +1150,9 @@ final class CdcEngine(
     tables.foreach(_._2.rebucket(spark, newNumBuckets, epoch))
   }
 
-  /** Maintenance between ingest epochs: compact both tables' over-threshold
-    * buckets as their own commit epoch (same number on both chains, like
+  /** Maintenance between ingest epochs: compact every ingest table's
+    * (state, transfers and, with a dim, enriched) over-threshold buckets as
+    * their own commit epoch (the same number on every chain, like
     * applyEpoch). Pair with `inlineCompaction = false` so ingest epochs
     * never pay the rewrite; a no-op (no commit) on a table with nothing
     * over threshold. MUST be interleaved with applies, never run in
@@ -1234,13 +1183,38 @@ object CdcEngine {
     */
   val DimVersionKey: String = "dim-version"
 
-  /** Collect a (broadcast-small by contract) dim to local rows and rebuild
-    * it as a local-relation DataFrame — bounds the active dim's plan
-    * lineage at depth 1 no matter how many update folds have been applied
-    * (each fold otherwise wraps the previous dim in another
-    * anti-join ∪ union, deepening the broadcast plan unboundedly).
+  /** The dim in force: the deduped seed overlaid with every committed dim
+    * delta up to `version` (-1 = seed only), and the months those deltas
+    * added. Version ids are the dimlog's OWN monotonic number space,
+    * disjoint from ingest epoch ids by construction — the property that
+    * lets a strictDimMonths abort heal (refresh the dim, retry the SAME
+    * ingest epoch id) without the dim commit wedging the ingest chain's
+    * head ordering. Immutable: an update builds a new value.
     */
-  def materializeDim(df: DataFrame): DataFrame =
+  private[cdc] final case class DimState(dim: DataFrame, version: Long, deltaMonths: Set[Int]) {
+    /** This state with a (column-conformed) delta folded in at `version`:
+      * last-writer-wins on (asid, yearMonth), materialized to keep plan
+      * depth flat, plus the delta's months (so a strictDimMonths abort
+      * heals by refreshing the dim and retrying the same ingest epoch id).
+      * Re-folding the same delta is a no-op by construction.
+      */
+    def fold(delta: DataFrame, version: Long): DimState = {
+      import delta.sparkSession.implicits._
+      DimState(
+        materializeDim(dim.join(delta.select("asid", "yearMonth").distinct(),
+          Seq("asid", "yearMonth"), "left_anti").unionByName(delta)),
+        version,
+        deltaMonths ++ delta.select(col("yearMonth").cast("int")).distinct().as[Int].collect())
+    }
+  }
+
+  /** Collect a (broadcast-small by contract) dim to local rows and rebuild
+    * it as a local-relation DataFrame — bounds the dim's plan lineage at
+    * depth 1 no matter how many update folds have been applied (each fold
+    * otherwise wraps the previous dim in another anti-join ∪ union,
+    * deepening the broadcast plan unboundedly).
+    */
+  private def materializeDim(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(
       java.util.Arrays.asList(df.collect(): _*), df.schema)
 
@@ -1264,6 +1238,9 @@ object CdcEngine {
       meta: Map[String, String],
       lineage: Map[String, Long],
       tLineage: Map[String, Long],
+      /** The dim in force when the fold ran (None without a dim): the
+        * strict gate and the enriched commit both use this one value. */
+      dim: Option[DimState],
   )
 
   /** The reference's datetime-string rendering for commit metadata: ISO with

@@ -222,9 +222,8 @@ object Enrichment {
 
   /** The effective dim as a driver-side map: (asid, query month) → practice,
     * over every query month that resolves — {m, next(m) | m ∈ present}, the
-    * cover `enrich` derives when given no months hint. Resolution is
-    * `effectiveAsOf`'s; building the map runs its jobs once, so a caller
-    * builds it once per dim version. `dim` must be (asid, yearMonth)-unique
+    * cover `enrich` derives. Resolution is `effectiveAsOf`'s; building the
+    * map runs its jobs once, so a caller builds it once per dim version. `dim` must be (asid, yearMonth)-unique
     * and broadcast-small, as for `enrich`.
     */
   def effectiveMap(dim: DataFrame, present: Set[Int]): EffectiveDim = {
@@ -261,31 +260,18 @@ object Enrichment {
     * joins; zero shuffles of the transfers side.
     */
   def enrich(transfers: DataFrame, dim: DataFrame,
-             /** The distinct request months of `transfers`, when the caller
-               * already knows them (the CDC engine's epoch summary computes
-               * them in its one summary job) — saves a per-call distinct
-               * collect job. Must COVER every request month present (a
-               * superset is safe: extra months only add unmatched dim rows
-               * to the broadcast; a missing month would null-pad its rows).
-               */
-             monthsHint: Option[Seq[Int]] = None,
              /** Distinct dim months, when the caller already knows them —
                * saves `effectiveAsOf`'s per-call presence job (see
                * `presentMonths`).
                */
              presentMonthsHint: Option[Set[Int]] = None): DataFrame = {
-    val spark = transfers.sparkSession
-    import spark.implicits._
-    // With no months hint, the resolvable query months are derived from the
-    // DIM alone (r7): a query month resolves iff it or its previous month
-    // has a snapshot, so {m, next(m) | m ∈ present} COVERS every month any
-    // transfer could resolve — unresolvable months contribute no eff rows
-    // either way (null-pad), and extra months only add unmatched broadcast
-    // rows. The former formulation collected distinct months FROM THE
-    // TRANSFERS, which executed the caller's whole upstream plan once extra
-    // per enrich call (measured: c02/c05 ran generate+classify twice).
+    // The resolvable query months are derived from the DIM alone: a query
+    // month resolves iff it or its previous month has a snapshot, so
+    // {m, next(m) | m ∈ present} COVERS every month any transfer could
+    // resolve — unresolvable months contribute no eff rows either way
+    // (null-pad), and extra months only add unmatched broadcast rows.
     val present = presentMonthsHint.getOrElse(presentMonths(dim))
-    val months = monthsHint.getOrElse((present ++ present.map(nextMonth)).toSeq)
+    val months = (present ++ present.map(nextMonth)).toSeq
     // Schema-stable even for an empty/month-less input: callers union
     // enriched frames from different epochs (the CDC engine's pending
     // retro-correction rides a later epoch's commit), so a months-empty

@@ -141,8 +141,18 @@ class DimUpdateSpec extends SparkSpec {
     (0L to 1L).foreach(e => eng.applyEpoch(spark, log.filter(_.epoch == e), e))
     eng.applyDimUpdate(spark, delta, version = 0L)
 
+    // a flush id must be a free id above the enriched head, or an earlier
+    // flush: epoch 1 is an ingest commit there — rejected, nothing commits
+    val headBefore = eng.enriched.get.latestManifest()
+    intercept[IllegalArgumentException] { eng.flushDimUpdates(spark, epoch = 1L) }
+    assert(eng.enriched.get.latestManifest() == headBefore)
+
     val n = eng.flushDimUpdates(spark, epoch = 100L)
     assert(n > 0)
+    // an id below the head (and not a flush) is rejected, nothing commits
+    val headAfter = eng.enriched.get.latestManifest()
+    intercept[IllegalArgumentException] { eng.flushDimUpdates(spark, epoch = 50L) }
+    assert(eng.enriched.get.latestManifest() == headAfter)
     assert(rowMap(eng.currentEnriched(spark)) ==
       rowMap(batchEnrich(log.filter(_.epoch <= 1L), foldDelta(baseDim, delta))),
       "flushed state must equal one-shot enrichment with the refreshed dim")

@@ -74,6 +74,19 @@ class EnrichmentSpec extends SparkSpec {
     assert(out("r2").getAs[String]("requesting_practice_ods_code") == "O00001-202001")
     assert(out("r2").getAs[String]("sending_practice_ods_code") == "O00002-202001")
     assert(out("r2").getAs[String]("sending_practice_sicbl_name") == "SICBL 2")
+
+    // a dim without 202001: a 202001 transfer resolves via the 201912
+    // snapshot (one-month fallback), a 202003 transfer null-pads
+    val fallback = Seq(
+      ("r3", "asid-1", "asid-2", microsOf(202001, 3)),
+      ("r4", "asid-1", "asid-2", microsOf(202003, 3)),
+    ).toDF("repo", "requestingPracticeAsid", "sendingPracticeAsid", "dateRequestedMicros")
+    val fb = Enrichment.enrich(fallback, dim.filter($"yearMonth" =!= 202001)).collect()
+      .map(r => r.getAs[String]("repo") -> r).toMap
+    assert(fb("r3").getAs[String]("requesting_practice_ods_code") == "O00001-201912")
+    assert(fb("r3").getAs[String]("sending_practice_ods_code") == "O00002-201912")
+    assert(fb("r4").getAs[String]("requesting_practice_ods_code") == null)
+    assert(fb("r4").getAs[String]("sending_practice_ods_code") == null)
   }
 
   test("duplicate (asid, month) rows in an unvalidated dim do not fan out transfers") {

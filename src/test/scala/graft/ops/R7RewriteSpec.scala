@@ -92,31 +92,4 @@ class R7RewriteSpec extends SparkSpec {
     assert(rows("conv-a") == (("sysA", null)), s"singleton: ${rows("conv-a")}")
     assert(rows("conv-b") == (("sysB", "sysC")), s"pair: ${rows("conv-b")}")
   }
-
-  test("enrich with no months hint equals enrich with the explicit transfer-month hint") {
-    import graft.cdc.Enrichment
-    // dim present for 201912 only → 202001 resolves by fallback, 202003 not
-    val dim = Enrichment.generateDim(spark, numAsids = 40, yearMonths = Seq(201912))
-    def at(ym: Int): Long = { // dateRequestedMicros inside month ym
-      val y = ym / 100; val m = ym % 100
-      java.time.LocalDateTime.of(y, m, 5, 0, 0)
-        .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
-    }
-    val transfers = Seq(
-      ("r1", "asid-1", "asid-2", at(201912)),
-      ("r2", "asid-3", "asid-4", at(202001)),
-      ("r3", "asid-5", "asid-6", at(202003)),
-    ).toDF("repo", "requestingPracticeAsid", "sendingPracticeAsid", "dateRequestedMicros")
-    val hinted = Enrichment.enrich(transfers, dim,
-      monthsHint = Some(Seq(201912, 202001, 202003)))
-    val unhinted = Enrichment.enrich(transfers, dim)
-    val h = hinted.orderBy("repo").collect().map(_.toSeq).toSeq
-    val u = unhinted.orderBy("repo").collect().map(_.toSeq).toSeq
-    assert(h == u, s"hinted=$h unhinted=$u")
-    // and the fallback/null-pad shape itself
-    val byRepo = unhinted.collect().map(r =>
-      r.getAs[String]("repo") -> r.getAs[String]("requesting_practice_ods_code")).toMap
-    assert(byRepo("r1") != null && byRepo("r2") != null && byRepo("r3") == null,
-      s"fallback shape: $byRepo")
-  }
 }
