@@ -8,7 +8,9 @@ import scala.collection.mutable
 
 /** Spark metrics per job description (`spark.job.description`) over one
   * body: jobs, job wall (job end minus job start, summed over jobs), task
-  * CPU (`executorCpuTime`) and shuffle-write bytes. A task is attributed
+  * CPU (`executorCpuTime`), task-deserialization CPU
+  * (`executorDeserializeCpuTime`), shuffle-write bytes and output bytes
+  * (`outputMetrics.bytesWritten`). A task is attributed
   * to the description of the job that submitted its stage. The one listener
   * the tools and tests read Spark metrics through; it is drained with
   * `GraftBridge.drainListenerBus` before it is read, and a bus that does not
@@ -22,6 +24,8 @@ final class JobProbe private (byDesc: Map[String, JobProbe.Totals]) {
   def shuffleBytes(desc: String): Long = get(desc).shuffleBytes
   def jobWallSec(desc: String): Double = get(desc).wallMs / 1e3
   def taskCpuSec(desc: String): Double = get(desc).cpuNs / 1e9
+  def deserializeCpuSec(desc: String): Double = get(desc).deserializeCpuNs / 1e9
+  def outputBytes(desc: String): Long = get(desc).outputBytes
   def totalJobs: Int = byDesc.values.map(_.jobs).sum
   def totalShuffleBytes: Long = byDesc.values.map(_.shuffleBytes).sum
   def totalJobWallSec: Double = byDesc.values.map(_.wallMs).sum / 1e3
@@ -33,7 +37,9 @@ object JobProbe {
     var jobs = 0
     var wallMs = 0L
     var cpuNs = 0L
+    var deserializeCpuNs = 0L
     var shuffleBytes = 0L
+    var outputBytes = 0L
   }
 
   /** Every callback holds the listener's lock: the bus delivers on its own thread. */
@@ -57,7 +63,9 @@ object JobProbe {
       if (te.taskMetrics != null) stageDesc.get(te.stageId).foreach { d =>
         val t = totals(d)
         t.cpuNs += te.taskMetrics.executorCpuTime
+        t.deserializeCpuNs += te.taskMetrics.executorDeserializeCpuTime
         t.shuffleBytes += te.taskMetrics.shuffleWriteMetrics.bytesWritten
+        t.outputBytes += te.taskMetrics.outputMetrics.bytesWritten
       }
     }
     def result: Map[String, Totals] = synchronized(byDesc.toMap)

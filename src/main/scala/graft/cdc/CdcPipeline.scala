@@ -700,7 +700,7 @@ final class CdcEngine(
     // pending (not-yet-durable) fresh events from the in-flight previous
     // epoch, pruned to this batch's buckets like the snapshot read
     val pendingPart = pendingFresh
-      .filter(p => p.eventStats.keySet.exists(touched)) // skip when it wrote none of them
+      .filter(p => p.eventRows.keySet.exists(touched)) // skip when it wrote none of them
       .map(_.freshEvents.where(bucket.isin(touched.toSeq: _*)))
     // Prior-state events are folded but never RE-persisted (only fresh,
     // current-epoch events reach the state sink) — path/lang/op are null
@@ -725,8 +725,8 @@ final class CdcEngine(
     val priorTouchedRows = state.manifestAsOf(stateAsOf)
       .map(_.files.filter(f => touched.contains(f.bucket)).map(_.rows).sum)
       .getOrElse(0L) +
-      pendingFresh.map(_.eventStats.collect {
-        case (b, s) if touched(b) => s.rows }.sum).getOrElse(0L)
+      pendingFresh.map(_.eventRows.collect { case (b, n) if touched(b) => n }.sum)
+        .getOrElse(0L)
     // Factor 4.0: forcing the semi-join at prior ≈ batch cuts fold-shuffle
     // bytes ~2.5× but costs more wall per epoch (4 epochs × ~112k events:
     // 4.3/2.9/2.9 s → 6.2/4.3/6.0 s, OPTIMIZATION_r07.md §9; re-measure
@@ -808,20 +808,10 @@ final class CdcEngine(
         .groupBy("__bucket").agg(
           sum("isE").as("e"), sum("isT").as("t"),
           sum("da").as("da"), sum("up").as("up"),
-          sum("ns").as("ns"), sum("dd").as("dd"), sum("md").as("md"),
-          // per-bucket repo bounds per sink — the manifests' record-level
-          // pruning index (repo is the first key column of both tables)
-          min(when(col("isE") === 1L, col("repo"))).as("emn"),
-          max(when(col("isE") === 1L, col("repo"))).as("emx"),
-          min(when(col("isT") === 1L, col("repo"))).as("tmn"),
-          max(when(col("isT") === 1L, col("repo"))).as("tmx"))
+          sum("ns").as("ns"), sum("dd").as("dd"), sum("md").as("md"))
         .collect()
-      val eventStats = summary.filter(_.getLong(1) > 0).map(r =>
-        r.getInt(0) -> graft.lake.BucketStats(r.getLong(1),
-          Option(r.getString(8)), Option(r.getString(9)))).toMap
-      val transferStats = summary.filter(_.getLong(2) > 0).map(r =>
-        r.getInt(0) -> graft.lake.BucketStats(r.getLong(2),
-          Option(r.getString(10)), Option(r.getString(11)))).toMap
+      val eventRows = summary.filter(_.getLong(1) > 0).map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val transferRows = summary.filter(_.getLong(2) > 0).map(r => r.getInt(0) -> r.getLong(2)).toMap
       def total(i: Int): Long = summary.map(_.getLong(i)).sum
 
       // strict-dim fail-fast: the reference RAISES OdsMetadataNotFound when
@@ -863,8 +853,8 @@ final class CdcEngine(
         // only when the caller declared its dim coverage (see dimMonths)
         knownMonths.map(_ => "missingDimMonthTransfers" -> total(7))
 
-      CdcEngine.FoldResult(epoch, out, upserts, freshEvents, nb, eventStats,
-        transferStats, meta, lineage, tLineage, dimNow)
+      CdcEngine.FoldResult(epoch, out, upserts, freshEvents, nb, eventRows,
+        transferRows, meta, lineage, tLineage, dimNow)
     } catch {
       case t: Throwable =>
         out.unpersist()
@@ -889,7 +879,7 @@ final class CdcEngine(
     // one bucket per partition under the state layout's bucket count; a
     // table rebucketed out of band to another count takes the lake's
     // unaligned path instead
-    val transferAligned = Some(BucketAligned(f.numBuckets, f.transferStats))
+    val transferAligned = Some(BucketAligned(f.numBuckets, f.transferRows.keySet))
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     val stateF = Future {
@@ -897,7 +887,7 @@ final class CdcEngine(
       describe(spark, epoch, "state commit (appendNew)")
       state.mergeDelta(f.freshEvents, epoch, metadata = f.meta, lineage = f.lineage,
         compactInline = inlineCompaction,
-        aligned = Some(BucketAligned(f.numBuckets, f.eventStats)))
+        aligned = Some(BucketAligned(f.numBuckets, f.eventRows.keySet)))
     }
     val transfersF = Future {
       describe(spark, epoch, "transfers commit (mergeDelta)")
@@ -1233,8 +1223,9 @@ object CdcEngine {
       /** The bucket count the fold partitioned `out` by, one bucket per
         * partition (the state table's live count). */
       numBuckets: Int,
-      eventStats: Map[Int, graft.lake.BucketStats],
-      transferStats: Map[Int, graft.lake.BucketStats],
+      /** Rows per bucket of each sink, buckets without rows left out. */
+      eventRows: Map[Int, Long],
+      transferRows: Map[Int, Long],
       meta: Map[String, String],
       lineage: Map[String, Long],
       tLineage: Map[String, Long],

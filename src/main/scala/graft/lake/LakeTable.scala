@@ -2,8 +2,9 @@ package graft.lake
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{BucketWritePlan, BucketWriter}
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
@@ -22,21 +23,19 @@ final case class FileEntry(
     rows: Long,
     epochAdded: Long,
     /** Min/max of the FIRST key column over this file set (string-keyed
-      * tables only; None otherwise or for pre-bounds manifests). Spark's
-      * min/max on StringType order by UTF8String binary comparison, and
-      * readers prune with the same comparator — record-level pruning WITHIN
-      * a bucket, so point lookups and merge-on-read resolution open only the
-      * files whose key range can contain the probe. Bounds derived for
-      * compaction rewrites (min-of-mins/max-of-maxs) are a superset of the
-      * true range — safe to prune with, never to prove membership.
+      * tables only; None otherwise or for pre-bounds manifests), in
+      * UTF8String binary order — the order the writers sort by and readers
+      * prune with: record-level pruning WITHIN a bucket, so point lookups
+      * and merge-on-read resolution open only the files whose key range can
+      * contain the probe. Safe to prune with, never to prove membership.
       */
     min0: Option[String] = None,
     max0: Option[String] = None,
     /** Leaf parquet data files of this entry's directory, with exact byte
-      * sizes — recorded at commit time (ONE local listing of the
-      * just-written dir, O(new files)) so reads plan from the manifest
-      * alone: `ManifestFileIndex` hands Spark the exact (path, size) set and
-      * no listing/stat round-trips happen per query — on an object store at
+      * sizes — reported by the write tasks that wrote them (no listing), so
+      * reads plan from the manifest alone: `ManifestFileIndex` hands Spark
+      * the exact (path, size) set and no listing/stat round-trips happen
+      * per query — on an object store at
       * production scale, the per-query LIST calls are the metadata
       * bottleneck this removes (the Iceberg/Delta planning shape). Every
       * read needs them: an entry without leaves fails the read.
@@ -47,14 +46,11 @@ final case class FileEntry(
 /** One leaf parquet file: name relative to its FileEntry dir + exact size. */
 final case class LeafFile(name: String, bytes: Long)
 
-/** Per-bucket write statistics: exact row count + first-key-column bounds. */
-final case class BucketStats(rows: Long, min0: Option[String], max0: Option[String])
-
 /** A commit input that is already partitioned one bucket per partition
-  * under a `numBuckets`-bucket layout of the table's bucket hash, with its
-  * exact per-bucket stats (they become the manifest's counts and bounds).
+  * under a `numBuckets`-bucket layout of the table's bucket hash, and the
+  * buckets that hold its rows.
   */
-final case class BucketAligned(numBuckets: Int, stats: Map[Int, BucketStats])
+final case class BucketAligned(numBuckets: Int, buckets: Set[Int])
 
 final case class Manifest(
     epoch: Long,
@@ -86,10 +82,15 @@ final case class Manifest(
   *    buckets its batch touches — commit cost is O(batch), not O(table);
   *  - a commit whose input is already partitioned one bucket per partition
   *    under the table's live layout (`BucketAligned`, as the engine's fold
-  *    delivers it) writes with no shuffle; any other input pays one stats
-  *    query, whose exact per-bucket counts fix the touched buckets and the
-  *    salt, and `repartition(touched buckets × salt, bucket, salt)`, so a
-  *    hot bucket spreads over several tasks (SURVEY.md §4 skew row);
+  *    delivers it) writes with no shuffle; any other input pays one count
+  *    query, whose per-bucket counts fix the touched buckets and the salt,
+  *    and `repartition(touched buckets × salt, bucket, salt)`, so a hot
+  *    bucket spreads over several tasks (SURVEY.md §4 skew row);
+  *  - every commit is one write job (`BucketWriter`): tasks write the
+  *    bucket files and report them, the driver links the manifest — the
+  *    task-writer/driver-commit split of Iceberg and Delta. A bucket the
+  *    commit pushes over its compaction threshold is compacted by the task
+  *    that writes its new rows, in the same job;
   *  - readers prune by bucket (and by manifest row counts) without listing
   *    the filesystem: the manifest is the only metadata round-trip;
   *  - merge-on-read resolution is bucket-local: every file belongs to one
@@ -131,6 +132,12 @@ final class LakeTable(
       */
     val changeRetention: Int = 0,
 ) {
+  require(numBuckets >= 1, s"numBuckets must be at least 1, got $numBuckets")
+  require(keyColumns.nonEmpty, "keyColumns must name at least one column")
+  require(keyColumns.startsWith(bucketColumns),
+    s"bucketColumns $bucketColumns must be a prefix of keyColumns $keyColumns")
+  require(compactThreshold >= 1, s"compactThreshold must be at least 1, got $compactThreshold")
+  require(changeRetention >= 0, s"changeRetention must not be negative, got $changeRetention")
   private val bucketCols: Seq[String] = if (bucketColumns.nonEmpty) bucketColumns else keyColumns
   private val mapper = new ObjectMapper()
     .registerModule(DefaultScalaModule)
@@ -227,24 +234,19 @@ final class LakeTable(
     */
   private val saltRowsPerTask = 131072L
 
-  /** Adaptive salt from a commit's exact per-bucket stats (non-empty): full
+  /** Adaptive salt from a commit's per-bucket row counts: full
     * `saltFactor` only when a bucket is big enough to need spreading.
     */
-  private def effectiveSalt(stats: Map[Int, BucketStats]): Int =
+  private def effectiveSalt(counts: Map[Int, Long]): Int =
     math.max(1L, math.min(saltFactor.toLong,
-      (stats.values.map(_.rows).max + saltRowsPerTask - 1) / saltRowsPerTask)).toInt
+      (counts.values.maxOption.getOrElse(0L) + saltRowsPerTask - 1) / saltRowsPerTask)).toInt
 
   /** File-level key-bounds check with Spark's own string comparator
     * (UTF8String binary order — what min/max on StringType produced):
     * can this file contain first-key-column value `v`? Missing bounds ⇒ yes.
     */
-  private def mayContain(f: FileEntry, v: String): Boolean = {
-    val probe = org.apache.spark.unsafe.types.UTF8String.fromString(v)
-    f.min0.forall(mn =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(mn).compareTo(probe) <= 0) &&
-      f.max0.forall(mx =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(mx).compareTo(probe) >= 0)
-  }
+  private def mayContain(f: FileEntry, v: String): Boolean =
+    f.min0.forall(LakeTable.utf8Order.lteq(_, v)) && f.max0.forall(LakeTable.utf8Order.gteq(_, v))
 
   /** Current snapshot as a DataFrame (bucket-pruned when `buckets` given).
     * Resolves last-writer-wins per key, but ONLY in buckets holding >1 live
@@ -298,41 +300,9 @@ final class LakeTable(
   private def effectiveThreshold(bucket: Int): Int =
     compactThreshold + (bucket % compactThreshold)
 
-  /** ONE aggregation job: per-bucket row counts + first-key-column bounds
-    * (bounds only for string-keyed tables — same job either way).
-    */
-  private def bucketStatsOf(df: DataFrame): Map[Int, BucketStats] = {
-    val k0 = keyColumns.head
-    val stringKey = df.schema.fields
-      .find(_.name == k0).exists(_.dataType == org.apache.spark.sql.types.StringType)
-    if (stringKey)
-      df.groupBy("__bucket")
-        .agg(count(lit(1)).as("n"), min(k0).as("mn"), max(k0).as("mx"))
-        .collect()
-        .map(r => r.getInt(0) -> BucketStats(r.getLong(1), Option(r.getString(2)),
-          Option(r.getString(3)))).toMap
-    else
-      df.groupBy("__bucket").agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getInt(0) -> BucketStats(r.getLong(1), None, None)).toMap
-  }
-
-  /** Leaf parquet files of a just-written bucket dir: the one local listing
-    * per commit that lets every subsequent READ skip listing entirely
-    * (see FileEntry.leaves).
-    */
-  private def leavesOf(pathRel: String): Seq[LeafFile] = {
-    val dir = Paths.get(root, pathRel)
-    if (!Files.isDirectory(dir)) Seq.empty
-    else listNames(dir).filter(_.endsWith(".parquet")).sorted
-      .map(n => LeafFile(n, Files.size(dir.resolve(n))))
-  }
-
-  private def entriesFor(dirRel: String, epoch: Long,
-                         stats: Map[Int, BucketStats]): Seq[FileEntry] =
-    stats.toSeq.sortBy(_._1).map { case (b, s) =>
-      val p = s"$dirRel/__bucket=$b"
-      FileEntry(p, b, s.rows, epoch, s.min0, s.max0, leavesOf(p))
-    }
+  /** ONE aggregation job: the row count of every bucket `df` touches. */
+  private def bucketCounts(df: DataFrame): Map[Int, Long] =
+    df.groupBy("__bucket").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
 
   /** Absolute (path, size) of every leaf file of `fs`. Reads plan from
     * these alone; an entry without leaves fails loudly. */
@@ -359,62 +329,55 @@ final class LakeTable(
     org.apache.spark.sql.graftbridge.ManifestRead.bucketLocal(spark,
       buckets.map(leafFiles), schema, keyColumns, "__epoch")
 
-  /** The one bucket write: rows sorted within each partition by (bucket,
-    * key) — the key order bucket-local resolution merges on — into one
-    * directory per bucket under `dirRel`.
-    */
-  private def writeBuckets(df: DataFrame, dirRel: String): Unit =
-    df.sortWithinPartitions((col("__bucket") +: keyColumns.map(col)): _*)
-      .write.mode(SaveMode.Overwrite).option("compression", LakeTable.compression)
-      .partitionBy("__bucket").parquet(s"$root/$dirRel")
+  /** The live files of each bucket that a commit at `epoch` may compact:
+    * those older than the `changeRetention` horizon. */
+  private def compactable(files: Seq[FileEntry], epoch: Long): Map[Int, Seq[FileEntry]] =
+    files.filter(_.epochAdded <= epoch - changeRetention).groupBy(_.bucket)
 
-  /** Rewrite each over-threshold bucket's COMPACTABLE files (older than the
-    * `changeRetention` horizon) into one file set, in ONE job: a bucket-local
-    * read (each bucket whole in one task) that resolves superseded key
-    * versions away, written back by the same tasks — no exchange, one file
-    * per bucket, per-row `__epoch` preserved. Row counts are counted inside
-    * the write job (`Dataset.observe`). Bounds are derived min-of-mins /
-    * max-of-maxs — a superset of the true range after resolution, which is
-    * safe for pruning. `nb` is the layout's bucket count. Returns the
-    * updated live-file list, or `files` unchanged when nothing crosses its
-    * threshold.
+  /** The buckets a commit at `epoch` that writes new rows into `touched`
+    * pushes over their threshold. Its own new file counts only when no
+    * retention horizon keeps it out of compaction.
     */
-  private def compactOverfull(spark: SparkSession, files: Seq[FileEntry],
-                              schema: StructType, epoch: Long, nb: Int): Seq[FileEntry] = {
-    val horizon = epoch - changeRetention
-    val overfull = files.groupBy(_.bucket).filter { case (b, fs) =>
-      fs.count(_.epochAdded <= horizon) > effectiveThreshold(b)
-    }.keySet
-    if (overfull.isEmpty) return files
-    val cInput = files.filter(f => overfull.contains(f.bucket) && f.epochAdded <= horizon)
-    val inByBucket = cInput.groupBy(_.bucket)
-    val cDirRel = f"data/e$epoch%012dc"
-    val read = bucketLocal(spark, byBucket(cInput), withEpochCol(schema))
-      .withColumn("__bucket", bucketCol(nb))
-    val counted = org.apache.spark.sql.Observation()
-    val perBucket = overfull.toSeq.sorted.map(b => count_if(col("__bucket") === b).as(b.toString))
-    writeBuckets(read.observe(counted, perBucket.head, perBucket.tail: _*), cDirRel)
-    val n = counted.get
-    val rowsByBucket: Map[Int, Long] =
-      overfull.map(b => b -> n(b.toString).asInstanceOf[Long]).filter(_._2 > 0).toMap
-    // Derived bounds must use the SAME comparator that wrote them and that
-    // mayContain prunes with — UTF8String byte order. Scala's String
-    // ordering (UTF-16 code units) disagrees for supplementary characters
-    // (a 4-byte UTF-8 sequence sorts above U+E000..U+FFFF in byte order but
-    // below in UTF-16), so min/max under the wrong order can UNDER-cover
-    // the true range and pruning would silently drop live rows.
-    val utf8Order: Ordering[String] = (a: String, b: String) =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(a)
-        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
-    val cEntries = rowsByBucket.toSeq.sortBy(_._1).map { case (b, rows) =>
-      val ins = inByBucket(b)
-      // derived bounds: only when every input carries bounds
-      val mn = if (ins.forall(_.min0.isDefined)) Some(ins.flatMap(_.min0).min(utf8Order)) else None
-      val mx = if (ins.forall(_.max0.isDefined)) Some(ins.flatMap(_.max0).max(utf8Order)) else None
-      val p = s"$cDirRel/__bucket=$b"
-      FileEntry(p, b, rows, epoch, mn, mx, leavesOf(p))
+  private def overfull(files: Seq[FileEntry], touched: Set[Int], epoch: Long): Set[Int] = {
+    val old = compactable(files, epoch)
+    (old.keySet ++ touched).filter { b =>
+      old.getOrElse(b, Nil).size + (if (changeRetention == 0 && touched(b)) 1 else 0) >
+        effectiveThreshold(b)
     }
-    (files.filterNot(cInput.contains) ++ cEntries).sortBy(_.bucket)
+  }
+
+  /** The one write of every commit, in one job (`BucketWriter`): `rows` —
+    * the table's columns, with `__epoch` unless `stamp` gives it, then
+    * `__bucket` — land under `dirRel`, one file set per bucket. With
+    * `compact`, each bucket the commit pushes over its threshold
+    * (`overfull`) has its compactable files resolved into one file set
+    * under `dirRel` + "c", with per-row `__epoch` preserved: by the task
+    * that writes its new rows, which merges them in as the newest leaf
+    * (so the commit writes no delta file for it) when that task holds all
+    * of them (`oneTaskPerBucket`) and no retention horizon keeps them out;
+    * by a task of its own over the old files otherwise. The manifest
+    * entries come from the files the tasks report: exact row counts and
+    * first-key bounds. Returns the complete new live file set.
+    */
+  private def writeCommit(spark: SparkSession, rows: Option[DataFrame], stamp: Option[Long],
+                          schema: StructType, files: Seq[FileEntry], touched: Set[Int],
+                          oneTaskPerBucket: Boolean, epoch: Long, compact: Boolean,
+                          dirRel: String): Seq[FileEntry] = {
+    val over = if (compact) overfull(files, touched, epoch) else Set.empty[Int]
+    val merged = if (changeRetention == 0 && oneTaskPerBucket) over & touched else Set.empty[Int]
+    val old = compactable(files, epoch)
+    def leaves(bs: Set[Int]) = bs.map(b => b -> leafFiles(old(b))).toMap
+    val written = BucketWriter.write(spark, rows, stamp, BucketWritePlan(root,
+      withEpochCol(schema), keyColumns, dirRel, dirRel + "c", leaves(merged), leaves(over -- merged)))
+    val added = written.groupBy(w => (w.dir, w.bucket)).toSeq.sortBy(_._1).map {
+      case ((dir, b), ws) =>
+        FileEntry(s"$dir/__bucket=$b", b, ws.map(_.rows).sum, epoch,
+          ws.flatMap(_.first).minOption(LakeTable.utf8Order),
+          ws.flatMap(_.last).maxOption(LakeTable.utf8Order),
+          ws.sortBy(_.name).map(w => LeafFile(w.name, w.bytes)))
+    }
+    (files.filterNot(f => over(f.bucket) && f.epochAdded <= epoch - changeRetention) ++ added)
+      .sortBy(_.bucket)
   }
 
   /** Standalone maintenance compaction, committed as its OWN epoch — run it
@@ -434,10 +397,11 @@ final class LakeTable(
     publish(epoch, "compact") { parent =>
       val p = parent.getOrElse(
         throw new IllegalStateException("compact requires an existing table"))
-      val files = compactOverfull(spark, p.files, schemaOf(p), epoch, p.numBuckets)
-      if (files eq p.files) None
-      else Some(Staged(files, p.schemaId, p.schemaJson, p.numBuckets, p.metadata,
-        Map("compaction" -> 1L)))
+      if (overfull(p.files, Set.empty, epoch).isEmpty) None
+      else Some(Staged(
+        writeCommit(spark, None, None, schemaOf(p), p.files, Set.empty, oneTaskPerBucket = true,
+          epoch, compact = true, f"data/e$epoch%012d"),
+        p.schemaId, p.schemaJson, p.numBuckets, p.metadata, Map("compaction" -> 1L)))
     }
 
   private def schemaOf(m: Manifest): StructType =
@@ -556,19 +520,18 @@ final class LakeTable(
     * O(upserts) even when hot buckets are touched every epoch, at the cost
     * of a read-side resolution that stays bounded: any bucket exceeding
     * `compactThreshold` live files is compacted back to a single file set
-    * inside the committing job. New nullable upsert columns evolve the
-    * schema (`evolveSchema`); exactly-once and crash atomicity come from
-    * `publish`.
+    * inside the committing job (`writeCommit`). New nullable upsert columns
+    * evolve the schema (`evolveSchema`); exactly-once and crash atomicity
+    * come from `publish`.
     *
     * Against the parent manifest `publish` read, each row is stamped with
-    * its `__bucket` under the parent's bucket count and its `__epoch` (the
-    * row-level commit stamp: it survives compaction, so resolution and
-    * `changesSince` stay exact). `aligned` input under the parent's bucket
-    * count is written as it stands, with its stats. Any other input pays
-    * one query for the exact per-bucket stats of the rows to write — their
-    * keys are the touched buckets, their largest count sets the salt, and
-    * they become the manifest's counts — and is repartitioned by (bucket,
-    * salt).
+    * its `__bucket` under the parent's bucket count and, by the write task,
+    * its `__epoch` (the row-level commit stamp: it survives compaction, so
+    * resolution and `changesSince` stay exact). `aligned` input under the
+    * parent's bucket count is written as it stands. Any other input pays
+    * one query for its per-bucket row counts — their keys are the touched
+    * buckets and their largest count sets the salt — and is repartitioned
+    * by (bucket, salt).
     *
     * REQUIRES one row per key per commit (the classify fold emits exactly
     * that): two versions of a key in ONE batch share an `__epoch` stamp,
@@ -586,12 +549,13 @@ final class LakeTable(
                  /** `upserts` is already partitioned one bucket per
                    * partition (the engine's fold shuffle keys on the bucket
                    * hash, and every projection after it is narrow), with
-                   * these exact stats. Used only when its bucket count is
-                   * the table's live one: the commit then writes with no
-                   * shuffle and no stats query. Correctness does not depend
-                   * on the partitioning (the manifest lists whatever files
-                   * land under each bucket dir); a wrong one only
-                   * multiplies files.
+                   * rows in exactly these buckets. Used only when its
+                   * bucket count is the table's live one: the commit then
+                   * writes with no shuffle and no count query. Correctness
+                   * does not depend on the partitioning (the manifest lists
+                   * every file the tasks write, and resolution keeps each
+                   * key's newest version); a wrong one only multiplies
+                   * files.
                    */
                  aligned: Option[BucketAligned] = None,
                  /** Manifest kind of this commit. Non-"write" callers (e.g.
@@ -603,29 +567,20 @@ final class LakeTable(
     publish(epoch, kind) { parent =>
       val nb = parent.fold(numBuckets)(_.numBuckets)
       val (schema, schemaId) = evolveSchema(parent, upserts.schema)
-      val rows = conformTo(schema)(upserts)
-        .withColumn("__bucket", bucketCol(nb))
-        .withColumn("__epoch", lit(epoch))
-      val dirRel = f"data/e$epoch%012d"
-      // a bucket with zero rows gets no stats, no dir and no entry
-      val stats = aligned.filter(_.numBuckets == nb) match {
-        case Some(a) =>
-          if (a.stats.nonEmpty) writeBuckets(rows, dirRel)
-          a.stats
+      val rows = conformTo(schema)(upserts).withColumn("__bucket", bucketCol(nb))
+      // a bucket with zero rows gets no file and no entry
+      val (input, touched, oneTaskPerBucket) = aligned.filter(_.numBuckets == nb) match {
+        case Some(a) => (rows, a.buckets, true)
         case None =>
-          val s = bucketStatsOf(rows)
-          if (s.nonEmpty) {
-            val salt = effectiveSalt(s)
-            writeBuckets(rows.repartition(math.min(nb, s.size) * salt,
-              col("__bucket"), saltColFor(salt)), dirRel)
-          }
-          s
+          val counts = bucketCounts(rows)
+          val salt = effectiveSalt(counts)
+          (rows.repartition(math.max(1, math.min(nb, counts.size)) * salt,
+            col("__bucket"), saltColFor(salt)), counts.keySet, salt == 1)
       }
-      val files = (parent.fold(Seq.empty[FileEntry])(_.files) ++
-        entriesFor(dirRel, epoch, stats)).sortBy(_.bucket)
       Some(Staged(
-        if (compactInline) compactOverfull(upserts.sparkSession, files, schema, epoch, nb)
-        else files,
+        writeCommit(upserts.sparkSession, Some(input).filter(_ => touched.nonEmpty), Some(epoch),
+          schema, parent.fold(Seq.empty[FileEntry])(_.files), touched, oneTaskPerBucket, epoch,
+          compactInline, f"data/e$epoch%012d"),
         schemaId, schema.json, nb, metadata, lineage))
     }
 
@@ -777,11 +732,11 @@ final class LakeTable(
       // and later resolution read it
       val rewritten = bucketLocal(spark, byBucket(p.files), withEpochCol(schemaOf(p)))
         .withColumn("__bucket", bucketCol(newNumBuckets))
-      val dirRel = f"data/e$epoch%012dr"
-      writeBuckets(rewritten.repartition(newNumBuckets, col("__bucket"),
-        saltColFor(saltFactor)), dirRel)
-      Some(Staged(entriesFor(dirRel, epoch, bucketStatsOf(rewritten)), p.schemaId,
-        p.schemaJson, newNumBuckets,
+        .repartition(newNumBuckets, col("__bucket"), saltColFor(saltFactor))
+      Some(Staged(
+        writeCommit(spark, Some(rewritten), None, schemaOf(p), Seq.empty, Set.empty,
+          oneTaskPerBucket = false, epoch, compact = false, f"data/e$epoch%012dr"),
+        p.schemaId, p.schemaJson, newNumBuckets,
         p.metadata + ("rebucketed-from" -> p.numBuckets.toString), Map.empty))
     }
 
@@ -792,10 +747,9 @@ final class LakeTable(
     * crashed commits are swept first, but ONLY when old enough that no live
     * committer can still own them — two live committers of DIFFERENT epochs
     * (e.g. a maintenance compaction racing an apply) must not delete each
-    * other's in-flight tmp. Concurrent committers of the SAME epoch still
-    * must not run concurrently (they share the epoch's data directory with
-    * SaveMode.Overwrite — the hard-link guard protects the manifest, not
-    * the files it points to).
+    * other's in-flight tmp. Concurrent committers of the SAME epoch write
+    * apart (every write job names its files uniquely), and the link keeps
+    * the first manifest.
     */
   private[lake] def writeManifestAtomically(m: Manifest): Unit = {
     Files.createDirectories(manifestDir)
@@ -848,11 +802,13 @@ object LakeTable {
     */
   val tmpSweepAgeMs: Long = 15L * 60 * 1000
 
-  /** Parquet codec for every lake write: zstd trades CPU (which scales with
-    * cores/executors) for bytes on the shared write path (disk here, object
-    * store on a cluster) — the right side of the trade for an ingest-bound
-    * table format, and it measurably improves thread-scaling on a
-    * single-disk box (BENCH/BASELINE.md §2).
+  /** UTF8String byte order over strings: the order Spark sorts StringType
+    * keys by, so the order the per-file key bounds are written and pruned
+    * with. Scala's String order (UTF-16 code units) disagrees for
+    * supplementary characters, and bounds taken under it could under-cover
+    * a file's range, so pruning would silently drop live rows.
     */
-  val compression: String = "zstd"
+  val utf8Order: Ordering[String] = (a: String, b: String) =>
+    org.apache.spark.unsafe.types.UTF8String.fromString(a)
+      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
 }

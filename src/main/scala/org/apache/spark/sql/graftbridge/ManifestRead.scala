@@ -97,58 +97,49 @@ private final class BucketLocalFormat(
       filters.filter(_.references.forall(keys)),
       options + (FileFormat.OPTION_RETURNING_BATCH -> "false"), hadoopConf)
     val units = this.units
-    val keyIdx = keyColumns.map(readSchema.fieldIndex)
-    val epochIdx = readSchema.fieldIndex(epochColumn)
     val outIdx = requiredSchema.fieldNames.toSeq.map(readSchema.fieldIndex)
 
     unit => {
-      def bound(idx: Seq[Int]): Seq[BoundReference] =
-        idx.map(i => BoundReference(i, readSchema(i).dataType, nullable = true))
-      val out = UnsafeProjection.create(bound(outIdx))
+      val out = UnsafeProjection.create(
+        outIdx.map(i => BoundReference(i, readSchema(i).dataType, nullable = true)))
       val files = units(unit.filePath.urlEncoded)
       def open(file: (String, Long)): Iterator[InternalRow] =
         leafRead(PartitionedFile(InternalRow.empty, SparkPath.fromPath(new HPath(file._1)),
           0L, file._2, Array.empty[String], 0L, file._2))
-      if (files.size > 1) {
-        val toRow = UnsafeProjection.create(bound(readSchema.indices))
-        val keyOf = UnsafeProjection.create(bound(keyIdx))
-        val order = new InterpretedOrdering(keyIdx.indices.map(i =>
-          SortOrder(BoundReference(i, readSchema(keyIdx(i)).dataType, nullable = true),
-            Ascending)))
-        new LastWriterWins(files.map(open), toRow, keyOf, order, epochIdx).map(out)
-      } else open(files.head).map(out)
+      if (files.size > 1)
+        LastWriterWins(files.map(open), readSchema, keyColumns, epochColumn).map(out)
+      else open(files.head).map(out)
     }
   }
 }
 
 /** Streaming last-writer-wins over key-sorted leaf iterators: a k-way merge
   * that emits, per key, the row with the highest epoch at `epochIdx` (a
-  * null epoch loses; an exact tie keeps the earlier leaf). A leaf out of key
-  * order fails the task — resolving it would silently emit two versions.
+  * null epoch loses; an exact tie keeps the earlier leaf). Keys compare in
+  * place on the full rows, through `keyOrder` bound to the key ordinals. A
+  * leaf out of key order fails the task — resolving it would silently emit
+  * two versions.
   */
-private final class LastWriterWins(leaves: Seq[Iterator[InternalRow]],
-                                   toRow: UnsafeProjection, keyOf: UnsafeProjection,
-                                   order: Ordering[InternalRow], epochIdx: Int)
+private[graftbridge] final class LastWriterWins(leaves: Seq[Iterator[InternalRow]],
+                                                toRow: UnsafeProjection,
+                                                keyOrder: Ordering[InternalRow], epochIdx: Int)
     extends Iterator[InternalRow] {
 
   private final class Cursor(it: Iterator[InternalRow], val leaf: Int) {
     var row: UnsafeRow = _
-    var key: UnsafeRow = _
     def advance(): Boolean = it.hasNext && {
       val r = toRow(it.next()).copy()
-      val k = keyOf(r).copy()
-      if (key != null && order.compare(k, key) < 0)
+      if (row != null && keyOrder.compare(r, row) < 0)
         throw new IllegalStateException(
           s"leaf $leaf of a bucket is not sorted by key; bucket-local resolution needs " +
             "the key order every lake writer produces")
       row = r
-      key = k
       true
     }
   }
 
   private val heap = new java.util.PriorityQueue[Cursor]((a: Cursor, b: Cursor) => {
-    val c = order.compare(a.key, b.key)
+    val c = keyOrder.compare(a.row, b.row)
     if (c != 0) c else Integer.compare(a.leaf, b.leaf)
   })
   leaves.zipWithIndex.foreach { case (it, i) =>
@@ -163,15 +154,26 @@ private final class LastWriterWins(leaves: Seq[Iterator[InternalRow]],
 
   override def next(): InternalRow = {
     val first = heap.poll()
-    val key = first.key
     var best = first.row
     if (first.advance()) heap.add(first)
-    while (!heap.isEmpty && order.compare(heap.peek().key, key) == 0) {
+    while (!heap.isEmpty && keyOrder.compare(heap.peek().row, best) == 0) {
       val c = heap.poll()
       if (newer(c.row, best)) best = c.row
       if (c.advance()) heap.add(c)
     }
     best
+  }
+}
+
+private[graftbridge] object LastWriterWins {
+  /** Resolve `leaves`, rows of `schema`, by `keyColumns`, newest
+    * `epochColumn` winning. */
+  def apply(leaves: Seq[Iterator[InternalRow]], schema: StructType, keyColumns: Seq[String],
+            epochColumn: String): LastWriterWins = {
+    def ref(i: Int) = BoundReference(i, schema(i).dataType, nullable = true)
+    new LastWriterWins(leaves, UnsafeProjection.create(schema.indices.map(ref)),
+      new InterpretedOrdering(keyColumns.map(k => SortOrder(ref(schema.fieldIndex(k)), Ascending))),
+      schema.fieldIndex(epochColumn))
   }
 }
 

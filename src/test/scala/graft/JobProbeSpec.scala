@@ -29,12 +29,31 @@ class JobProbeSpec extends SparkSpec {
     }
     assert(probe.shuffleBytes(narrow) == 0L)
     assert(probe.shuffleBytes(shuffled) > 0L)
+    Seq(narrow, shuffled).foreach { d =>
+      assert(probe.deserializeCpuSec(d) > 0.0, s"$d has no task-deserialization CPU")
+      assert(probe.outputBytes(d) == 0L, s"$d writes to the noop sink")
+    }
     val ds = probe.descriptions.toSeq
     assert(probe.totalJobs == ds.map(probe.jobs).sum)
     assert(probe.totalShuffleBytes == ds.map(probe.shuffleBytes).sum)
     assert(math.abs(probe.totalJobWallSec - ds.map(probe.jobWallSec).sum) < 1e-9)
     assert(math.abs(probe.totalTaskCpuSec - ds.map(probe.taskCpuSec).sum) < 1e-9)
     assert(probe.jobs("never ran") == 0 && probe.shuffleBytes("never ran") == 0L)
+    assert(probe.deserializeCpuSec("never ran") == 0.0 && probe.outputBytes("never ran") == 0L)
+  }
+
+  test("output bytes are the bytes a file write reports") {
+    val dir = tmpDir("jobprobe-out") + "/t"
+    val sc = spark.sparkContext
+    val probe = JobProbe(spark) {
+      sc.setJobDescription("probe: parquet write")
+      try spark.range(0, 100000, 1, 2).write.parquet(dir)
+      finally sc.setJobDescription(null)
+    }
+    val onDisk = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+      .map(_.length).sum
+    assert(onDisk > 0L)
+    assert(probe.outputBytes("probe: parquet write") == onDisk)
   }
 
   test("the same epoch applied to two fresh warehouses reads equal jobs and shuffle bytes") {

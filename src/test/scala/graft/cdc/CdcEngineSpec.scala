@@ -185,6 +185,49 @@ class CdcEngineSpec extends SparkSpec {
     assert(rows == Seq(("hot", 9L)))
   }
 
+  test("a compacting epoch written but never linked heals on a fresh engine, orphans unread") {
+    val dim = Some(Enrichment.generateDim(spark, numAsids = 997, yearMonths = Seq(201911, 201912)))
+    def engine(dir: String) = new CdcEngine(dir, numBuckets = 4, cutoffMicros = 14 * day,
+      compactThreshold = 2, dim = dim)
+    def batches(epochs: Seq[Long]) = epochs.map(e => e -> log.filter(_.epoch == e))
+    def tables(eng: CdcEngine) = Seq(eng.state, eng.transfers) ++ eng.enriched
+    def rowShas(t: LakeTable): Map[String, String] = {
+      val snap = t.snapshot(spark)
+      snap.select(concat_ws("|", t.keyColumns.map(col): _*),
+          sha2(to_json(struct(snap.columns.sorted.map(col): _*)), 256))
+        .as[(String, String)].collect().toMap
+    }
+    val all = Seq(0L, 1L, 2L, 3L)
+    val clean = engine(tmpDir("unlinked-clean"))
+    clean.applyEpochs(spark, batches(all))
+    val compacting = all.find(e => tables(clean).exists(_.manifestAt(e).get.files
+      .exists(f => f.epochAdded == e && f.path.contains("c/__bucket="))))
+    assert(compacting.isDefined, "the schedule must compact inline")
+    val k = compacting.get
+
+    // the crash: epoch k's write jobs ran, then no manifest was linked
+    val dir = tmpDir("unlinked")
+    engine(dir).applyEpochs(spark, batches(all.filter(_ <= k)))
+    val orphans = tables(engine(dir)).flatMap { t =>
+      java.nio.file.Files.delete(java.nio.file.Paths.get(t.root, "manifests", f"m$k%012d.json"))
+      val data = new java.io.File(t.root, "data")
+      data.listFiles().filter(_.getName.startsWith(f"e$k%012d")).toSeq.flatMap(d =>
+        d.listFiles().toSeq.flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet"))
+          .map(_.getCanonicalPath))
+    }.toSet
+    assert(orphans.nonEmpty, "the crashed epoch must leave its files behind")
+
+    val healed = engine(dir)
+    healed.applyEpochs(spark, batches(all))
+    tables(clean).zip(tables(healed)).foreach { case (a, b) =>
+      assert(rowShas(b) == rowShas(a), s"${b.root} differs from the uninterrupted run")
+      val listed = all.flatMap(b.manifestAt).flatMap(_.files).flatMap(f =>
+        f.leaves.map(l => new java.io.File(s"${b.root}/${f.path}/${l.name}").getCanonicalPath))
+      assert(listed.forall(p => new java.io.File(p).isFile), s"${b.root} lists a missing file")
+      assert(!listed.exists(orphans), s"${b.root} lists a file of the crashed attempt")
+    }
+  }
+
   test("crash between the state commit and the transfers commit recovers exactly-once") {
     // simulate: epoch 1 commits the state table, then the process dies
     // before the transfers commit. Recovery = re-running applyEpoch(1):
